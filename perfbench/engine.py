@@ -6,7 +6,6 @@ reports what it measured. Messages to the harness are stdout lines that
 start with "@@" followed by JSON; commands arrive on stdin, one per line:
 
     trace on|off   switch span recording (traced runs only)
-    go <seconds>   operator_batch: run timed passes for that long
     stop           finish and report
 
 Usage (normally via run.py):
@@ -18,7 +17,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import random
 import sys
 import threading
 import time
@@ -30,14 +28,10 @@ from explora_kafka_spark.plans import views as V
 from explora_kafka_spark.session import get_spark
 from explora_kafka_spark.streaming import pipeline as P
 
-from perfbench.gen import REGISTRY_ENTRIES
 from perfbench.spans import Tracer, patch
 
 #: view resolutions the requests use (month is never queried)
 RESOLUTIONS = ("min", "hour", "day")
-#: snapshot_load builds and serves the views this many times; setup_s is
-#: the median
-SETUPS = 3
 #: the engine's fixed "now": end of the generated window
 NOW_MS = 1567209600000 + 36 * 3600 * 1000
 
@@ -115,7 +109,6 @@ class Engine:
             (Q, "snapshot_bbox_geohashing", span("query.plan")),
             (Q, "snapshot_bbox_quadtiling", span("query.plan")),
             (frame, "collect", span("spark.collect")),
-            (frame, "localCheckpoint", span("spark.checkpoint")),
             (P.ParquetViewStore, "merge_readings", span("pipeline.merge")),
             (V, "build_views", span("views.build")),
         ]:
@@ -137,15 +130,13 @@ class Engine:
 
     # -- commands ------------------------------------------------------------
 
-    def command_loop(self, on_go=None) -> None:
+    def command_loop(self) -> None:
         for line in sys.stdin:
             cmd = line.split()
             if not cmd:
                 continue
             if cmd[0] == "trace" and self.tracer is not None:
                 self.tracer.enabled = cmd[1] == "on"
-            elif cmd[0] == "go" and on_go is not None:
-                on_go(float(cmd[1]))
             elif cmd[0] == "stop":
                 return
 
@@ -166,18 +157,12 @@ class Engine:
 
     def snapshot_load(self) -> None:
         readings = self.spark.read.parquet(os.path.join(self.work, "readings.parquet"))
-        setup_s, srv = [], None
-        for i in range(SETUPS):
-            path = os.path.join(self.work, f"views{i}")
-            t0 = time.perf_counter()
-            V.build_views(readings, path, resolutions=RESOLUTIONS)
-            ctx = server.EngineContext(self.spark.read.parquet(path), now_ms=NOW_MS)
-            new = server.serve(ctx)
-            setup_s.append(time.perf_counter() - t0)
-            if srv is not None:
-                srv.shutdown()
-                srv.server_close()
-            srv = new
+        path = os.path.join(self.work, "views")
+        t0 = time.perf_counter()
+        V.build_views(readings, path, resolutions=RESOLUTIONS)
+        ctx = server.EngineContext(self.spark.read.parquet(path), now_ms=NOW_MS)
+        srv = server.serve(ctx)
+        setup_s = time.perf_counter() - t0
         emit(event="ready", port=srv.server_address[1], setup_s=setup_s, views=path,
              profile=self.profile())
         self.command_loop()
@@ -208,7 +193,7 @@ class Engine:
             time.sleep(0.01)
         ctx = server.EngineContext(store.read(spark), now_ms=NOW_MS)
         srv = server.serve(ctx)
-        setup_s = [time.perf_counter() - t0]
+        setup_s = time.perf_counter() - t0
         # merges the replay guard turns into no-ops return False
         skipped = [0]
         merge = store.merge_readings
@@ -250,126 +235,11 @@ class Engine:
         self.finish(progress=progress, skipped_batches=skipped[0],
                     current=store.current_version())
 
-    def operator_batch(self) -> None:
-        import __spark_entry__ as E
-
-        from_dir = os.path.join(self.work, "tables")
-        registry = E.queries()
-        order = list(REGISTRY_ENTRIES)
-        random.Random(self.args.seed).shuffle(order)
-        expected = _oracle_rows(E.oracle_sql(), from_dir, order)
-        results: list[dict] = []
-
-        def run_pass(tag: str) -> float:
-            t_pass = time.perf_counter()
-            tr = self.tracer
-            for name in order:
-                traced = tr is not None and tr.enabled
-                if traced:
-                    group = f"{tag}:{name}"
-                    self.spark.sparkContext.setJobGroup(group, "perfbench entry")
-                    sp = tr.open("registry.entry", group)
-                    cpu0 = time.thread_time()
-                t0 = time.perf_counter()
-                try:
-                    df = _traced(tr, "registry.construct", registry[name], self.spark, from_dir)
-                    t1 = time.perf_counter()
-                    rows = _traced(tr, "registry.action", df.collect)
-                    t2 = time.perf_counter()
-                    err = compare_rows(df.columns, rows, expected[name])
-                except Exception as exc:  # a failing entry is counted, not fatal
-                    t1 = t2 = time.perf_counter()
-                    err = f"{type(exc).__name__}: {exc}"[:300]
-                finally:
-                    if traced:
-                        tr.close(sp)
-                        self._job_counts(group, group, time.thread_time() - cpu0)
-                results.append({"pass": tag, "name": name, "construct_s": t1 - t0,
-                                "action_s": t2 - t1, "error": err})
-            return time.perf_counter() - t_pass
-
-        warm = run_pass("warm")
-        emit(event="ready", setup_s=[warm], entries=order, profile=self.profile())
-
-        n_pass = [0]
-
-        def timed(seconds: float) -> None:
-            """At least one pass; another only while one more fits."""
-            deadline = time.perf_counter() + seconds
-            passes = []
-            while not passes or time.perf_counter() + passes[-1] <= deadline:
-                passes.append(run_pass(f"p{n_pass[0]}"))
-                n_pass[0] += 1
-            emit(event="passes", batch_s=passes)
-
-        self.command_loop(on_go=timed)
-        self.finish(entries=results)
-
-
-def _traced(tr, name, fn, *a):
-    if tr is None or not tr.enabled:
-        return fn(*a)
-    return tr.wrap(fn, name)(*a)
-
-
-def _oracle_rows(oracle: dict[str, str], table_dir: str, names) -> dict:
-    """DuckDB answers of the registry oracles over the generated tables."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("events", "documents", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{os.path.join(table_dir, t + '.parquet')}')")
-    out = {}
-    for n in names:
-        cur = con.execute(oracle[n])
-        out[n] = ([d[0] for d in cur.description], cur.fetchall())
-    return out
-
-
-def _canon(v):
-    if isinstance(v, float):
-        return ("f", round(v, 4))
-    if isinstance(v, (list, tuple)):
-        return ("l", tuple(_canon(x) for x in v))
-    if hasattr(v, "isoformat"):
-        return ("t", v.replace(tzinfo=None).isoformat() if hasattr(v, "tzinfo") else v.isoformat())
-    if hasattr(v, "asDict"):
-        return _canon(tuple(v))
-    return ("v", v)
-
-
-def _close(a, b) -> bool:
-    if a[0] == "f" and b[0] == "f":
-        return abs(a[1] - b[1]) <= 1e-3 * max(1.0, abs(b[1]))
-    if a[0] == "l" and b[0] == "l":
-        return len(a[1]) == len(b[1]) and all(_close(x, y) for x, y in zip(a[1], b[1]))
-    if {a[0], b[0]} <= {"f", "v"} and isinstance(a[1], (int, float)) and isinstance(b[1], (int, float)):
-        return abs(a[1] - b[1]) <= 1e-3 * max(1.0, abs(b[1]))
-    return a == b
-
-
-def compare_rows(columns, rows, expected) -> str | None:
-    """None when Spark's rows equal the oracle's, ignoring row order and
-    float noise below 1e-3 relative; else the reason."""
-    exp_cols, exp_rows = expected
-    if list(columns) != list(exp_cols):
-        return f"columns {list(columns)} != {list(exp_cols)}"
-    if len(rows) != len(exp_rows):
-        return f"{len(rows)} rows, oracle {len(exp_rows)}"
-    key = lambda r: repr(r)  # noqa: E731
-    got = sorted((tuple(_canon(v) for v in r) for r in rows), key=key)
-    exp = sorted((tuple(_canon(v) for v in r) for r in exp_rows), key=key)
-    for g, e in zip(got, exp):
-        if len(g) != len(e) or not all(_close(x, y) for x, y in zip(g, e)):
-            return f"row {g!r:.120} != {e!r:.120}"
-    return None
-
 
 def main(argv=None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True,
-                    choices=("snapshot_load", "ingest_live", "operator_batch"))
+                    choices=("snapshot_load", "ingest_live"))
     ap.add_argument("--work", required=True)
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--trace", action="store_true")

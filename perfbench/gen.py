@@ -175,79 +175,3 @@ def write_parquet(r: Readings, path: str) -> int:
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     pq.write_table(r.table(), path)
     return os.path.getsize(path)
-
-
-# ---------------------------------------------------------------------------
-# registry tables: the `events`, `documents` and `embeddings` tables the
-# operator registry reads, in the schema of the engine's test tables
-# ---------------------------------------------------------------------------
-
-#: the registry entries operator_batch runs, each from a different module
-#: that places localCheckpoint calls: the cheapest such entries, so that a
-#: warm pass and the timed passes fit one run
-REGISTRY_ENTRIES = (
-    "item_lift",        # operators/cooccurrence
-    "tfidf_top_terms",  # operators/text
-    "dsir_select",      # operators/dsir
-)
-
-_WORDS = (
-    "join hash row batch scan column customer filter small slow merge order "
-    "vector line table data agg value key stream window a spark part group "
-    "big sort query fast the"
-).split()
-_EVENT_TYPES = ("signup", "error", "click", "view", "purchase")
-_LANGS = ("en", "zh", "es", "de", "fr")
-_LANG_P = (0.44, 0.14, 0.14, 0.14, 0.14)
-_EVENTS_START_US = 1704067200 * 1_000_000  # 2024-01-01T00:00Z
-_EVENTS_SPAN_US = 30 * 86400 * 1_000_000
-
-
-def registry_tables(seed: int, out_dir: str, n_events: int = 10_000,
-                    n_docs: int = 500, n_vecs: int = 500, dim: int = 64,
-                    n_sources: int = 20, n_labels: int = 10) -> int:
-    """Write events/documents/embeddings parquet files; returns total bytes.
-
-    Documents draw 10-99 words from a small vocabulary, and about 5% of
-    them repeat an earlier document with " dup" appended, so the dedup
-    operators find groups. Embeddings are unit vectors scattered around
-    `n_labels` centroids."""
-    rng = np.random.default_rng(seed)
-    os.makedirs(out_dir, exist_ok=True)
-    ev = pa.table({
-        "event_id": pa.array(np.arange(n_events), pa.int64()),
-        "ts": pa.array(np.sort(_EVENTS_START_US + rng.integers(0, _EVENTS_SPAN_US, n_events)),
-                       pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, 150, n_events), pa.int64()),
-        "event_type": pa.array(rng.choice(_EVENT_TYPES, n_events), pa.string()),
-        "value": pa.array(np.round(rng.exponential(50.0, n_events) + 0.01, 2), pa.float64()),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)], pa.string()),
-    })
-    texts: list[str] = []
-    for i in range(n_docs):
-        if i > 10 and rng.random() < 0.05:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            texts.append(" ".join(rng.choice(_WORDS, int(rng.integers(10, 100)))))
-    docs = pa.table({
-        "doc_id": pa.array(np.arange(n_docs), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array(rng.choice(_LANGS, n_docs, p=_LANG_P), pa.string()),
-        "source": pa.array([f"src{i % n_sources}" for i in range(n_docs)], pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-    centroids = rng.normal(size=(n_labels, dim))
-    labels = rng.integers(0, n_labels, n_vecs)
-    vecs = centroids[labels] + rng.normal(scale=0.6, size=(n_vecs, dim))
-    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-    emb = pa.table({
-        "vec_id": pa.array(np.arange(n_vecs), pa.int64()),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-    total = 0
-    for name, t in (("events", ev), ("documents", docs), ("embeddings", emb)):
-        path = os.path.join(out_dir, f"{name}.parquet")
-        pq.write_table(t, path)
-        total += os.path.getsize(path)
-    return total

@@ -3,12 +3,8 @@
 Inputs: the spans and counters the engine recorded (engine_stats.json),
 the Spark event log of the run, the harness's own client-side timings,
 and the files the run left in its work directory. Every workload reports
-the METRICS names (operator_batch adds the registry ones); a layer the
-workload does not exercise reads 0.
-
-Request layers are medians over the traced requests (or, on
-operator_batch, over the traced registry entries for the spark.* and
-driver.* metrics); registry.* are totals of the traced pass.
+the METRICS names; a layer the workload does not exercise reads 0.
+Request layers are medians over the traced requests.
 """
 
 from __future__ import annotations
@@ -20,7 +16,6 @@ import os
 
 import pyarrow.parquet as pq
 
-from perfbench.gen import REGISTRY_ENTRIES
 from perfbench.spans import Span, median, quantile, self_times
 
 #: every per-layer metric, in the order printed, with its unit
@@ -62,22 +57,6 @@ METRICS: dict[str, str] = {
     "memory.peak_rss_mb": "MB",
     "trace.overhead_ratio": "ratio",
 }
-#: operator_batch adds the registry totals and, per entry,
-#: registry.<entry>.<metric>
-REGISTRY_METRICS = {"registry.construct_s": "s", "registry.action_s": "s",
-                    "registry.checkpoints": "count"}
-ENTRY_METRICS = {"construct_s": "s", "action_s": "s", "checkpoints": "count"}
-
-
-def registry_metric_names() -> dict[str, str]:
-    """The per-layer metrics of operator_batch: METRICS plus the registry's."""
-    out = {**METRICS, **REGISTRY_METRICS}
-    for e in REGISTRY_ENTRIES:
-        for m, u in ENTRY_METRICS.items():
-            out[f"registry.{e}.{m}"] = u
-    return out
-
-
 def _med(values) -> float:
     values = list(values)
     return median(values) if values else 0.0
@@ -287,34 +266,3 @@ def request_metrics(stats: dict, work: str, plain, traced, rss_mb: float,
     vals["trace.overhead_ratio"] = _med(client_ms.values()) / (1000 * _med(plain_ok))
     vals["memory.peak_rss_mb"] = rss_mb
     return {k: (vals.get(k, 0.0), u) for k, u in METRICS.items()}
-
-
-# ---------------------------------------------------------------------------
-# operator_batch
-# ---------------------------------------------------------------------------
-
-
-def registry_metrics(stats: dict, work: str, plain: list[float], traced: list[float],
-                     rss_mb: float) -> dict[str, tuple[float, str]]:
-    spans = _spans(stats)
-    timed = [e for e in stats["entries"] if e["pass"] not in ("warm",)]
-    tag = timed[-1]["pass"]  # the traced pass is the last one
-    mine = [e for e in timed if e["pass"] == tag]
-    groups = [f"{tag}:{e['name']}" for e in mine]
-    vals: dict[str, float] = {k: 0.0 for k in METRICS}
-    vals.update(_spark_per_op(stats, groups, event_log(work)))
-    checkpoints = {g: 0 for g in groups}
-    for s in spans:
-        if s.name == "spark.checkpoint" and s.rid in checkpoints:
-            checkpoints[s.rid] += 1
-    vals["spark.exec_ms"] = _med(1000 * e["action_s"] for e in mine)
-    vals["registry.construct_s"] = sum(e["construct_s"] for e in mine)
-    vals["registry.action_s"] = sum(e["action_s"] for e in mine)
-    vals["registry.checkpoints"] = sum(checkpoints.values())
-    vals["trace.overhead_ratio"] = sum(traced) / sum(plain)
-    vals["memory.peak_rss_mb"] = rss_mb
-    for e in mine:
-        vals[f"registry.{e['name']}.construct_s"] = e["construct_s"]
-        vals[f"registry.{e['name']}.action_s"] = e["action_s"]
-        vals[f"registry.{e['name']}.checkpoints"] = checkpoints[f"{tag}:{e['name']}"]
-    return {k: (vals.get(k, 0.0), u) for k, u in registry_metric_names().items()}

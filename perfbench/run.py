@@ -39,28 +39,33 @@ from perfbench import gen  # noqa: E402
 from perfbench import layers  # noqa: E402
 from perfbench.spans import median, quantile, tail_percentile  # noqa: E402
 
-WORKLOADS = ("snapshot_load", "ingest_live", "operator_batch")
-#: load-generator connections: at most the core count, and 4 at most
-CLIENTS = max(1, min(4, os.cpu_count() or 1))
+WORKLOADS = ("snapshot_load", "ingest_live")
+#: closed-loop clients of either workload. Plan building holds the
+#: engine's GIL, so on 4 cores 4 clients complete no more requests per
+#: second than 2 do; they only double the latency, by queueing on the GIL.
+CLIENTS = 2
+#: Spark's local cores: at most the core count, and 4 at most
+SPARK_CORES = max(1, min(4, os.cpu_count() or 1))
 #: sensors in the generated window (2 metrics x 36 h at 5-minute cadence)
 N_SENSORS = 120
 REQUEST_TIMEOUT_S = 30.0
 #: a run that has not finished by then is killed and exits non-zero
 DEADLINE_S = 170.0
 #: ingest_live: appended files per second (open loop) and rows' sensors
-APPEND_RATE = 10.0
+APPEND_RATE = 20.0
 PROBE_SENSORS = 24
 #: appended readings start the day after the window, so no bucket a
 #: reader asks about ever changes
 APPEND_START_MS = gen.WINDOW_START_MS + 2 * 86_400_000
 #: share of the run over which files are appended, and the longest the
 #: last file may take to become visible after the run
-APPEND_SHARE = 0.7
-DRAIN_S = 15.0
-#: seconds of warm-up files the stream takes before timing starts
-STREAM_WARM_S = 2.0
-#: ingest_live: closed-loop reader clients beside the stream
-READERS = 2
+APPEND_SHARE = 0.25
+DRAIN_S = 30.0
+#: warm-up files, appended at once, that the stream takes before timing
+#: starts
+WARM_FILES = 10
+#: most warm-up passes before timing starts
+WARM_PASSES = 3
 
 
 class EngineError(RuntimeError):
@@ -91,7 +96,7 @@ class EngineProc:
         env["PYTHONPATH"] = os.pathsep.join(
             p for p in (root, env.get("PYTHONPATH")) if p)
         env.update({
-            "SPARK_GRAFT_CPUS": str(CLIENTS),
+            "SPARK_GRAFT_CPUS": str(SPARK_CORES),
             "SPARK_GRAFT_DRIVER_MEM": "2g",
             "SPARK_LOCAL_DIRS": os.path.join(work, "spark-local"),
             "TMPDIR": tmp,
@@ -160,9 +165,11 @@ class EngineProc:
             stats = json.load(f)
         return stats
 
-    def close(self, grace: float = 30.0) -> None:
-        """Wait for the engine and every process it started (the JVM, once
-        orphaned, is no child of ours) to end; kill what outlives `grace`."""
+    def close(self, grace: float = 0.0) -> None:
+        """Stop the engine and every process it started (the JVM, once
+        orphaned, is no child of ours): kill what outlives `grace`, then
+        wait until each has ended. Its stats are read by then, so nothing
+        it does while shutting down is needed."""
         procs = [*_descendants(self.proc.pid), self.proc.pid]
         deadline = time.monotonic() + grace
         while any(map(_alive, procs)) and time.monotonic() < deadline:
@@ -311,14 +318,15 @@ def closed_loop(client: Client, stream: list[A.Request], n_clients: int,
     return ops
 
 
-def warm_up(client: Client, stream: list[A.Request], n_clients: int,
-            max_passes: int = 3) -> int:
-    """Send the same 2 requests per client, pass after pass, until the
-    pass median moves less than 10% from the pass before; returns the
-    requests discarded."""
+def warm_up(client: Client, stream: list[A.Request], n_clients: int) -> int:
+    """Send the stream's next 2 requests per client, pass after pass, until
+    the pass median moves less than 10% from the pass before, WARM_PASSES
+    at most; returns the requests discarded. Walking the stream warms
+    every request shape before timing starts."""
     sent, prev = 0, None
-    for _ in range(max_passes):
-        ops = closed_loop(client, stream, n_clients, n_ops=2 * n_clients)
+    for i in range(WARM_PASSES):
+        ops = closed_loop(client, stream, n_clients, n_ops=2 * n_clients,
+                          start_at=2 * n_clients * i)
         sent += len(ops)
         med = median([o.latency_s for o in ops])
         log(f"warm-up pass median {1000 * med:.0f} ms")
@@ -326,6 +334,12 @@ def warm_up(client: Client, stream: list[A.Request], n_clients: int,
             break
         prev = med
     return sent
+
+
+def measured_from(n_clients: int) -> int:
+    """Stream position timing starts at: past every request warm-up may
+    send, so every run times the same stretch of its stream."""
+    return 2 * n_clients * WARM_PASSES
 
 
 # ---------------------------------------------------------------------------
@@ -360,12 +374,18 @@ class Run:
         time with recording off, then half with it on; returns the pair
         (untraced ops, traced ops)."""
         s = self.args.seconds
+        cpu0 = _cpu_times()
         if not self.trace:
-            return measure(s), None
-        self.engine.send("trace off")
-        plain = measure(s / 2)
-        self.engine.send("trace on")
-        return plain, measure(s / 2)
+            out = measure(s), None
+        else:
+            self.engine.send("trace off")
+            plain = measure(s / 2)
+            self.engine.send("trace on")
+            out = plain, measure(s / 2)
+        # time the hypervisor gave this machine's CPUs to others: a noisy
+        # host shows here
+        self.attest["cpu_steal_pct"] = _steal_pct(cpu0, _cpu_times())
+        return out
 
     def snapshot_load(self) -> dict:
         self.launch()
@@ -380,7 +400,8 @@ class Run:
             self.engine.send("trace off")
         self.attest["warmup_ops_discarded"] = warm_up(client, stream, CLIENTS)
         plain, traced = self.traced_halves(
-            lambda s: closed_loop(client, stream, CLIENTS, seconds=s, start_at=2 * CLIENTS))
+            lambda s: closed_loop(client, stream, CLIENTS, seconds=s,
+                                  start_at=measured_from(CLIENTS)))
         return self.finish_requests(ready, plain, traced, views=ready["views"])
 
     def ingest_live(self) -> dict:
@@ -390,12 +411,11 @@ class Run:
         mix = A.read_mix(self.args.seed, r.sensors, n_distinct=96)
         A.Answers(r).fill(mix)
         probe_sensors = r.sensors[:PROBE_SENSORS]
-        # files 0..n_warm-1 warm the stream up; the rest are timed. They are
+        # files 0..WARM_FILES-1 warm the stream up; the rest are timed. They are
         # appended over the first APPEND_SHARE of the run, so the last ones
         # can land while the readers still run.
-        n_warm = int(APPEND_RATE * STREAM_WARM_S)
         n_timed = int(APPEND_RATE * APPEND_SHARE * self.args.seconds)
-        minute = [APPEND_START_MS + k * gen.MINUTE_MS for k in range(n_warm + n_timed)]
+        minute = [APPEND_START_MS + k * gen.MINUTE_MS for k in range(WARM_FILES + n_timed)]
         files = [gen.minute_file(self.args.seed + 1 + k, m, probe_sensors)
                  for k, m in enumerate(minute)]
         want = {m: int((f.metric_id == gen.METRICS[0]).sum()) for m, f in zip(minute, files)}
@@ -415,10 +435,10 @@ class Run:
         due: dict[int, float] = {}
         late: list[float] = []
 
-        def append(ks: range, t0: float) -> None:
+        def append(ks: range, t0: float, rate: float = APPEND_RATE) -> None:
             """Open loop: file k is due at t0 + (k - ks[0]) / rate."""
             for k in ks:
-                d = t0 + (k - ks[0]) / APPEND_RATE
+                d = t0 + (k - ks[0]) / rate
                 time.sleep(max(0.0, d - time.perf_counter()))
                 tmp = os.path.join(in_dir, f".part-{k:05d}.tmp")
                 pq.write_table(files[k].table(), tmp)
@@ -460,22 +480,23 @@ class Run:
             self.engine.send("trace off")
         # warm-up: readers until steady while the stream takes warm files
         t_warm = time.perf_counter()
-        warm = [threading.Thread(target=append, args=(range(n_warm), t_warm)),
-                threading.Thread(target=prober, args=(t_warm + 60.0, n_warm - 1))]
+        warm = [threading.Thread(target=append, args=(range(WARM_FILES), t_warm, math.inf)),
+                threading.Thread(target=prober, args=(t_warm + 60.0, WARM_FILES - 1))]
         for t in warm:
             t.start()
-        self.attest["warmup_ops_discarded"] = warm_up(client, mix, READERS) + n_warm
+        self.attest["warmup_ops_discarded"] = warm_up(client, mix, CLIENTS) + WARM_FILES
         for t in warm:
             t.join()
-        if n_warm - 1 not in seen:
+        if WARM_FILES - 1 not in seen:
             raise EngineError("the stream did not take the warm-up files within 60 s")
         log("stream warm")
 
         def measure(seconds: float) -> list[Op]:
-            return closed_loop(client, mix, READERS, seconds=seconds, start_at=2 * READERS)
+            return closed_loop(client, mix, CLIENTS, seconds=seconds,
+                               start_at=measured_from(CLIENTS))
 
         t0, timed_from = time.perf_counter(), time.time()
-        timed = range(n_warm, n_warm + n_timed)
+        timed = range(WARM_FILES, WARM_FILES + n_timed)
         threads = [threading.Thread(target=append, args=(timed, t0)),
                    threading.Thread(target=prober,
                                     args=(t0 + self.args.seconds + DRAIN_S, timed[-1]))]
@@ -484,55 +505,14 @@ class Run:
         plain, traced = self.traced_halves(measure)
         for t in threads:
             t.join()
-        fresh = [seen[k] - due[k] for k in timed if k in seen]
-        lost = [k for k in timed if k not in seen]
+        fresh, lost, bad = classify_files(timed, seen, wrong, due)
         self.attest.update(
-            files_never_visible=len(lost), files_wrong_count=len(wrong),
-            fail_causes=sorted({*wrong.values(), *(["never visible"] if lost else [])}),
+            files_never_visible=len(lost), files_wrong_count=len(bad),
+            fail_causes=sorted({*bad.values(), *(["never visible"] if lost else [])}),
             generator_lateness_ms=1000 * max(late))
-        extra = {"fresh": fresh, "late": late, "lost": len(lost), "wrong": len(wrong),
+        extra = {"fresh": fresh, "late": late, "lost": len(lost), "wrong": len(bad),
                  "timed_from": timed_from, "store": ready["store"]}
         return self.finish_requests(ready, plain, traced, ingest=extra)
-
-    def operator_batch(self) -> dict:
-        self.launch()
-        nbytes = gen.registry_tables(self.args.seed, os.path.join(self.work, "tables"))
-        self.attest.update(input_bytes=nbytes, input_rows={"events": 10_000,
-                                                           "documents": 500,
-                                                           "embeddings": 500})
-        ready = self.start_engine()
-        s = self.args.seconds
-        if self.trace:
-            self.engine.send("trace off")
-            self.engine.send("go 0")
-            plain = self.engine.expect("passes", timeout=150)["batch_s"]
-            self.engine.send("trace on")
-            self.engine.send("go 0")
-            traced = self.engine.expect("passes", timeout=150)["batch_s"]
-        else:
-            self.engine.send(f"go {s}")
-            plain, traced = self.engine.expect("passes", timeout=150)["batch_s"], None
-        rss = self.engine.peak_rss_mb()
-        stats = self.engine.stop()
-        entries = [e for e in stats["entries"] if e["pass"] != "warm"]
-        # a traced run times p0 untraced and p1 traced
-        first = [e for e in entries if e["pass"] == "p0"] if self.trace else entries
-        errors = [f"{e['name']}: {e['error']}" for e in entries if e["error"]]
-        self.attest.update(entries=ready["entries"], passes=len(plain),
-                           fail_causes=sorted(set(errors))[:10],
-                           entry_ms={e["name"]: round(1000 * (e["construct_s"] + e["action_s"]))
-                                     for e in first})
-        lat = [1000 * (e["construct_s"] + e["action_s"]) for e in first]
-        e2e = {
-            "setup_s": (median(ready["setup_s"]), "s"),
-            "latency_p50_ms": (quantile(lat, 50), "ms"),
-            "throughput_per_s": (len(first) / sum(plain), "1/s"),
-        }
-        self.attest.update(samples=len(lat), peak_rss_mb=rss, latency_p75_ms=quantile(lat, 75))
-        per_layer = None
-        if self.trace:
-            per_layer = layers.registry_metrics(stats, self.work, plain, traced, rss)
-        return self.result(len(entries), len(errors), e2e, per_layer)
 
     def finish_requests(self, ready, plain, traced, views=None, ingest=None) -> dict:
         ops = plain + (traced or [])
@@ -555,7 +535,7 @@ class Run:
         if ingest is not None:
             # the workload's latency is freshness; each appended file is
             # one more operation that can fail
-            attempted += len(ingest["fresh"]) + ingest["lost"]
+            attempted += len(ingest["fresh"]) + ingest["lost"] + ingest["wrong"]
             failed += ingest["lost"] + ingest["wrong"]
             if not ingest["fresh"]:
                 raise EngineError("no appended file became visible")
@@ -571,12 +551,13 @@ class Run:
         for o in ok:
             by_shape.setdefault(o.shape, []).append(1000 * o.latency_s)
         self.attest["p50_ms_by_shape"] = {k: round(median(v), 1) for k, v in sorted(by_shape.items())}
+        self.attest["latencies_ms"] = [[o.shape, round(1000 * o.latency_s)] for o in ok]
         self.attest["fail_causes"] = sorted(set(self.attest.get("fail_causes", []))
                                             | {e[:120] for e in errors})[:10]
         e2e = {
-            "setup_s": (median(ready["setup_s"]), "s"),
+            "setup_s": (ready["setup_s"], "s"),
             "latency_p50_ms": (p50, "ms"),
-            "throughput_per_s": (len(ok) / _busy_span(ok), "1/s"),
+            "throughput_per_s": (closed_loop_rate(ok, CLIENTS), "1/s"),
         }
         self.attest.update(peak_rss_mb=rss, latency_p75_ms=p75)
         per_layer = None
@@ -595,9 +576,35 @@ class Run:
         }
 
 
-def _busy_span(ops: list[Op]) -> float:
-    """Seconds from the first request sent to the last answer received."""
-    return max(o.start + o.latency_s for o in ops) - min(o.start for o in ops)
+def classify_files(timed, seen: dict, wrong: dict, due: dict):
+    """Sort each timed appended file into one of: shown with the wrong
+    count (`wrong`), never shown, or shown right, which is timed from when
+    it was due to when it was first `seen`. Returns (freshness seconds of
+    the files shown right, files never shown, {file: wrong-count cause})."""
+    bad = {k: wrong[k] for k in timed if k in wrong}
+    lost = [k for k in timed if k not in seen and k not in bad]
+    fresh = [seen[k] - due[k] for k in timed if k in seen and k not in bad]
+    return fresh, lost, bad
+
+
+def closed_loop_rate(ops: list[Op], n_clients: int) -> float:
+    """Responses per second of `n_clients` closed-loop callers: each one
+    completes a request per mean latency (Little's law). Unlike answers
+    over wall time, this leaves out the callers idling at the end of the
+    window while the last requests finish."""
+    return n_clients * len(ops) / sum(o.latency_s for o in ops)
+
+
+def _cpu_times() -> list[int]:
+    """The aggregate "cpu" line of /proc/stat, in clock ticks."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
+def _steal_pct(before: list[int], after: list[int]) -> float | None:
+    """Share of CPU time stolen between two `_cpu_times()` readings."""
+    d = [b - a for a, b in zip(before, after)]
+    return round(100.0 * d[7] / sum(d), 1) if len(d) > 7 and sum(d) else None
 
 
 def _read_first_line(path: str) -> str | None:

@@ -37,8 +37,8 @@ class Span:
 
 class Tracer:
     """Thread-aware span recorder. Each thread keeps its own stack of open
-    spans, so concurrent requests nest correctly; the request id of a
-    thread is set with `request(rid)` around the request's root call."""
+    spans, so concurrent requests nest correctly. A request's root span
+    is opened with `open(name, rid)`; the spans under it inherit the id."""
 
     def __init__(self) -> None:
         self.spans: list[Span] = []
@@ -77,17 +77,16 @@ class Tracer:
             self.spans.append(sp)
 
     def wrap(self, fn: Callable, name: str,
-             count: Callable[[object], int] | None = None,
-             rid_of: Callable[..., str | None] | None = None) -> Callable:
-        """Return `fn` wrapped in a span named `name`. `count(result)`
-        stores a size in the span; `rid_of(*args, **kw)` names the
-        request the call starts."""
+             count: Callable[[object], int] | None = None) -> Callable:
+        """Return `fn` wrapped in a span named `name`; the span takes its
+        request id from its parent. `count(result)` stores a size in the
+        span."""
 
         @functools.wraps(fn)
         def traced(*args, **kw):
             if not self.enabled:
                 return fn(*args, **kw)
-            sp = self.open(name, rid_of(*args, **kw) if rid_of else None)
+            sp = self.open(name)
             try:
                 out = fn(*args, **kw)
                 if count is not None:

@@ -164,3 +164,31 @@ def test_tail_percentile_examples():
     assert tail_percentile(list(range(40))) == 75
     assert tail_percentile(list(range(100))) == 90
     assert tail_percentile(list(range(200))) == 95
+
+
+# -- harness accounting --------------------------------------------------------
+
+
+def test_each_appended_file_counts_once():
+    from perfbench.run import classify_files
+
+    timed = range(10, 14)
+    due = {k: float(k) for k in range(0, 14)}
+    # 10 shown right; 11 shown wrong, later right; 12 only wrong; 13 never;
+    # warm-up file 3 shown wrong is not a timed file
+    seen = {10: 12.5, 11: 13.0, 3: 4.0}
+    wrong = {11: "count 1 where 2", 12: "count 3 where 2", 3: "count 0 where 2"}
+    fresh, lost, bad = classify_files(timed, seen, wrong, due)
+    assert fresh == [2.5]
+    assert lost == [13]
+    assert sorted(bad) == [11, 12]
+    assert len(fresh) + len(lost) + len(bad) == len(timed)
+
+
+def test_closed_loop_rate_ignores_idle_tail():
+    from perfbench.run import Op, closed_loop_rate
+
+    # 2 clients, each busy back to back with 1 s requests: 2 per second,
+    # however long the window ran past the last answer
+    ops = [Op(str(i), "snapshot", float(i // 2), 1.0, None) for i in range(10)]
+    assert closed_loop_rate(ops, 2) == pytest.approx(2.0)
