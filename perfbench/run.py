@@ -558,9 +558,8 @@ class Run:
             "setup_s": (ready["setup_s"], "s"),
             "latency_p50_ms": (p50, "ms"),
             "throughput_per_s": (closed_loop_rate(ok, CLIENTS), "1/s"),
-            "peak_rss_mb": (rss, "MB"),
         }
-        self.attest["latency_p75_ms"] = p75
+        self.attest.update(peak_rss_mb=rss, latency_p75_ms=p75)
         per_layer = None
         if self.trace:
             per_layer = layers.request_metrics(stats, self.work, plain, traced, rss,
