@@ -382,8 +382,8 @@ class Run:
             plain = measure(s / 2)
             self.engine.send("trace on")
             out = plain, measure(s / 2)
-        # time the hypervisor gave this machine's CPUs to others: a noisy
-        # host shows here
+        # time the hypervisor gave the virtual CPUs to other guests: a
+        # noisy host shows here
         self.attest["cpu_steal_pct"] = _steal_pct(cpu0, _cpu_times())
         return out
 
