@@ -86,12 +86,12 @@ BBOX_SHAPES = {
     "country": ((1.2, 1.3), (1.7, 1.8), 6),
     "strip": ((0.0001, 0.0002), (3.1, 3.2), 7),
 }
-#: the order bbox shapes repeat in: any 10 consecutive seeded bboxes hold
-#: the same mix, so runs on different seeds do the same kind of work. The
-#: strip comes first so that warm-up, which sends a stream's first
-#: requests, runs every shape.
-SHAPE_CYCLE = ("strip", "block", "city", "country", "block",
-               "city", "block", "country", "city", "block")
+#: the order bbox shapes repeat in: any 4 consecutive seeded bboxes hold
+#: the same mix, so runs on different seeds do the same kind of work, and
+#: every timed window holds each shape several times. The strip comes
+#: first so that warm-up, which sends a stream's first requests, runs
+#: every shape.
+SHAPE_CYCLE = ("strip", "block", "city", "country")
 
 
 def random_snapshot(rng: np.random.Generator, sensors: tuple[str, ...],

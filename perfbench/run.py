@@ -27,6 +27,7 @@ import subprocess
 import sys
 import threading
 import time
+from collections import Counter
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -40,10 +41,17 @@ from perfbench import layers  # noqa: E402
 from perfbench.spans import median, quantile, tail_percentile  # noqa: E402
 
 WORKLOADS = ("snapshot_load", "ingest_live")
-#: closed-loop clients of either workload. Plan building holds the
-#: engine's GIL, so on 4 cores 4 clients complete no more requests per
-#: second than 2 do; they only double the latency, by queueing on the GIL.
-CLIENTS = 2
+#: closed-loop clients of snapshot_load. With one, a request has the
+#: engine to itself, so its latency is its own cover, plan and scan work.
+#: Two clients interleave thousands of py4j round trips under the
+#: engine's one GIL, and how their requests happened to overlap moved the
+#: latency more than the requests did.
+SNAPSHOT_CLIENTS = 1
+#: closed-loop readers of ingest_live, beside the merges
+READERS = 2
+#: clients that warm the engine up: two finish the warm-up passes sooner
+#: than one, and warm the same code
+WARM_CLIENTS = 2
 #: Spark's local cores: at most the core count, and 4 at most
 SPARK_CORES = max(1, min(4, os.cpu_count() or 1))
 #: sensors in the generated window (2 metrics x 36 h at 5-minute cadence)
@@ -51,21 +59,22 @@ N_SENSORS = 120
 REQUEST_TIMEOUT_S = 30.0
 #: a run that has not finished by then is killed and exits non-zero
 DEADLINE_S = 170.0
-#: ingest_live: appended files per second (open loop) and rows' sensors
-APPEND_RATE = 20.0
+#: ingest_live: files appended at once, one minute of PROBE_SENSORS'
+#: readings each. The next group is appended as soon as this one shows.
+GROUP_FILES = 4
 PROBE_SENSORS = 24
 #: appended readings start the day after the window, so no bucket a
 #: reader asks about ever changes
 APPEND_START_MS = gen.WINDOW_START_MS + 2 * 86_400_000
-#: share of the run over which files are appended, and the longest the
-#: last file may take to become visible after the run
-APPEND_SHARE = 0.25
+#: the longest the last group may take to show after the run
 DRAIN_S = 30.0
-#: warm-up files, appended at once, that the stream takes before timing
-#: starts
-WARM_FILES = 10
-#: most warm-up passes before timing starts
-WARM_PASSES = 3
+#: warm-up files the stream takes, a group at a time, before timing
+#: starts: its first two merges into the store run slower than the ones
+#: after them
+WARM_FILES = 2 * GROUP_FILES
+#: requests of one warm-up pass, and the fewest and most passes
+WARM_PASS_OPS = 4
+WARM_PASSES = (2, 3)
 
 
 class EngineError(RuntimeError):
@@ -286,9 +295,10 @@ class Client:
 
 def closed_loop(client: Client, stream: list[A.Request], n_clients: int,
                 seconds: float | None = None, n_ops: int | None = None,
-                start_at: int = 0) -> list[Op]:
+                start_at: int = 0, until: threading.Event | None = None) -> list[Op]:
     """`n_clients` callers, each sending its next request when the last
-    one returns, until `seconds` pass or `n_ops` requests are sent."""
+    one returns, until `seconds` pass (and `until` is set, if given) or
+    `n_ops` requests are sent."""
     ops: list[Op] = []
     lock = threading.Lock()
     state = {"i": start_at}
@@ -297,7 +307,8 @@ def closed_loop(client: Client, stream: list[A.Request], n_clients: int,
 
     def take() -> A.Request | None:
         with lock:
-            if state["i"] >= limit or time.perf_counter() >= deadline:
+            if state["i"] >= limit or (time.perf_counter() >= deadline
+                                       and (until is None or until.is_set())):
                 return None
             req = stream[state["i"] % len(stream)]
             state["i"] += 1
@@ -319,27 +330,26 @@ def closed_loop(client: Client, stream: list[A.Request], n_clients: int,
 
 
 def warm_up(client: Client, stream: list[A.Request], n_clients: int) -> int:
-    """Send the stream's next 2 requests per client, pass after pass, until
-    the pass median moves less than 10% from the pass before, WARM_PASSES
-    at most; returns the requests discarded. Walking the stream warms
-    every request shape before timing starts."""
+    """Send the stream's next WARM_PASS_OPS requests, pass after pass,
+    until the pass median moves less than 10% from the pass before; at
+    least WARM_PASSES[0] passes, so every request shape has run, and at
+    most WARM_PASSES[1]. Returns the requests discarded."""
     sent, prev = 0, None
-    for i in range(WARM_PASSES):
-        ops = closed_loop(client, stream, n_clients, n_ops=2 * n_clients,
-                          start_at=2 * n_clients * i)
+    for i in range(WARM_PASSES[1]):
+        ops = closed_loop(client, stream, n_clients, n_ops=WARM_PASS_OPS,
+                          start_at=WARM_PASS_OPS * i)
         sent += len(ops)
         med = median([o.latency_s for o in ops])
         log(f"warm-up pass median {1000 * med:.0f} ms")
-        if prev is not None and abs(med - prev) <= 0.1 * prev:
+        if i + 1 >= WARM_PASSES[0] and abs(med - prev) <= 0.1 * prev:
             break
         prev = med
     return sent
 
 
-def measured_from(n_clients: int) -> int:
-    """Stream position timing starts at: past every request warm-up may
-    send, so every run times the same stretch of its stream."""
-    return 2 * n_clients * WARM_PASSES
+#: stream position timing starts at: past every request warm-up may
+#: send, so every run times the same stretch of its stream
+MEASURED_FROM = WARM_PASS_OPS * WARM_PASSES[1]
 
 
 # ---------------------------------------------------------------------------
@@ -370,18 +380,18 @@ class Run:
         return ready
 
     def traced_halves(self, measure):
-        """Untraced run: `measure(seconds)` once. Traced run: half the
-        time with recording off, then half with it on; returns the pair
-        (untraced ops, traced ops)."""
+        """Untraced run: `measure(seconds, last=True)` once. Traced run:
+        half the time with recording off, then half with it on; returns
+        the pair (untraced ops, traced ops)."""
         s = self.args.seconds
         cpu0 = _cpu_times()
         if not self.trace:
-            out = measure(s), None
+            out = measure(s, True), None
         else:
             self.engine.send("trace off")
-            plain = measure(s / 2)
+            plain = measure(s / 2, False)
             self.engine.send("trace on")
-            out = plain, measure(s / 2)
+            out = plain, measure(s / 2, True)
         # time the hypervisor gave the virtual CPUs to other guests: a
         # noisy host shows here
         self.attest["cpu_steal_pct"] = _steal_pct(cpu0, _cpu_times())
@@ -398,11 +408,12 @@ class Run:
         client = Client(ready["port"])
         if self.trace:
             self.engine.send("trace off")
-        self.attest["warmup_ops_discarded"] = warm_up(client, stream, CLIENTS)
+        self.attest["warmup_ops_discarded"] = warm_up(client, stream, WARM_CLIENTS)
         plain, traced = self.traced_halves(
-            lambda s: closed_loop(client, stream, CLIENTS, seconds=s,
-                                  start_at=measured_from(CLIENTS)))
-        return self.finish_requests(ready, plain, traced, views=ready["views"])
+            lambda s, _last: closed_loop(client, stream, SNAPSHOT_CLIENTS, seconds=s,
+                                         start_at=MEASURED_FROM))
+        return self.finish_requests(ready, plain, traced, SNAPSHOT_CLIENTS, stream,
+                                    views=ready["views"])
 
     def ingest_live(self) -> dict:
         self.launch()
@@ -411,16 +422,17 @@ class Run:
         mix = A.read_mix(self.args.seed, r.sensors, n_distinct=96)
         A.Answers(r).fill(mix)
         probe_sensors = r.sensors[:PROBE_SENSORS]
-        # files 0..WARM_FILES-1 warm the stream up; the rest are timed. They are
-        # appended over the first APPEND_SHARE of the run, so the last ones
-        # can land while the readers still run.
-        n_timed = int(APPEND_RATE * APPEND_SHARE * self.args.seconds)
-        minute = [APPEND_START_MS + k * gen.MINUTE_MS for k in range(WARM_FILES + n_timed)]
+        # files 0..WARM_FILES-1 warm the stream up; the timed ones follow in
+        # groups of GROUP_FILES, each group appended once the one before
+        # shows. A group takes at least one 1 s trigger, which bounds how
+        # many files a run can append.
+        n_files = WARM_FILES + GROUP_FILES * (math.ceil(self.args.seconds) + 1)
+        minute = [APPEND_START_MS + k * gen.MINUTE_MS for k in range(n_files)]
         files = [gen.minute_file(self.args.seed + 1 + k, m, probe_sensors)
                  for k, m in enumerate(minute)]
         want = {m: int((f.metric_id == gen.METRICS[0]).sum()) for m, f in zip(minute, files)}
-        self.attest.update(input_rows=len(r), input_bytes=nbytes, appended_files=n_timed,
-                           append_rate_per_s=APPEND_RATE, rows_per_file=len(files[0]))
+        self.attest.update(input_rows=len(r), input_bytes=nbytes, files_per_group=GROUP_FILES,
+                           rows_per_file=len(files[0]))
         ready = self.start_engine()
         in_dir = os.path.join(self.work, "stream_in")
         current = os.path.join(ready["store"], "_CURRENT")
@@ -435,16 +447,27 @@ class Run:
         due: dict[int, float] = {}
         late: list[float] = []
 
-        def append(ks: range, t0: float, rate: float = APPEND_RATE) -> None:
-            """Open loop: file k is due at t0 + (k - ks[0]) / rate."""
+        def append(ks: range) -> None:
+            """Append files `ks` at once; each is due when the call starts.
+            All are written before any is renamed into place, so one
+            micro-batch takes the whole group."""
+            d = time.perf_counter()
             for k in ks:
-                d = t0 + (k - ks[0]) / rate
-                time.sleep(max(0.0, d - time.perf_counter()))
-                tmp = os.path.join(in_dir, f".part-{k:05d}.tmp")
-                pq.write_table(files[k].table(), tmp)
-                os.rename(tmp, os.path.join(in_dir, f"part-{k:05d}.parquet"))
+                pq.write_table(files[k].table(), os.path.join(in_dir, f".part-{k:05d}.tmp"))
+            for k in ks:
+                os.rename(os.path.join(in_dir, f".part-{k:05d}.tmp"),
+                          os.path.join(in_dir, f"part-{k:05d}.parquet"))
                 due[k] = d
-                late.append(time.perf_counter() - d)
+            late.append(time.perf_counter() - d)
+
+        def shown(ks: range, until: float) -> bool:
+            """Wait until the prober has shown every file of `ks`, right or
+            wrong, or `until` passes."""
+            while not all(k in seen or k in wrong for k in ks):
+                if time.perf_counter() >= until:
+                    return False
+                time.sleep(0.01)
+            return True
 
         def probe_once() -> None:
             op = client.get(probe, check=False)
@@ -459,11 +482,11 @@ class Run:
                     elif k not in seen:
                         seen[k] = now
 
-        def prober(until: float, last: int) -> None:
+        def prober(stop: threading.Event) -> None:
             """Probe after every commit the store makes (until the probe
             shows something new, so the re-point is not missed)."""
             version = None
-            while time.perf_counter() < until and last not in seen:
+            while not stop.is_set():
                 v = _read_first_line(current)
                 if v == version:
                     time.sleep(0.02)
@@ -471,50 +494,74 @@ class Run:
                 before = len(seen)
                 for _ in range(20):
                     probe_once()
-                    if len(seen) > before or time.perf_counter() >= until:
+                    if len(seen) > before or stop.is_set():
                         break
                     time.sleep(0.05)
                 version = v
 
-        if self.trace:
-            self.engine.send("trace off")
-        # warm-up: readers until steady while the stream takes warm files
-        t_warm = time.perf_counter()
-        warm = [threading.Thread(target=append, args=(range(WARM_FILES), t_warm, math.inf)),
-                threading.Thread(target=prober, args=(t_warm + 60.0, WARM_FILES - 1))]
-        for t in warm:
-            t.start()
-        self.attest["warmup_ops_discarded"] = warm_up(client, mix, CLIENTS) + WARM_FILES
-        for t in warm:
-            t.join()
-        if WARM_FILES - 1 not in seen:
-            raise EngineError("the stream did not take the warm-up files within 60 s")
-        log("stream warm")
+        def appender(ks: range, t_end: float, give_up: float, out: list[int]) -> None:
+            """Closed loop over the files `ks`: append a group of them, wait
+            until it shows, append the next, until `t_end` passes; waiting
+            gives up at `give_up`. Appended files go to `out`."""
+            for k in range(ks.start, ks.stop, GROUP_FILES):
+                if time.perf_counter() >= t_end:
+                    return
+                group = range(k, min(k + GROUP_FILES, ks.stop))
+                append(group)
+                out.extend(group)
+                if not shown(group, give_up):
+                    return
 
-        def measure(seconds: float) -> list[Op]:
-            return closed_loop(client, mix, CLIENTS, seconds=seconds,
-                               start_at=measured_from(CLIENTS))
+        stop_probe = threading.Event()
+        probing = threading.Thread(target=prober, args=(stop_probe,))
+        probing.start()
+        try:
+            if self.trace:
+                self.engine.send("trace off")
+            # warm-up: readers until steady while the stream merges the warm
+            # files, a group at a time
+            warming = threading.Thread(target=appender, args=(
+                range(WARM_FILES), math.inf, time.perf_counter() + 60.0, []))
+            warming.start()
+            self.attest["warmup_ops_discarded"] = warm_up(client, mix, READERS) + WARM_FILES
+            warming.join()
+            if not shown(range(WARM_FILES), time.perf_counter()):
+                raise EngineError("the stream did not take the warm-up files within 60 s")
+            log("stream warm")
 
-        t0, timed_from = time.perf_counter(), time.time()
-        timed = range(WARM_FILES, WARM_FILES + n_timed)
-        threads = [threading.Thread(target=append, args=(timed, t0)),
-                   threading.Thread(target=prober,
-                                    args=(t0 + self.args.seconds + DRAIN_S, timed[-1]))]
-        for t in threads:
-            t.start()
-        plain, traced = self.traced_halves(measure)
-        for t in threads:
-            t.join()
+            timed: list[int] = []
+            appended = threading.Event()
+
+            def append_timed(t_end: float) -> None:
+                try:
+                    appender(range(WARM_FILES, n_files), t_end, t_end + DRAIN_S, timed)
+                finally:
+                    appended.set()
+
+            # the readers go on until the last group shows, so a merge runs
+            # beside them all through the window
+            t0, timed_from = time.perf_counter(), time.time()
+            appending = threading.Thread(target=append_timed, args=(t0 + self.args.seconds,))
+            appending.start()
+            plain, traced = self.traced_halves(
+                lambda s, last: closed_loop(client, mix, READERS, seconds=s,
+                                            start_at=MEASURED_FROM,
+                                            until=appended if last else None))
+            appending.join()
+        finally:
+            stop_probe.set()
+            probing.join()
         fresh, lost, bad = classify_files(timed, seen, wrong, due)
         self.attest.update(
-            files_never_visible=len(lost), files_wrong_count=len(bad),
+            appended_files=len(timed), files_never_visible=len(lost), files_wrong_count=len(bad),
             fail_causes=sorted({*bad.values(), *(["never visible"] if lost else [])}),
             generator_lateness_ms=1000 * max(late))
         extra = {"fresh": fresh, "late": late, "lost": len(lost), "wrong": len(bad),
                  "timed_from": timed_from, "store": ready["store"]}
-        return self.finish_requests(ready, plain, traced, ingest=extra)
+        return self.finish_requests(ready, plain, traced, READERS, mix, ingest=extra)
 
-    def finish_requests(self, ready, plain, traced, views=None, ingest=None) -> dict:
+    def finish_requests(self, ready, plain, traced, n_clients: int, stream: list[A.Request],
+                        views=None, ingest=None) -> dict:
         ops = plain + (traced or [])
         rss = self.engine.peak_rss_mb()
         log("measured; stopping engine")
@@ -544,9 +591,14 @@ class Run:
             self.attest["samples"] = len(ingest["fresh"])
             self.attest["read_p50_ms"] = quantile(lat, 50) if lat else None
         else:
-            p50, p75 = quantile(lat, 50), quantile(lat, 75)
-            self.attest["samples"] = len(lat)
-            self.attest["tail_supported_pct"] = tail_percentile(lat)
+            # the latency of the reference request, which is the same work
+            # in every run and on every seed; the other shapes, each with
+            # its own cost, weigh into the rate
+            ref = [1000 * o.latency_s for o in ok if o.shape == "antwerp"]
+            p50, p75 = quantile(ref, 50), quantile(ref, 75)
+            self.attest["samples"] = len(ref)
+            self.attest["tail_supported_pct"] = tail_percentile(ref)
+            self.attest["all_shapes_p50_ms"] = quantile(lat, 50)
         by_shape: dict[str, list[float]] = {}
         for o in ok:
             by_shape.setdefault(o.shape, []).append(1000 * o.latency_s)
@@ -557,7 +609,7 @@ class Run:
         e2e = {
             "setup_s": (ready["setup_s"], "s"),
             "latency_p50_ms": (p50, "ms"),
-            "throughput_per_s": (closed_loop_rate(ok, CLIENTS), "1/s"),
+            "throughput_per_s": (closed_loop_rate(ok, n_clients, stream), "1/s"),
         }
         self.attest.update(peak_rss_mb=rss, latency_p75_ms=p75)
         per_layer = None
@@ -587,12 +639,21 @@ def classify_files(timed, seen: dict, wrong: dict, due: dict):
     return fresh, lost, bad
 
 
-def closed_loop_rate(ops: list[Op], n_clients: int) -> float:
-    """Responses per second of `n_clients` closed-loop callers: each one
-    completes a request per mean latency (Little's law). Unlike answers
-    over wall time, this leaves out the callers idling at the end of the
-    window while the last requests finish."""
-    return n_clients * len(ops) / sum(o.latency_s for o in ops)
+def closed_loop_rate(ops: list[Op], n_clients: int, stream: list[A.Request]) -> float:
+    """Responses per second of `n_clients` closed-loop callers sending
+    `stream`: each one completes a request per mean latency (Little's
+    law). Unlike answers over wall time, this leaves out the callers
+    idling at the end of the window while the last requests finish. The
+    mean weighs each request shape by its share of the stream, so where
+    the window happens to cut the stream's cycle of shapes does not move
+    the rate; shapes the window missed are left out."""
+    share = Counter(r.shape for r in stream)
+    by_shape: dict[str, list[float]] = {}
+    for o in ops:
+        by_shape.setdefault(o.shape, []).append(o.latency_s)
+    mean = (sum(share[k] * sum(v) / len(v) for k, v in by_shape.items())
+            / sum(share[k] for k in by_shape))
+    return n_clients / mean
 
 
 def _cpu_times() -> list[int]:
@@ -665,7 +726,8 @@ def main(argv=None) -> int:
     watchdog.start()
     run.attest.update(
         workload=args.workload, seed=args.seed, seconds=args.seconds, traced=bool(args.trace),
-        nproc=os.cpu_count(), clients=CLIENTS, python=platform.python_version(),
+        nproc=os.cpu_count(), clients=(SNAPSHOT_CLIENTS if args.workload == "snapshot_load"
+                                       else READERS), python=platform.python_version(),
         commit=_git_commit(root))
     log(f"{args.workload} seed {args.seed}")
     try:

@@ -34,7 +34,9 @@ def test_generator_is_deterministic_per_seed(readings):
     for col in ("metric_id", "geohash", "ts_ms", "value"):
         assert np.array_equal(getattr(readings, col), getattr(again, col))
     assert not np.array_equal(readings.value, other.value)
-    assert readings.sensors == again.sensors != other.sensors
+    assert not np.array_equal(readings.ts_ms, other.ts_ms)
+    # one sensor layout for every seed
+    assert readings.sensors == again.sensors == other.sensors
 
 
 def test_reference_minute_holds_antwerp_data(readings):
@@ -190,5 +192,17 @@ def test_closed_loop_rate_ignores_idle_tail():
 
     # 2 clients, each busy back to back with 1 s requests: 2 per second,
     # however long the window ran past the last answer
-    ops = [Op(str(i), "snapshot", float(i // 2), 1.0, None) for i in range(10)]
-    assert closed_loop_rate(ops, 2) == pytest.approx(2.0)
+    stream = [A.antwerp_snapshot()]
+    ops = [Op(str(i), "snapshot", float(i // 2), 1.0, None, shape="antwerp") for i in range(10)]
+    assert closed_loop_rate(ops, 2, stream) == pytest.approx(2.0)
+
+
+def test_closed_loop_rate_weighs_shapes_by_stream_share():
+    from perfbench.run import Op, closed_loop_rate
+
+    # the stream is half 1 s requests, half 3 s ones: a mean of 2 s, even
+    # when the window caught three fast requests for one slow one
+    stream = [A.Request("snapshot", "m", "avg", {}, shape=s) for s in ("fast", "slow")]
+    ops = [Op(str(i), "snapshot", 0.0, 1.0, None, shape="fast") for i in range(3)]
+    ops.append(Op("3", "snapshot", 0.0, 3.0, None, shape="slow"))
+    assert closed_loop_rate(ops, 1, stream) == pytest.approx(0.5)
