@@ -27,7 +27,7 @@ from explora_kafka_spark.functions import zorder as ZO
 from explora_kafka_spark.operators import cooccurrence as COOC
 from explora_kafka_spark.operators import mobility as MOB
 from explora_kafka_spark.functions.timeutil import (
-    composite_key_col, truncate_ts_col, ts_ms_col)
+    composite_key_col, ts_ms_col)
 from explora_kafka_spark.operators import clustering as CL
 from explora_kafka_spark.operators import contamination as CONT
 from explora_kafka_spark.operators import corpus as CORP
@@ -295,7 +295,7 @@ def q_history_range_hour(spark, sf_dir):
 
 
 def q_history_cells_day(spark, sf_dir):
-    """Q6 multi-cell union (isin) + A3, count aggregate."""
+    """Q6 multi-cell union (one IN expression) + A3, count aggregate."""
     return Q.history(_views(spark, sf_dir), "click", "count", 6, "day", cells=_CELLS)
 
 
@@ -350,7 +350,7 @@ def q_geohash_cells(spark, sf_dir):
 
 
 def q_snapshot_bbox_quad(spark, sf_dir):
-    """Q4 bbox→quadkey cover (isin path, cover ≤ threshold) at zoom 6."""
+    """Q4 bbox→quadkey cover at zoom 6, pushed down as one IN expression."""
     lattice = _geo_lattice(spark, sf_dir, "quad", 6, 6)
     df = Q.snapshot_bbox_quadtiling(lattice, "view", "count", 6, "day",
                                     _SNAP_DAY_MS, *_BBOX)
@@ -358,8 +358,8 @@ def q_snapshot_bbox_quad(spark, sf_dir):
 
 
 def q_snapshot_bbox_geohash(spark, sf_dir):
-    """Q5 bbox→geohash cover at precision 3 (cover > 1024 cells → exercises
-    the broadcast-join fallback instead of an isin literal)."""
+    """Q5 bbox→geohash cover at precision 3: 7,482 cells that compress_cover
+    folds to 538 prefixes, so it plans one IN expression and no join."""
     lattice = _geo_lattice(spark, sf_dir, "geohash", 5, 3)
     df = Q.snapshot_bbox_geohashing(lattice, "view", "count", 3, "day",
                                     _SNAP_DAY_MS, *_BBOX)
@@ -407,7 +407,7 @@ _REGIONS = [
 def q_snapshot_polygon_quad(spark, sf_dir):
     """Polygon (geofence) snapshot in quad-tiling mode — the third
     region shape next to bbox and circle; exact planar polygon/box
-    refinement driver-side, same prefix/isin pushdown."""
+    refinement driver-side, same prefix pushdown."""
     lattice = _geo_lattice(spark, sf_dir, "quad", 6, 6)
     return Q.snapshot_polygon_quadtiling(
         lattice, "view", "count", 6, "day", _SNAP_DAY_MS, _POLYGON
@@ -440,7 +440,7 @@ _ROUTE_RADIUS_M = 500_000.0
 def q_snapshot_route_quad(spark, sf_dir):
     """Route-corridor snapshot (polyline + radius) in quad mode — the
     fourth region shape: exact planar box-to-segment refinement
-    driver-side, same prefix/isin pushdown engine-side."""
+    driver-side, same prefix pushdown engine-side."""
     lattice = _geo_lattice(spark, sf_dir, "quad", 6, 6)
     return Q.snapshot_route_quadtiling(
         lattice, "view", "count", 6, "day", _SNAP_DAY_MS, _ROUTE,

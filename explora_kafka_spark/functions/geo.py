@@ -591,12 +591,6 @@ def compress_cover(cells: List[str], alphabet: str) -> List[str]:
 # ---------------------------------------------------------------------------
 
 
-def geohash_cell_col(geohash_col: Column | str, precision: int) -> Column:
-    """Cell id = geohash prefix — IngestStream.java:316."""
-    col = F.col(geohash_col) if isinstance(geohash_col, str) else geohash_col
-    return F.substring(col, 1, precision)
-
-
 def tile_x_col(lon_col: Column, zoom: int) -> Column:
     """Valid domain: lon ∈ [-180, 180). lon=180 yields tile 2^zoom (out of
     range) — parity with QuadHash.java:8-13, which does not clamp either."""

@@ -1165,16 +1165,6 @@ def compact_ivf_index(spark, path: str, gc: bool = True) -> None:
         mutate_fn=lambda p, mu: _mutate_ivf_manifest(p, mu), gc=gc)
 
 
-def vacuum_ivf_index(path: str, grace_secs: float = 86400.0) -> list[str]:
-    """Delete crash-orphaned delta/compact dirs older than the grace
-    lease (`index_ledger.vacuum` — the VACUUM job of the index
-    lifecycle; the lease rule is documented there). The `centroids`
-    and committed dirs are untouchable by construction."""
-    return ledger.vacuum(path, "lists",
-                         ("lists_delta_", "lists_compact_"),
-                         grace_secs, read_fn=_ivf_manifest)
-
-
 def ann_topk_ivf_indexed(
     spark,
     index_path: str,

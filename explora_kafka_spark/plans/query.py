@@ -11,9 +11,12 @@ These are the engine's two query shapes (QueryingService.java:38-143):
 - **snapshot**: one aggregate per cell over a bbox at one instant — replaces
   tile-cover point lookups / geohash children enumeration
   (QueryingController.java:100-121, 232-282). Covers are computed driver-side
-  (pure functions, functions/geo.py) and pushed down as `isin`; a geohash
-  prefix becomes a `startswith` predicate (strictly dominates the reference's
-  32^k enumeration — SURVEY.md §4).
+  (pure functions, functions/geo.py) and take one of two paths. Up to
+  COMPRESSED_COVER_LIMIT prefixes after `geo.compress_cover` (complete
+  sibling families fold into their parent prefix — strictly dominates the
+  reference's 32^k enumeration, SURVEY.md §4), the cover ships as ONE SQL
+  `IN` expression, one `IN` per prefix length, built in a single JVM call.
+  Above it, the cover becomes a broadcast semi-join.
 
 All avg values are derived sum/count AFTER the merge (util/Aggregator.java:19-32).
 """
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..functions.literals import literal_in
 from ..functions.timeutil import (
     INTERVAL_TO_RES,
     interval_to_range,
@@ -33,34 +37,13 @@ from ..functions.timeutil import (
     ts_ms_col,
 )
 
-#: above this many cover cells, `isin` literal lists become a broadcast join
-#: (a zoom-14 country bbox is millions of quadkeys — a literal would blow up
-#: the plan; a broadcast hash join keeps the filter executor-side)
-BROADCAST_COVER_THRESHOLD = 1024
-
-#: ceiling on a prefix-compressed cover: under this, the cover ships as a
-#: pure codegen predicate (substring-isin per prefix length) — no join, no
+#: ceiling on a cell predicate's literal count: up to this many
+#: (compressed) cells ship as one SQL `IN` expression — no join, no
 #: broadcast build, no shuffle. Spatial covers compress ~10-100× (bbox
-#: interiors are complete subtrees), so this path handles every real bbox;
-#: adversarial non-spatial sets that don't compress fall back to the
-#: broadcast semi-join.
+#: interiors are complete subtrees), so this path handles every real
+#: bbox; larger sets (incompressible non-spatial ones, long thin strips)
+#: become a broadcast semi-join, which beats a huge literal list.
 COMPRESSED_COVER_LIMIT = 4096
-
-
-def _prefix_set_predicate(cell_col: str, prefixes: Sequence[str], full_len: int):
-    """Membership predicate for a mixed-length prefix set (compress_cover
-    output): OR over per-length substring-isin probes. Stays inside
-    whole-stage codegen (hash-set probe per length) — the scale-safe form
-    of the reference's 32^k children enumeration."""
-    by_len: dict[int, list[str]] = {}
-    for p in prefixes:
-        by_len.setdefault(len(p), []).append(p)
-    cond = None
-    for plen, ps in sorted(by_len.items()):
-        col = F.col(cell_col) if plen >= full_len else F.substring(cell_col, 1, plen)
-        c = col.isin(ps)
-        cond = c if cond is None else (cond | c)
-    return cond if cond is not None else F.lit(False)
 
 
 def _merge_cols():
@@ -78,35 +61,44 @@ def _ts_at(ms: int):
     return F.timestamp_millis(F.lit(ms))
 
 
-
 def _filter_cells(
     df: DataFrame,
     cells: Sequence[str] | None,
-    cell_prefix: str | None,
-    cell_col: str = "gh",
+    cell_prefix: str | None = None,
     alphabet: str | None = None,
+    precision: int = 0,
 ) -> DataFrame:
-    """Cell-set predicate: small sets push down as `isin`; large covers
-    prefix-compress into a pure codegen predicate when `alphabet` is known
-    (geo covers — complete sibling families fold into their parent prefix);
-    incompressible large sets become a broadcast semi-join
-    (SURVEY §2.4 Q4/Q6; fixes VERDICT r1 'unbounded isin')."""
-    if cells is not None:
-        cells = list(cells)
-        if len(cells) <= BROADCAST_COVER_THRESHOLD:
-            return df.filter(F.col(cell_col).isin(cells))
-        if alphabet:
-            comp = geo.compress_cover(cells, alphabet)
-            if len(comp) <= COMPRESSED_COVER_LIMIT:
-                return df.filter(
-                    _prefix_set_predicate(cell_col, comp, len(cells[0]))
-                )
-        spark = df.sparkSession
-        cover = spark.createDataFrame([(c,) for c in cells], f"{cell_col}: string")
-        return df.join(F.broadcast(cover), on=cell_col, how="left_semi")
-    if cell_prefix is not None:
-        return df.filter(F.col(cell_col).startswith(cell_prefix))
-    return df
+    """Cell-set predicate on `gh` (SURVEY §2.4 Q4/Q6; fixes VERDICT r1
+    'unbounded isin').
+
+    Without `alphabet` (user-supplied cells) every cell matches `gh`
+    exactly. With it, `cells` is a geo cover at or above the view
+    `precision`: it is prefix-compressed first, and a prefix shorter
+    than `precision` matches the `gh` prefix of its length. Full-length
+    prefixes compare `gh` itself, so a cover with no compressed family
+    reaches the scan's PushedFilters as `In(gh, …)`; Spark cannot push an
+    OR holding a `substring` term, so a mixed-length cover filters right
+    after the scan instead. Up to COMPRESSED_COVER_LIMIT prefixes → one
+    `IN` expression; above → a broadcast semi-join on the cover."""
+    if cells is None:
+        if cell_prefix is None:
+            return df
+        return df.filter(F.col("gh").startswith(cell_prefix))
+    cells = list(cells)
+    full_len = precision if alphabet else 0
+    prefixes = geo.compress_cover(cells, alphabet) if alphabet else cells
+    if len(prefixes) <= COMPRESSED_COVER_LIMIT:
+        by_len: dict[int, list[str]] = {}
+        for p in prefixes:
+            by_len.setdefault(len(p), []).append(p)
+        return df.filter(literal_in(
+            ("gh" if n >= full_len else f"substring(gh, 1, {n})", ps)
+            for n, ps in sorted(by_len.items())
+        ))
+    plen = len(cells[0])
+    key = F.col("gh") if plen >= full_len else F.substring("gh", 1, plen)
+    cover = df.sparkSession.createDataFrame([(c,) for c in cells], "_cell: string")
+    return df.join(F.broadcast(cover), key == cover["_cell"], "left_semi")
 
 
 def _select_view(lattice: DataFrame, metric: str, precision: int, res: str) -> DataFrame:
@@ -137,6 +129,26 @@ def _agg_projection(df: DataFrame, aggregate: str, key_col: str,
     return df.select(F.col(key_col),
                      *[F.col(c) for c in (extra or [])],
                      value.alias(aggregate))
+
+
+def _slice(lattice: DataFrame, metric: str, precision: int, res: str,
+           ts_ms: int) -> DataFrame:
+    """One snapshot slice: the view at `ts_ms` truncated to its grain."""
+    t = truncate_ts_ms(ts_ms, res)
+    return _select_view(lattice, metric, precision, res).filter(
+        F.col("ts") == _ts_at(t))
+
+
+def _snapshot(lattice: DataFrame, metric: str, aggregate: str,
+              precision: int, res: str, ts_ms: int,
+              cells: Sequence[str] | None, cell_prefix: str | None = None,
+              alphabet: str | None = None) -> DataFrame:
+    """[gh, {aggregate}] over the cells of one slice, cell-ascending —
+    the tail every snapshot shares (see `_filter_cells` for `alphabet`)."""
+    view = _filter_cells(_slice(lattice, metric, precision, res, ts_ms),
+                         cells, cell_prefix, alphabet, precision)
+    merged = view.groupBy("gh").agg(*_merge_cols())
+    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
 
 
 def history(
@@ -203,11 +215,8 @@ def snapshot(
     """Choropleth [gh, {aggregate}] at one instant, cell-ascending (A4 + Q2 +
     Q7). `ts_ms` is truncated to the view grain first (L4 — the engine always
     truncates; distributed-path semantics, QueryingController.java:102)."""
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(F.col("ts") == _ts_at(t))
-    view = _filter_cells(view, cells, cell_prefix)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
+                     cells, cell_prefix)
 
 
 def history_raw(
@@ -301,32 +310,6 @@ def adaptive_cover_precision(north: float, west: float, south: float,
     return p
 
 
-def _prefix_cover_filter(view: DataFrame, cover: list[str], plen: int,
-                         full_len: int, alphabet: str | None = None) -> DataFrame:
-    """Filter cells whose length-`plen` prefix is in `cover` (small set →
-    isin on substring; large → prefix-compressed codegen predicate when the
-    cell alphabet is known, else broadcast semi-join on the prefix)."""
-    if plen >= full_len:
-        return _filter_cells(view, cover, None, alphabet=alphabet)
-    pref = F.substring("gh", 1, plen)
-    if len(cover) <= BROADCAST_COVER_THRESHOLD:
-        return view.filter(pref.isin(cover))
-    if alphabet:
-        comp = geo.compress_cover(cover, alphabet)
-        if len(comp) <= COMPRESSED_COVER_LIMIT:
-            # prefixes of the plen-prefix are prefixes of the full cell, so
-            # the predicate applies directly to gh (full_len here is the
-            # cover's own length — every compressed prefix is ≤ plen < gh)
-            return view.filter(_prefix_set_predicate("gh", comp, plen + 1))
-    spark = view.sparkSession
-    cov = spark.createDataFrame([(c,) for c in cover], "_pref: string")
-    return (
-        view.withColumn("_pref", pref)
-        .join(F.broadcast(cov), on="_pref", how="left_semi")
-        .drop("_pref")
-    )
-
-
 def snapshot_bbox_quadtiling(
     lattice: DataFrame,
     metric: str,
@@ -340,7 +323,7 @@ def snapshot_bbox_quadtiling(
     east: float,
 ) -> DataFrame:
     """Snapshot over a bbox in quad-tiling mode (Q4, util/QuadHash.java:32-50
-    → isin/broadcast pushdown replacing per-quadkey point gets,
+    → one cell predicate replacing per-quadkey point gets,
     QueryingController.java:248-262).
 
     When the exact-zoom cover exceeds COVER_ENUM_LIMIT, the cover is taken
@@ -351,12 +334,8 @@ def snapshot_bbox_quadtiling(
     included."""
     cover_zoom = adaptive_cover_zoom(north, west, south, east, zoom)
     cover = geo.quadkey_cover_bbox(north, west, south, east, cover_zoom)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_zoom, zoom,
-                                alphabet=geo.QUAD_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, zoom, res, ts_ms,
+                     cover, alphabet=geo.QUAD_ALPHABET)
 
 
 def snapshot_radius_quadtiling(
@@ -375,7 +354,7 @@ def snapshot_radius_quadtiling(
     (QueryingController.java:240-282): the circle's bounding-bbox cover is
     refined driver-side by a per-tile min-distance test
     (geo.quadkey_cover_circle), then applied through the same adaptive
-    prefix/isin pushdown as the bbox path. Cell inclusion is
+    prefix pushdown as the bbox path. Cell inclusion is
     cover-intersection semantics, matching the bbox flavor's edge-tile
     behavior; no trigonometry runs engine-side."""
     # coarsest adaptive choice across the circle's box(es) — two boxes
@@ -390,12 +369,8 @@ def snapshot_radius_quadtiling(
     cover_zoom = min(
         (adaptive_cover_zoom(*b, zoom) for b in boxes), default=zoom)
     cover = geo.quadkey_cover_circle(lat, lon, radius_m, cover_zoom)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_zoom, zoom,
-                                alphabet=geo.QUAD_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, zoom, res, ts_ms,
+                     cover, alphabet=geo.QUAD_ALPHABET)
 
 
 def snapshot_radius_geohashing(
@@ -416,12 +391,8 @@ def snapshot_radius_geohashing(
         for b in geo.circle_bboxes(lat, lon, radius_m)
     )  # geohash domain is the full lat range — no clamp needed for sizing
     cover = geo.geohash_cover_circle(lat, lon, radius_m, cover_p)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_p, precision,
-                                alphabet=geo.GEOHASH_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
+                     cover, alphabet=geo.GEOHASH_ALPHABET)
 
 
 def snapshot_polygon_quadtiling(
@@ -437,20 +408,15 @@ def snapshot_polygon_quadtiling(
     tiling mode — the third region shape next to bbox and circle: the
     polygon's bbox cover is refined driver-side by the exact planar
     polygon/box intersection (geo.quadkey_cover_polygon), then applied
-    through the same adaptive prefix/isin pushdown. Planar lat/lon
+    through the same adaptive prefix pushdown. Planar lat/lon
     semantics; the polygon must not cross the antimeridian (split it
     like circle_bboxes splits its circle). No geometry runs engine-side."""
     bbox = geo.clamp_bbox_lat(geo.polygon_bbox(points),
                               geo.MERCATOR_MAX_LAT)
     cover_zoom = adaptive_cover_zoom(*bbox, zoom) if bbox else zoom
     cover = geo.quadkey_cover_polygon(points, cover_zoom)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(
-        F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_zoom, zoom,
-                                alphabet=geo.QUAD_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, zoom, res, ts_ms,
+                     cover, alphabet=geo.QUAD_ALPHABET)
 
 
 def snapshot_nearest_quadtiling(
@@ -489,11 +455,9 @@ def snapshot_nearest_quadtiling(
     ]
     mapping = lattice.sparkSession.createDataFrame(
         rows, "gh string, dist_m double")
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(
-        F.col("ts") == _ts_at(t))
     merged = (
-        view.join(F.broadcast(mapping), "gh")
+        _slice(lattice, metric, zoom, res, ts_ms)
+        .join(F.broadcast(mapping), "gh")
         .groupBy("gh", "dist_m")
         .agg(*_merge_cols())
     )
@@ -523,11 +487,9 @@ def snapshot_nearest_geohashing(
             (la_hi, lo_lo, la_lo, lo_hi), lat, lon), 6)))
     mapping = lattice.sparkSession.createDataFrame(
         rows, "gh string, dist_m double")
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(
-        F.col("ts") == _ts_at(t))
     merged = (
-        view.join(F.broadcast(mapping), "gh")
+        _slice(lattice, metric, precision, res, ts_ms)
+        .join(F.broadcast(mapping), "gh")
         .groupBy("gh", "dist_m")
         .agg(*_merge_cols())
     )
@@ -550,7 +512,7 @@ def snapshot_route_quadtiling(
     within r of this road" (fleet/route telemetry). The radius-expanded
     route-bbox cover is refined driver-side by the exact planar
     box-to-segment distance (geo.quadkey_cover_route), then applied
-    through the same adaptive prefix/isin pushdown. Planar contract as
+    through the same adaptive prefix pushdown. Planar contract as
     the polygon family (no antimeridian crossing); no geometry runs
     engine-side — at 100 TB the query is still one partition-pruned
     slice scan with a pushed cell predicate."""
@@ -558,13 +520,8 @@ def snapshot_route_quadtiling(
         geo._route_bbox_expanded(points, radius_m), geo.MERCATOR_MAX_LAT)
     cover_zoom = adaptive_cover_zoom(*bbox, zoom) if bbox else zoom
     cover = geo.quadkey_cover_route(points, radius_m, cover_zoom)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(
-        F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_zoom, zoom,
-                                alphabet=geo.QUAD_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, zoom, res, ts_ms,
+                     cover, alphabet=geo.QUAD_ALPHABET)
 
 
 def snapshot_route_geohashing(
@@ -584,12 +541,8 @@ def snapshot_route_geohashing(
     cover_prec = adaptive_cover_precision(*bbox, precision) if bbox \
         else precision
     cover = geo.geohash_cover_route(points, radius_m, cover_prec)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(
-        F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_prec, precision)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
+                     cover, alphabet=geo.GEOHASH_ALPHABET)
 
 
 def snapshot_regions_quadtiling(
@@ -625,11 +578,9 @@ def snapshot_regions_quadtiling(
             rows.append((str(rid), c))
     mapping = lattice.sparkSession.createDataFrame(
         rows, "region_id string, gh string")
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, zoom, res).filter(
-        F.col("ts") == _ts_at(t))
     merged = (
-        view.join(F.broadcast(mapping), "gh")
+        _slice(lattice, metric, zoom, res, ts_ms)
+        .join(F.broadcast(mapping), "gh")
         .groupBy("region_id")
         .agg(*_merge_cols())
     )
@@ -651,13 +602,8 @@ def snapshot_polygon_geohashing(
     bbox = geo.polygon_bbox(points)
     cover_p = adaptive_cover_precision(*bbox, precision)
     cover = geo.geohash_cover_polygon(points, cover_p)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(
-        F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_p, precision,
-                                alphabet=geo.GEOHASH_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
+                     cover, alphabet=geo.GEOHASH_ALPHABET)
 
 
 def snapshot_bbox_geohashing(
@@ -672,16 +618,12 @@ def snapshot_bbox_geohashing(
     south: float,
     east: float,
 ) -> DataFrame:
-    """Snapshot over a bbox in geohashing mode (Q5 → isin/broadcast,
+    """Snapshot over a bbox in geohashing mode (Q5 → cell predicate,
     replacing cover + base-32 children enumeration,
     QueryingController.java:240-282). Same adaptive coarse-cover prefix
     strategy as the quad-tiling path when the exact-precision cover would
     exceed COVER_ENUM_LIMIT."""
     cover_p = adaptive_cover_precision(north, west, south, east, precision)
     cover = geo.geohash_cover_bbox(north, west, south, east, cover_p)
-    t = truncate_ts_ms(ts_ms, res)
-    view = _select_view(lattice, metric, precision, res).filter(F.col("ts") == _ts_at(t))
-    view = _prefix_cover_filter(view, cover, cover_p, precision,
-                                alphabet=geo.GEOHASH_ALPHABET)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _agg_projection(merged, aggregate, "gh").orderBy("gh")
+    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
+                     cover, alphabet=geo.GEOHASH_ALPHABET)

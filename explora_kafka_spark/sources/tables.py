@@ -18,11 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 #: full precision of the synthetic cell id derived from user_id
 CELL_FULL_PRECISION = 12
 
@@ -55,10 +50,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # keeps DuckDB oracle parity (DuckDB reads it as naive-UTC too).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def readings_from_events(events: DataFrame) -> DataFrame:

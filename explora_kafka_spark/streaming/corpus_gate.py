@@ -223,30 +223,6 @@ def read_gate_verdict_log(spark, log_path: str) -> DataFrame:
     return ledger.committed_union(spark, log_path, "gate_verdicts")
 
 
-def compact_verdict_log(spark, log_path: str, gc: bool = True) -> None:
-    """Fold accumulated per-epoch delta dirs into one (the family's
-    OPTIMIZE; plain union rewrite — epochs stay distinguishable via
-    the `_gate_epoch` column, so replay reads are unaffected)."""
-    from ..operators import index_ledger as ledger
-
-    def _rewrite(union: DataFrame, new_path: str) -> None:
-        union.write.mode("overwrite").parquet(new_path)
-
-    ledger.compact(spark, log_path, "gate_verdicts",
-                   "gate_verdicts_compact", _rewrite, gc=gc)
-
-
-def vacuum_verdict_log(log_path: str,
-                       grace_secs: float = 86400.0) -> list[str]:
-    """Delete crash-orphaned verdict delta/compact dirs older than the
-    grace lease (`index_ledger.vacuum`)."""
-    from ..operators import index_ledger as ledger
-
-    return ledger.vacuum(
-        log_path, "gate_verdicts",
-        ("gate_verdicts_delta_", "gate_verdicts_compact_"), grace_secs)
-
-
 def gate_stream_learning(
     spark,
     doc_stream: DataFrame,

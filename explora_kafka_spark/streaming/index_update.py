@@ -1,8 +1,7 @@
 """Streaming index maintenance: admitted batches appended into
 materialized serving indexes, exactly-once — the thin foreachBatch
-faces over the `operators/index_ledger` commit protocol. Round 12
-built the IVF face; round 13 adds the dedup-band and contamination-
-shingle faces (tier parity, VERDICT r12 #3/#6).
+faces over the `operators/index_ledger` commit protocol: the IVF,
+dedup-band and perceptual-hash faces.
 
 The round-12 maintenance triple (append / recall-drift / list-skew)
 assumed batch appends; production ingest is a STREAM of newly admitted
@@ -137,48 +136,6 @@ def dedup_index_update_stream(
                 and ledger.open_delta_count(index_path, "bands")
                 > compact_after):
             compact_dedup_index(df.sparkSession, index_path, gc=False)
-
-    writer = (
-        doc_stream.writeStream
-        .foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def shingle_index_update_stream(
-    spark,
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    stream_id: str | None = None,
-    n: int = 5,
-    compact_after: int | None = None,
-):
-    """Append a streaming (doc_id, text) source into the contamination
-    shingle index at `index_path`, one exactly-once committed batch
-    per epoch (`operators/contamination.update_shingle_index` with the
-    epoch id). Same contract as `dedup_index_update_stream` (incl. the
-    `compact_after` auto-OPTIMIZE cadence); the index's set invariant
-    (distinct `_h`) is kept by the in-write anti-join, the ledger
-    makes replays free."""
-    from ..operators import index_ledger as ledger
-    from ..operators.contamination import (
-        compact_shingle_index, update_shingle_index,
-    )
-
-    sid = stream_id if stream_id is not None else checkpoint
-
-    def _apply(df: DataFrame, epoch_id: int) -> None:
-        update_shingle_index(df.sparkSession, df, index_path, n=n,
-                             batch_id=epoch_id, stream_id=sid)
-        if (compact_after is not None
-                and ledger.open_delta_count(index_path, "train_shingles")
-                > compact_after):
-            compact_shingle_index(df.sparkSession, index_path, gc=False)
 
     writer = (
         doc_stream.writeStream

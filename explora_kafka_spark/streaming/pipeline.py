@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import literal_in
 from ..functions.timeutil import VIEW_RESOLUTIONS
 from ..plans.views import (
     DEFAULT_PRECISIONS,
@@ -180,6 +181,15 @@ def filter_metrics(readings: DataFrame, metrics: list[str] | None) -> DataFrame:
 #: partition-pruned MERGE INTO shape (IngestStream.java:372-394 upserts
 #: at lakehouse granularity)
 STORE_PARTITION_COLS = ("metric_id", "precision", "res", "ts_m")
+
+
+def _touched_partitions(keys):
+    """`(metric_id, precision, res, ts_m) IN (…)` over the key tuples a
+    merge touches: lands in the scan's PartitionFilters (prunes at
+    file-listing time) like an OR of conjunctions, but stays O(1)
+    expression depth when a wide delta touches thousands of partitions,
+    and is built in one JVM call whatever the key count."""
+    return literal_in([(f"({', '.join(STORE_PARTITION_COLS)})", list(keys))])
 
 _LATTICE_COLS = ("metric_id", "precision", "res", "gh", "ts",
                  "count", "sum", "avg", "min", "max")
@@ -466,16 +476,8 @@ class ParquetViewStore:
                 self._commit(new_v, effective_bid, old_v)
                 return True
             # ---- partition-pruned incremental path ----
-            # struct-IN over the partition columns: lands in the scan's
-            # PartitionFilters (prunes at file-listing time) like the
-            # OR-of-conjunctions form, but stays O(1) expression depth
-            # when a wide delta touches thousands of partitions
-            key_col = F.struct(*[F.col(c) for c in STORE_PARTITION_COLS])
-            key_lits = [
-                F.struct(*[F.lit(r[c]) for c in STORE_PARTITION_COLS])
-                for r in key_rows
-            ]
-            existing_touched = old_raw.filter(key_col.isin(*key_lits)).drop("ts_m")
+            existing_touched = old_raw.filter(
+                _touched_partitions(tuple(r) for r in key_rows)).drop("ts_m")
             merged = _with_ts_month(
                 incremental_update(existing_touched, delta.drop("ts_m"))
             ).persist()
@@ -561,17 +563,12 @@ class ParquetViewStore:
                     incremental_update(old_raw, partials))
                 old_v_linked = None
             else:
-                key_col = F.struct(
-                    *[F.col(c) for c in STORE_PARTITION_COLS])
-                key_lits = [
-                    F.struct(F.lit(r["metric_id"]), F.lit(p), F.lit(res),
-                             F.lit(r["ts_m"]))
+                existing_touched = old_raw.filter(_touched_partitions(
+                    (r["metric_id"], p, res, r["ts_m"])
                     for r in batch_keys
                     for p in precisions
                     for res in resolutions
-                ]
-                existing_touched = old_raw.filter(
-                    key_col.isin(*key_lits)).drop("ts_m")
+                )).drop("ts_m")
                 merged = _with_ts_month(
                     incremental_update(existing_touched, partials))
                 old_v_linked = old_v

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as E
+from explora_kafka_spark.plans import query as Q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -274,11 +275,20 @@ def test_time_predicates_reach_the_scan(plans):
     assert "ts" in scan_filters and (">=" in scan_filters or ">" in scan_filters)
 
 
-def test_large_covers_are_joinless_predicates(plans):
-    # >1024-cell bbox covers used to fall back to a broadcast semi-join;
-    # they now prefix-compress into a pure codegen predicate (no join, no
-    # broadcast build, no exchange on the probe side) — regression guard
-    # for the round-6 compress_cover path.
-    for name in ("snapshot_bbox_geohash",):
-        plan = plans[name]
+def test_large_covers_are_joinless_predicates(plans, spark):
+    # large covers prefix-compress (compress_cover) and ship as one SQL IN
+    # expression (no join, no broadcast build, no exchange on the probe
+    # side) up to COMPRESSED_COVER_LIMIT prefixes. The registry's bbox
+    # cover is 7,482 cells (538 prefixes); the route cover is 5,090 cells
+    # (1,463 prefixes), so it stays joinless only when the route path
+    # compresses with its alphabet.
+    route = Q.snapshot_route_geohashing(
+        E._geo_lattice(spark, SF_DIR, "geohash", 5, 3), "view", "count", 3,
+        "day", E._SNAP_DAY_MS, [(-50.0, -100.0), (-10.0, -20.0), (30.0, 60.0)],
+        2_500_000.0)
+    cases = {
+        "snapshot_bbox_geohash": plans["snapshot_bbox_geohash"],
+        "wide geohash route": route._jdf.queryExecution().executedPlan().toString(),
+    }
+    for name, plan in cases.items():
         assert "Join" not in plan, f"{name} still plans a join:\n{plan[:2000]}"

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -45,6 +46,19 @@ def test_history_route_ok(srv, spark):
     assert code == 200
     assert body["columns"] == ["timestamp", "avg"]
     assert body["metadata"] == {"metric_id": "view"}
+
+
+@pytest.mark.parametrize("cells", ["'", "\\", "') OR (1=1"])
+def test_history_route_quotes_cell_literals(srv, cells):
+    # cells are rendered into one SQL IN string: quotes and backslashes
+    # stay inside their literal, so they match nothing and raise nothing
+    code, body = _get(
+        f"{srv}/api/airquality/view/aggregate/avg/history"
+        f"?geohashes={urllib.parse.quote(cells)}&res=hour&gh_precision=6"
+    )
+    assert code == 200
+    assert body == {"columns": ["timestamp", "avg"], "data": [],
+                    "metadata": {"metric_id": "view"}}
 
 
 def test_history_route_400_matrix(srv):

@@ -5,6 +5,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from explora_kafka_spark.functions import geo
 from explora_kafka_spark.functions.timeutil import (
     interval_to_range,
     truncate_ts_ms,
@@ -154,6 +155,52 @@ def test_snapshot_prefix_equals_children_isin(lattice):
     a = {(r.gh, round(r.avg, 9)) for r in by_prefix.collect()}
     b = {(r.gh, round(r.avg, 9)) for r in by_isin.collect()}
     assert a == b and len(a) > 0
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_cover_limit_boundary_keeps_rows(lattice):
+    """4,096 cells ship as one IN expression, 4,097 as a broadcast
+    semi-join; both return the same rows. The padding cells are not hex,
+    so they never match an md5-derived cell."""
+    def snap(cells=None):
+        return Q.snapshot(lattice, "view", "count", 6, "day", 1704844800000,
+                          cells=cells)
+
+    real = [r.gh for r in snap().collect()[:100]]
+    pad = [f"z{i:05d}" for i in range(4097)]
+    at, above = (snap((real + pad)[:n]) for n in (4096, 4097))
+    assert "Join" not in _plan(at)
+    assert "BroadcastHashJoin" in _plan(above) and "LeftSemi" in _plan(above)
+    rows = at.collect()
+    assert rows == above.collect() and len(rows) > 0
+
+
+def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
+    """Building a snapshot plan takes about as many py4j round trips for
+    the 532-cell Antwerp cover (p6) as for a one-cell cover: the cover
+    reaches the JVM as one SQL string, not as one call chain per cell."""
+    import py4j.java_gateway as gw
+
+    sent = []
+    send = gw.GatewayClient.send_command
+    monkeypatch.setattr(gw.GatewayClient, "send_command",
+                        lambda client, *a, **kw: sent.append(1) or send(client, *a, **kw))
+
+    def calls(bbox):
+        before = len(sent)
+        Q.snapshot_bbox_geohashing(lattice, "view", "avg", 6, "min",
+                                   1704844800000, *bbox)
+        return len(sent) - before
+
+    one_cell = (51.2001, 4.4, 51.2, 4.4001)
+    antwerp = (51.311646, 4.306641, 51.168823, 4.504395)
+    assert len(geo.geohash_cover_bbox(*one_cell, 6)) == 1
+    assert len(geo.geohash_cover_bbox(*antwerp, 6)) > 500
+    calls(one_cell)  # first build warms lazily fetched JVM handles
+    assert calls(antwerp) <= calls(one_cell) + 5
 
 
 def test_interval_arithmetic():

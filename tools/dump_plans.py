@@ -33,9 +33,11 @@ CASES: dict[str, tuple[str, list[str]]] = {
         [r"FileScan", r"PartitionFilters", r"PushedFilters"],
     ),
     "snapshot_bbox_geohash": (
-        "A >1024-cell cover prefix-compresses (compress_cover) into a "
-        "joinless codegen predicate — no broadcast build, no exchange; "
-        "asserted join-free in tests/test_plans.py::"
+        "A 7,482-cell cover prefix-compresses (compress_cover) to 538 "
+        "prefixes and ships as one SQL IN expression (one IN per prefix "
+        "length) — no broadcast build, no exchange; only covers above "
+        "4,096 compressed prefixes become a broadcast semi-join. Asserted "
+        "join-free in tests/test_plans.py::"
         "test_large_covers_are_joinless_predicates.",
         [r"FileScan", r"PartitionFilters", r"Join", r"Exchange"],
     ),
