@@ -22,6 +22,21 @@ import __spark_entry__ as E  # noqa: E402
 from explora_kafka_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: the scale factor of the canonical profile; its cores are the host's
+CANONICAL_SF = "0.1"
+
+
+def profile_artifact_name(sf: str, parallelism: int) -> str:
+    return f"BENCH_FULL_sf{sf}_c{parallelism}.json"
+
+
+def full_artifact_name(sf: str, parallelism: int, cores: int | None) -> str:
+    """The file a run's full detail is named by: BENCH_FULL.json for the
+    canonical profile (sf0.1, one task slot per host core), else the
+    profile-suffixed name."""
+    if sf == CANONICAL_SF and parallelism == cores:
+        return "BENCH_FULL.json"
+    return profile_artifact_name(sf, parallelism)
 
 
 def main() -> None:
@@ -163,19 +178,15 @@ def main() -> None:
         "sf": sf_val,
         **attest,
     }
-    # Write the full detail under a profile-suffixed name ALWAYS (so an
-    # off-profile run — sf0.001 smoke, the driver's low-core scaling pass —
-    # can never clobber the canonical sf0.1 artifact: VERDICT r14 #2), and
-    # keep the canonical BENCH_FULL.json the driver-parsed stdout line
-    # points at.
+    # The full detail always goes under its profile-suffixed name; only
+    # the canonical profile also writes BENCH_FULL.json, so an off-profile
+    # run (an sf0.001 smoke, a low-core scaling pass) never overwrites it.
+    # The stdout line's "full" names the file the profile owns.
     here = os.path.dirname(os.path.abspath(__file__))
-    suffixed = os.path.join(
-        here, f"BENCH_FULL_sf{sf}_c{attest['parallelism']}.json")
-    with open(suffixed, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    full_path = os.path.join(here, "BENCH_FULL.json")
-    with open(full_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
+    full_name = full_artifact_name(sf, attest["parallelism"], os.cpu_count())
+    for name in {profile_artifact_name(sf, attest["parallelism"]), full_name}:
+        with open(os.path.join(here, name), "w") as f:
+            json.dump(full, f, indent=1, sort_keys=True)
 
     q_only = {k: v for k, v in timings.items() if k != "view_build"}
     slowest = dict(sorted(
@@ -190,7 +201,7 @@ def main() -> None:
         "n_queries": len(q_only),
         "queries_total": round(sum(v for v in q_only.values() if v >= 0), 3),
         "failed": failed,
-        "full": "BENCH_FULL.json",
+        "full": full_name,
         "sf": sf_val,
         **attest,
     }) + "\n")

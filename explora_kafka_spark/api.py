@@ -8,16 +8,32 @@ mirror QueryingService.java:46-114 (history) and :145-222 (snapshot);
 config whitelists mirror util/AppConfig.java:10-23. Number-parse errors
 reproduce Java's `NumberFormatException.getMessage()` format
 (`For input string: "x"`) so error bodies are byte-identical.
+
+Plan reuse: `handle_history` / `handle_snapshot` take an optional
+`PlanCache`, a bounded LRU (PLAN_CACHE_SIZE entries) of the final query
+DataFrames built on one lattice object. A repeated request collects the
+same DataFrame again, so it skips the cell cover and plan building, and
+Spark reuses that Dataset's physical plan and its already-materialized
+shuffle and broadcast stages. The key is the validated plan input, never
+the raw query string: a snapshot's (geo index, metric, aggregate,
+precision, res, ts truncated to res, bbox), so two `ts` in one grain
+share a plan; a history's `Q.history` / `Q.history_interval` arguments
+with from/to/now resolved. `src=raw` history reads the readings table,
+which no lattice versions, and is never cached. A request that raises
+leaves no entry behind. Callers that pass no cache build every time.
 """
 
 from __future__ import annotations
 
+import threading
 import time
+from collections import OrderedDict
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+from .functions.timeutil import truncate_ts_ms
 from .plans import query as Q
 
 # --- AppConfig.java:10-23 ---------------------------------------------------
@@ -200,15 +216,102 @@ def message_envelope(
 ) -> dict[str, Any]:
     """Serialize a 2-column query result to the reference's wire shape:
     {columns: [key, aggregate], data: [[key, value]...], metadata:
-    {metric_id}}. The reflection `getField(aggregate)` ≙ selecting the
-    aggregate column by name (L6)."""
+    {metric_id}}. `result` is a `Q.*` route's frame, already exactly
+    [key, aggregate] (`_agg_projection`, the reference's reflection
+    `getField(aggregate)`, L6), and is collected as it is: a re-select
+    would be a new Dataset with new exchanges, so a cached frame would
+    lose its materialized stages."""
     wire_key = "timestamp" if key_col == "timestamp" else "geohash"
-    rows = result.select(key_col, aggregate).collect()
+    rows = result.collect()
     return {
         "columns": [wire_key, aggregate],
         "data": [[r[0], r[1]] for r in rows],
         "metadata": {"metric_id": metric_id},
     }
+
+
+# ---------------------------------------------------------------------------
+# plan reuse
+# ---------------------------------------------------------------------------
+
+#: query frames a PlanCache holds before it evicts the least recently used
+PLAN_CACHE_SIZE = 256
+
+
+class PlanCache:
+    """Bounded LRU of final query DataFrames, all built on one lattice.
+
+    The cache is scoped to the lattice object it was bound to last: a
+    lookup or store for any other lattice misses or is dropped (an
+    identity check under the lock), so a plan built on an old lattice
+    while the served one is re-pointed is never served for the new one.
+    Reuse is safe because a lattice frame pins its input: the file
+    listing is fixed when the frame is created, and view-store versions
+    are immutable directories."""
+
+    def __init__(self, lattice: DataFrame | None = None):
+        self._lock = threading.Lock()
+        self._lattice = lattice
+        self._plans: OrderedDict[tuple, DataFrame] = OrderedDict()
+
+    def __len__(self) -> int:
+        return len(self._plans)
+
+    def bind(self, lattice: DataFrame) -> None:
+        """Scope the cache to `lattice`; plans built on another go."""
+        with self._lock:
+            if lattice is not self._lattice:
+                self._lattice = lattice
+                self._plans.clear()
+
+    def get(self, lattice: DataFrame, key: tuple) -> DataFrame | None:
+        with self._lock:
+            if lattice is not self._lattice:
+                return None
+            df = self._plans.get(key)
+            if df is not None:
+                self._plans.move_to_end(key)
+            return df
+
+    def put(self, lattice: DataFrame, key: tuple, df: DataFrame) -> None:
+        with self._lock:
+            if lattice is not self._lattice:
+                return
+            self._plans[key] = df
+            self._plans.move_to_end(key)
+            if len(self._plans) > PLAN_CACHE_SIZE:
+                self._plans.popitem(last=False)
+
+    def discard(self, key: tuple, df: DataFrame) -> None:
+        """Drop `key` if it still holds `df`."""
+        with self._lock:
+            if self._plans.get(key) is df:
+                del self._plans[key]
+
+
+def _answer(
+    plans: PlanCache | None,
+    lattice: DataFrame,
+    key: tuple,
+    build: Callable[[], DataFrame],
+    key_col: str,
+    aggregate: str,
+    metric_id: str,
+) -> dict[str, Any]:
+    """Envelope the cached frame for `key`, or `build()` one; only a
+    frame that collected without raising is kept."""
+    df = None if plans is None else plans.get(lattice, key)
+    if df is None:
+        df = build()
+    try:
+        body = message_envelope(df, key_col, aggregate, metric_id)
+    except Exception:
+        if plans is not None:
+            plans.discard(key, df)
+        raise
+    if plans is not None:
+        plans.put(lattice, key, df)
+    return body
 
 
 # ---------------------------------------------------------------------------
@@ -224,6 +327,7 @@ def handle_history(
     supported_precision=DEFAULT_SUPPORTED_PRECISION,
     now_ms: int | None = None,
     readings: DataFrame | None = None,
+    plans: PlanCache | None = None,
 ) -> dict[str, Any]:
     req = validate_history(
         metric_id, aggregate, params, supported_precision, now_ms
@@ -238,22 +342,33 @@ def handle_history(
             from_ms=None if req.from_ms <= 0 else req.from_ms,
             to_ms=now_ms if req.to_ms <= 0 else req.to_ms,
         )
-    elif req.mode == "spatial":
-        df = Q.history(
-            lattice, req.metric_id, req.aggregate, req.precision,
-            req.resolution, cells=req.geohashes,
-            from_ms=None if req.from_ms <= 0 else req.from_ms,
-            # reference clamps a missing 'to' to now
-            # (QueryingController.java:213-218)
-            to_ms=now_ms if req.to_ms <= 0 else req.to_ms,
-        )
+        return message_envelope(df, "timestamp", req.aggregate, req.metric_id)
+    if req.mode == "spatial":
+        from_ms = None if req.from_ms <= 0 else req.from_ms
+        # reference clamps a missing 'to' to now
+        # (QueryingController.java:213-218)
+        to_ms = now_ms if req.to_ms <= 0 else req.to_ms
+        key = ("history", req.metric_id, req.aggregate, req.precision,
+               req.resolution, tuple(req.geohashes), from_ms, to_ms)
+
+        def build() -> DataFrame:
+            return Q.history(
+                lattice, req.metric_id, req.aggregate, req.precision,
+                req.resolution, cells=req.geohashes, from_ms=from_ms,
+                to_ms=to_ms,
+            )
     else:
-        df = Q.history_interval(
-            lattice, req.metric_id, req.aggregate, req.precision,
-            req.interval, now_ms if req.from_ms <= 0 else req.from_ms,
-            cells=req.geohashes,
-        )
-    return message_envelope(df, "timestamp", req.aggregate, req.metric_id)
+        to_ms = now_ms if req.from_ms <= 0 else req.from_ms
+        key = ("history_interval", req.metric_id, req.aggregate,
+               req.precision, req.interval, to_ms, tuple(req.geohashes))
+
+        def build() -> DataFrame:
+            return Q.history_interval(
+                lattice, req.metric_id, req.aggregate, req.precision,
+                req.interval, to_ms, cells=req.geohashes,
+            )
+    return _answer(plans, lattice, key, build, "timestamp", req.aggregate,
+                   req.metric_id)
 
 
 def handle_snapshot(
@@ -263,18 +378,19 @@ def handle_snapshot(
     params: dict[str, str],
     geo_index: str = "geohashing",
     supported_precision=DEFAULT_SUPPORTED_PRECISION,
+    plans: PlanCache | None = None,
 ) -> dict[str, Any]:
     req = validate_snapshot(metric_id, aggregate, params, supported_precision)
     n, w, s, e = req.bbox[0], req.bbox[1], req.bbox[2], req.bbox[3]
     res = req.resolution or "min"
-    if geo_index == "quadtiling":
-        df = Q.snapshot_bbox_quadtiling(
-            lattice, req.metric_id, req.aggregate, req.precision, res,
-            req.ts_ms, n, w, s, e,
-        )
-    else:
-        df = Q.snapshot_bbox_geohashing(
-            lattice, req.metric_id, req.aggregate, req.precision, res,
-            req.ts_ms, n, w, s, e,
-        )
-    return message_envelope(df, "gh", req.aggregate, req.metric_id)
+    key = ("snapshot", geo_index, req.metric_id, req.aggregate, req.precision,
+           res, truncate_ts_ms(req.ts_ms, res), (n, w, s, e))
+
+    def build() -> DataFrame:
+        route = (Q.snapshot_bbox_quadtiling if geo_index == "quadtiling"
+                 else Q.snapshot_bbox_geohashing)
+        return route(lattice, req.metric_id, req.aggregate, req.precision,
+                     res, req.ts_ms, n, w, s, e)
+
+    return _answer(plans, lattice, key, build, "gh", req.aggregate,
+                   req.metric_id)

@@ -7,9 +7,19 @@ Routes (wire-identical paths and bodies):
     GET /api/airquality/{metricId}/aggregate/{aggregate}/snapshot
 
 Responses: 200 → Message envelope {columns, data, metadata};
-400 → ErrorMessage {errorMessage, errorCode}. The scatter-gather
+400 → ErrorMessage {errorMessage, errorCode}; any other failure → a
+fixed 500 ErrorMessage, its traceback logged through `logging` and never
+sent to the client. The scatter-gather
 `local=true` flag (QueryingController.java:123-210) has no equivalent —
 Spark executes the distributed merge itself (SURVEY §2.6 D2).
+
+Plan reuse: the context owns one `api.PlanCache` (at most
+`api.PLAN_CACHE_SIZE` final query DataFrames, least recently used
+evicted), scoped to the lattice object it serves. A repeated request,
+keyed by its validated plan inputs (see `api`), collects the DataFrame
+an earlier one built, skipping the cover, the plan building and Spark's
+already-materialized stages. Re-pointing `EngineContext.lattice` (e.g.
+at a view store's new version) empties the cache.
 
 Deliberately stdlib-only (no Flask/FastAPI in the sandbox); a production
 deployment would mount `handle_history`/`handle_snapshot` behind any
@@ -19,6 +29,7 @@ WSGI/ASGI framework unchanged.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -28,6 +39,11 @@ from pyspark.sql import DataFrame
 
 from . import api
 
+_log = logging.getLogger(__name__)
+
+#: the body of every 500: exception text can hold paths and plan details
+INTERNAL_ERROR = {"errorMessage": "internal server error", "errorCode": 500}
+
 _ROUTE = re.compile(
     r"^/api/airquality/(?P<metric>[^/]+)/aggregate/(?P<agg>[^/]+)"
     r"/(?P<shape>history|snapshot)$"
@@ -36,7 +52,8 @@ _ROUTE = re.compile(
 
 class EngineContext:
     """Everything the routes need: the materialized lattice, optional
-    bronze readings (src=raw), and config mirroring AppConfig env."""
+    bronze readings (src=raw), config mirroring AppConfig env, and the
+    plan cache scoped to the lattice."""
 
     def __init__(
         self,
@@ -46,11 +63,22 @@ class EngineContext:
         supported_precision=api.DEFAULT_SUPPORTED_PRECISION,
         now_ms: int | None = None,
     ):
+        self.plans = api.PlanCache()
         self.lattice = lattice
         self.readings = readings
         self.geo_index = geo_index
         self.supported_precision = supported_precision
         self.now_ms = now_ms
+
+    @property
+    def lattice(self) -> DataFrame:
+        return self._lattice
+
+    @lattice.setter
+    def lattice(self, lattice: DataFrame) -> None:
+        # plans built on the old lattice must not answer for the new one
+        self.plans.bind(lattice)
+        self._lattice = lattice
 
 
 def _make_handler(ctx: EngineContext):
@@ -83,18 +111,21 @@ def _make_handler(ctx: EngineContext):
                         ctx.lattice, m["metric"], m["agg"], params,
                         supported_precision=ctx.supported_precision,
                         now_ms=ctx.now_ms, readings=ctx.readings,
+                        plans=ctx.plans,
                     )
                 else:
                     body = api.handle_snapshot(
                         ctx.lattice, m["metric"], m["agg"], params,
                         geo_index=ctx.geo_index,
                         supported_precision=ctx.supported_precision,
+                        plans=ctx.plans,
                     )
                 self._send(200, body)
             except api.ApiError as exc:
                 self._send(exc.code, exc.body)
-            except Exception as exc:  # noqa: BLE001 — 500 with message
-                self._send(500, {"errorMessage": str(exc), "errorCode": 500})
+            except Exception:  # noqa: BLE001 — logged, not sent
+                _log.exception("%s failed", url.path)
+                self._send(500, INTERNAL_ERROR)
 
     return Handler
 

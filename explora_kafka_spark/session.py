@@ -8,7 +8,9 @@ truncation in UTC).
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -44,22 +46,30 @@ def get_spark(
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply engine-required runtime confs to an externally created session."""
+    """Apply engine-required runtime confs to an externally created session.
+
+    UTC is the one hard requirement. A tuning conf the deployment does not
+    let a session modify (pyspark's `AnalysisException`) is skipped with a
+    warning naming it; any other error propagates."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # right-size shuffles for a session left at Spark's stock default
-        # (the driver harness creates a bare local[N] session): 200-part
-        # shuffles on a small box waste more in task launch than they
-        # parallelize. Only touch the exact stock value — a deliberately
-        # configured session (any other setting) is left alone; on a real
-        # cluster the operator sizes this to the data, not the driver.
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            par = spark.sparkContext.defaultParallelism
-            spark.conf.set("spark.sql.shuffle.partitions", str(max(par * 2, 8)))
-    except Exception:
-        pass  # immutable on some deployments; UTC is the only hard requirement
+    tuning = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+    # right-size shuffles for a session left at Spark's stock default
+    # (the driver harness creates a bare local[N] session): 200-part
+    # shuffles on a small box waste more in task launch than they
+    # parallelize. Only touch the exact stock value — a deliberately
+    # configured session (any other setting) is left alone; on a real
+    # cluster the operator sizes this to the data, not the driver.
+    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        par = spark.sparkContext.defaultParallelism
+        tuning["spark.sql.shuffle.partitions"] = str(max(par * 2, 8))
+    for key, value in tuning.items():
+        try:
+            spark.conf.set(key, value)
+        except AnalysisException as exc:
+            warnings.warn(f"cannot set {key}: {exc}", stacklevel=2)
     return spark

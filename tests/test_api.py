@@ -4,11 +4,16 @@ Message envelope golden shape."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
 from explora_kafka_spark import api
+from explora_kafka_spark.plans import query as Q
 from explora_kafka_spark.plans.views import view_lattice
 from explora_kafka_spark.sources.tables import load_readings
+from tests.conftest import SMALL_BBOXES, SMALL_CELLS, SMALL_TS_MS
 
 NOW = 1706616000000  # 2024-01-30T12:00:00Z
 
@@ -139,3 +144,184 @@ def test_history_raw_dispatch(spark, lattice):
         supported_precision=(1,), now_ms=NOW, readings=readings,
     )
     assert env["columns"] == ["timestamp", "sum"]
+
+
+# ---------------------------------------------------------------------------
+# plan reuse (api.PlanCache)
+# ---------------------------------------------------------------------------
+
+def _bbox(name):
+    return ",".join(str(c) for c in SMALL_BBOXES[name])
+
+
+def _snapshot_case(geo_index, bbox):
+    ts = SMALL_TS_MS + 5_000
+    params = {"ts": str(ts), "bbox": _bbox(bbox), "res": "min",
+              "gh_precision": "6"}
+    # a ts in the same minute has the same plan inputs
+    return ("snapshot", geo_index, params, {**params, "ts": str(ts + 50_000)})
+
+
+def _history_case(extra):
+    return ("history", "", extra, extra)
+
+
+CACHE_CASES = {
+    "snapshot_geohashing": _snapshot_case("geohashing", "city"),
+    "snapshot_quadtiling": _snapshot_case("quadtiling", "quad"),
+    "history_res": _history_case({"res": "hour", "from": str(SMALL_TS_MS - 1),
+                                  "to": str(SMALL_TS_MS + 60_000)}),
+    "history_interval": _history_case({"interval": "1day"}),
+}
+ROUTES = {"snapshot_geohashing": "snapshot_bbox_geohashing",
+          "snapshot_quadtiling": "snapshot_bbox_quadtiling",
+          "history_res": "history", "history_interval": "history_interval"}
+
+
+def _call(case, lattice, params, plans=None):
+    kind, geo_index, _, _ = case
+    if kind == "snapshot":
+        return api.handle_snapshot(lattice, "m", "avg", params,
+                                   geo_index=geo_index,
+                                   supported_precision=(6,), plans=plans)
+    params = {"geohashes": ",".join(SMALL_CELLS["city"][:12]),
+              "gh_precision": "6", **params}
+    return api.handle_history(lattice, "m", "avg", params,
+                              supported_precision=(6,),
+                              now_ms=SMALL_TS_MS + 3_600_000, plans=plans)
+
+
+def _count_calls(monkeypatch, module, name):
+    calls = []
+    fn = getattr(module, name)
+    monkeypatch.setattr(module, name,
+                        lambda *a, **kw: calls.append(1) or fn(*a, **kw))
+    return calls
+
+
+@pytest.mark.parametrize("name", CACHE_CASES)
+def test_plan_cache_repeat_builds_no_plan(spark, small_lattice, monkeypatch,
+                                          name):
+    case, lattice = CACHE_CASES[name], small_lattice()
+    uncached = _call(case, lattice, case[2])
+    assert uncached["data"], "expected rows"
+    builds = _count_calls(monkeypatch, Q, ROUTES[name])
+    frame, collected = type(lattice), []
+    collect = frame.collect
+    monkeypatch.setattr(frame, "collect",
+                        lambda df: collected.append(df) or collect(df))
+    plans = api.PlanCache(lattice)
+    first = _call(case, lattice, case[2], plans)
+    again = _call(case, lattice, case[3], plans)
+    assert first == again == uncached
+    assert len(builds) == 1 and len(plans) == 1
+    # the hit collects the very frame the miss built, which keeps its
+    # materialized stages; a re-select would be a new Dataset
+    assert len(collected) == 2 and collected[0] is collected[1]
+
+
+def test_plan_cache_miss_adds_no_py4j_calls(spark, small_lattice, monkeypatch):
+    import py4j.java_gateway as gw
+
+    case, lattice = CACHE_CASES["snapshot_geohashing"], small_lattice()
+    sent = []
+    send = gw.GatewayClient.send_command
+
+    def counted(client, command, *a, **kw):
+        # object releases ("m" "d") come whenever Python's GC runs
+        if not command.startswith("m\nd\n"):
+            sent.append(1)
+        return send(client, command, *a, **kw)
+
+    monkeypatch.setattr(gw.GatewayClient, "send_command", counted)
+
+    def calls(plans):
+        before = len(sent)
+        _call(case, lattice, case[2], plans)
+        return len(sent) - before
+
+    calls(None)  # warms lazily fetched JVM handles
+    uncached = calls(None)
+    plans = api.PlanCache(lattice)
+    assert calls(plans) <= uncached  # a miss
+    assert calls(plans) < uncached / 2  # a hit: the collect only
+
+
+def test_plan_cache_is_scoped_to_its_lattice(spark, small_lattice, monkeypatch):
+    case = CACHE_CASES["snapshot_geohashing"]
+    old, new = small_lattice(), small_lattice(scale=2.0)
+    want_old, want_new = _call(case, old, case[2]), _call(case, new, case[2])
+    assert want_old != want_new
+    plans = api.PlanCache(old)
+    assert _call(case, old, case[2], plans) == want_old
+    plans.bind(new)
+    assert len(plans) == 0
+    # a request still on the old lattice builds and stores nothing
+    builds = _count_calls(monkeypatch, Q, "snapshot_bbox_geohashing")
+    assert _call(case, old, case[2], plans) == want_old
+    assert len(plans) == 0
+    assert _call(case, new, case[2], plans) == want_new
+    assert _call(case, new, case[2], plans) == want_new
+    assert len(builds) == 2 and len(plans) == 1
+
+
+def test_plan_cache_evicts_least_recently_used():
+    lattice = object()
+    plans = api.PlanCache(lattice)
+    for i in range(api.PLAN_CACHE_SIZE):
+        plans.put(lattice, (i,), i)
+    assert plans.get(lattice, (0,)) == 0  # now the most recent
+    for i in range(api.PLAN_CACHE_SIZE, api.PLAN_CACHE_SIZE + 10):
+        plans.put(lattice, (i,), i)
+        assert len(plans) == api.PLAN_CACHE_SIZE
+    assert plans.get(lattice, (0,)) == 0
+    assert [plans.get(lattice, (i,)) for i in range(1, 11)] == [None] * 10
+    assert plans.get(lattice, (11,)) == 11
+    assert plans.get(object(), (11,)) is None
+
+
+def test_plan_cache_stress_keeps_scope_and_bound():
+    # threads store, look up and re-bind at once; every value names the
+    # lattice it was stored for, so a plan served across a re-bind shows
+    lattices = [object() for _ in range(3)]
+    plans, wrong, interval = api.PlanCache(lattices[0]), [], sys.getswitchinterval()
+
+    def worker(w):
+        for i in range(3000):
+            lattice = lattices[(w + i // 500) % len(lattices)]
+            if i % 700 == 0:
+                plans.bind(lattice)
+            key = ((w * 7 + i) % (2 * api.PLAN_CACHE_SIZE),)
+            got = plans.get(lattice, key)
+            if got is not None and got is not lattice:
+                wrong.append((w, i))
+            plans.put(lattice, key, lattice)
+            if len(plans) > api.PLAN_CACHE_SIZE:
+                wrong.append(("bound", len(plans)))
+
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert wrong == []
+
+
+def test_plan_cache_skips_raw_history(spark, lattice, monkeypatch):
+    readings = load_readings(spark, "/root/testdata/sf0.001")
+    builds = _count_calls(monkeypatch, Q, "history_raw")
+    plans = api.PlanCache(lattice)
+    for _ in range(2):
+        api.handle_history(
+            lattice, "error", "sum",
+            {"geohashes": "u,0,1", "res": "min", "src": "raw",
+             "gh_precision": "1"},
+            supported_precision=(1,), now_ms=NOW, readings=readings,
+            plans=plans,
+        )
+    assert len(builds) == 2 and len(plans) == 0

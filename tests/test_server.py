@@ -3,15 +3,18 @@
 from __future__ import annotations
 
 import json
+import logging
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
 
 import pytest
 
-from explora_kafka_spark import server
+from explora_kafka_spark import api, server
 from explora_kafka_spark.plans.views import view_lattice
 from explora_kafka_spark.sources.tables import load_readings
+from tests.conftest import SMALL_BBOXES, SMALL_TS_MS
 
 NOW = 1706616000000
 
@@ -96,3 +99,112 @@ def test_snapshot_route_400(srv):
 def test_unknown_route_404(srv):
     code, body = _get(f"{srv}/api/nope")
     assert code == 404
+
+
+# ---------------------------------------------------------------------------
+# plan reuse, concurrency and failures
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def small_srv(small_lattice):
+    ctx = server.EngineContext(small_lattice(), supported_precision=(6,),
+                               now_ms=NOW)
+    s = server.serve(ctx)
+    yield ctx, f"http://127.0.0.1:{s.server_address[1]}"
+    s.shutdown()
+    s.server_close()
+
+
+def _snapshot_url(base, bbox, agg="avg"):
+    n, w, s, e = SMALL_BBOXES[bbox]
+    return (f"{base}/api/airquality/m/aggregate/{agg}/snapshot"
+            f"?ts={SMALL_TS_MS}&bbox={n},{w},{s},{e}&res=min&gh_precision=6")
+
+
+def _uncached(lattice, bbox, agg="avg"):
+    return api.handle_snapshot(
+        lattice, "m", agg,
+        {"ts": str(SMALL_TS_MS), "res": "min", "gh_precision": "6",
+         "bbox": ",".join(str(c) for c in SMALL_BBOXES[bbox])},
+        supported_precision=(6,))
+
+
+def test_repoint_serves_the_new_lattice(small_srv, small_lattice):
+    ctx, base = small_srv
+    old, other = ctx.lattice, small_lattice(scale=3.0)
+    want_old, want_other = _uncached(old, "city"), _uncached(other, "city")
+    assert want_old["data"] and want_old != want_other
+    for _ in range(2):
+        assert _get(_snapshot_url(base, "city")) == (200, want_old)
+    assert len(ctx.plans) == 1
+    ctx.lattice = other
+    assert len(ctx.plans) == 0
+    for _ in range(2):
+        assert _get(_snapshot_url(base, "city")) == (200, want_other)
+    assert len(ctx.plans) == 1
+
+
+def test_cached_requests_answer_concurrently(small_srv):
+    # the city takes the IN-predicate path, the strip the broadcast join
+    ctx, base = small_srv
+    cases = [(bbox, agg) for bbox in ("city", "strip") for agg in ("avg", "sum", "count")]
+    want = {c: _uncached(ctx.lattice, *c) for c in cases}
+    assert all(body["data"] for body in want.values())
+    for c in cases:  # build every plan once
+        assert _get(_snapshot_url(base, *c)) == (200, want[c])
+    mismatches = []
+
+    def client(i):
+        for j in range(15):
+            c = cases[(i + j) % len(cases)]
+            got = _get(_snapshot_url(base, *c))
+            if got != (200, want[c]):
+                mismatches.append((c, got))
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert mismatches == []
+    assert len(ctx.plans) == len(cases)
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["miss", "hit"])
+def test_failed_collect_is_not_cached(small_srv, spark, monkeypatch, cached):
+    ctx, base = small_srv
+    want = _uncached(ctx.lattice, "city")
+    if cached:
+        assert _get(_snapshot_url(base, "city")) == (200, want)
+        assert len(ctx.plans) == 1
+    frame = type(spark.range(0))
+    collect, failures = frame.collect, []
+
+    def collect_once_failing(df):
+        if not failures:
+            failures.append(1)
+            raise RuntimeError("executor lost")
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", collect_once_failing)
+    assert _get(_snapshot_url(base, "city")) == (500, server.INTERNAL_ERROR)
+    assert len(ctx.plans) == 0
+    assert _get(_snapshot_url(base, "city")) == (200, want)
+    assert len(ctx.plans) == 1
+
+
+def test_500_body_hides_exception_text(small_srv, monkeypatch, caplog):
+    _, base = small_srv
+    secret = "/srv/views/v0007/part-00000.parquet"
+
+    def fail(*a, **kw):
+        raise FileNotFoundError(f"no such file: {secret}")
+
+    monkeypatch.setattr(api, "handle_snapshot", fail)
+    with caplog.at_level(logging.ERROR, logger=server.__name__):
+        code, body = _get(_snapshot_url(base, "city"))
+    assert (code, body) == (500, server.INTERNAL_ERROR)
+    assert secret not in json.dumps(body)
+    assert secret in caplog.text  # the traceback goes to the log
