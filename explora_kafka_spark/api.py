@@ -9,18 +9,18 @@ config whitelists mirror util/AppConfig.java:10-23. Number-parse errors
 reproduce Java's `NumberFormatException.getMessage()` format
 (`For input string: "x"`) so error bodies are byte-identical.
 
-Plan reuse: `handle_history` / `handle_snapshot` take an optional
-`PlanCache`, a bounded LRU (PLAN_CACHE_SIZE entries) of the final query
-DataFrames built on one lattice object. A repeated request collects the
-same DataFrame again, so it skips the cell cover and plan building, and
-Spark reuses that Dataset's physical plan and its already-materialized
-shuffle and broadcast stages. The key is the validated plan input, never
-the raw query string: a snapshot's (geo index, metric, aggregate,
-precision, res, ts truncated to res, bbox), so two `ts` in one grain
-share a plan; a history's `Q.history` / `Q.history_interval` arguments
-with from/to/now resolved. `src=raw` history reads the readings table,
-which no lattice versions, and is never cached. A request that raises
-leaves no entry behind. Callers that pass no cache build every time.
+Answer reuse: `handle_history` / `handle_snapshot` take an optional
+`PlanCache`, a bounded LRU of the answers (collected rows) of plans built
+on one lattice object. A repeated request rebuilds its envelope from the
+stored rows: no cell cover, no plan building and no Spark job. The key
+is the validated plan input, never the raw query string: a snapshot's
+(geo index, metric, aggregate, precision, res, ts truncated to res,
+bbox), so two `ts` in one grain share an answer; a history's
+`Q.history` / `Q.history_interval` arguments with from/to/now resolved.
+The cache holds at most PLAN_CACHE_SIZE answers and PLAN_CACHE_ROWS data
+rows in total. `src=raw` history reads the readings table, which no
+lattice versions, and is never cached. Only an answer that collected is
+stored. Callers that pass no cache build every time.
 """
 
 from __future__ import annotations
@@ -211,18 +211,10 @@ def validate_snapshot(
 # ---------------------------------------------------------------------------
 
 
-def message_envelope(
-    result: DataFrame, key_col: str, aggregate: str, metric_id: str
-) -> dict[str, Any]:
-    """Serialize a 2-column query result to the reference's wire shape:
-    {columns: [key, aggregate], data: [[key, value]...], metadata:
-    {metric_id}}. `result` is a `Q.*` route's frame, already exactly
-    [key, aggregate] (`_agg_projection`, the reference's reflection
-    `getField(aggregate)`, L6), and is collected as it is: a re-select
-    would be a new Dataset with new exchanges, so a cached frame would
-    lose its materialized stages."""
+def _envelope(rows, key_col: str, aggregate: str,
+              metric_id: str) -> dict[str, Any]:
+    """A new envelope around (key, value) rows."""
     wire_key = "timestamp" if key_col == "timestamp" else "geohash"
-    rows = result.collect()
     return {
         "columns": [wire_key, aggregate],
         "data": [[r[0], r[1]] for r in rows],
@@ -230,63 +222,90 @@ def message_envelope(
     }
 
 
+def message_envelope(
+    result: DataFrame, key_col: str, aggregate: str, metric_id: str
+) -> dict[str, Any]:
+    """Serialize a 2-column query result to the reference's wire shape:
+    {columns: [key, aggregate], data: [[key, value]...], metadata:
+    {metric_id}}. `result` is a `Q.*` route's frame, already exactly
+    [key, aggregate] (`_agg_projection`, the reference's reflection
+    `getField(aggregate)`, L6), and is collected as it is."""
+    return _envelope(result.collect(), key_col, aggregate, metric_id)
+
+
 # ---------------------------------------------------------------------------
-# plan reuse
+# answer reuse
 # ---------------------------------------------------------------------------
 
-#: query frames a PlanCache holds before it evicts the least recently used
+#: answers a PlanCache holds before it evicts the least recently used
 PLAN_CACHE_SIZE = 256
+#: data rows all of a PlanCache's answers hold together (a year of `min`
+#: history is 525,600 rows, so the entry bound alone does not bound
+#: memory); least recently used answers go until the total fits, and an
+#: answer larger than this is not stored
+PLAN_CACHE_ROWS = 1 << 18
 
 
 class PlanCache:
-    """Bounded LRU of final query DataFrames, all built on one lattice.
+    """Bounded LRU of plan answers (collected rows, tuples of tuples),
+    all computed on one lattice.
 
     The cache is scoped to the lattice object it was bound to last: a
     lookup or store for any other lattice misses or is dropped (an
-    identity check under the lock), so a plan built on an old lattice
-    while the served one is re-pointed is never served for the new one.
-    Reuse is safe because a lattice frame pins its input: the file
-    listing is fixed when the frame is created, and view-store versions
-    are immutable directories."""
+    identity check under the lock), so an answer computed on an old
+    lattice while the served one is re-pointed is never served for the
+    new one. Reuse is safe because a lattice frame pins its input: the
+    file listing is fixed when the frame is created, and view-store
+    versions are immutable directories, so the plan would collect the
+    same rows again. Holding rows, not DataFrames, pins no shuffle files
+    or broadcast blocks."""
 
     def __init__(self, lattice: DataFrame | None = None):
         self._lock = threading.Lock()
         self._lattice = lattice
-        self._plans: OrderedDict[tuple, DataFrame] = OrderedDict()
+        # key -> (answer, its data rows), least recently used first
+        self._answers: OrderedDict[tuple, tuple[Any, int]] = OrderedDict()
+        self._rows = 0
 
     def __len__(self) -> int:
-        return len(self._plans)
+        return len(self._answers)
+
+    @property
+    def rows(self) -> int:
+        """Data rows the stored answers hold together."""
+        return self._rows
 
     def bind(self, lattice: DataFrame) -> None:
-        """Scope the cache to `lattice`; plans built on another go."""
+        """Scope the cache to `lattice`; answers computed on another go."""
         with self._lock:
             if lattice is not self._lattice:
                 self._lattice = lattice
-                self._plans.clear()
+                self._answers.clear()
+                self._rows = 0
 
-    def get(self, lattice: DataFrame, key: tuple) -> DataFrame | None:
+    def get(self, lattice: DataFrame, key: tuple) -> Any:
         with self._lock:
             if lattice is not self._lattice:
                 return None
-            df = self._plans.get(key)
-            if df is not None:
-                self._plans.move_to_end(key)
-            return df
+            entry = self._answers.get(key)
+            if entry is None:
+                return None
+            self._answers.move_to_end(key)
+            return entry[0]
 
-    def put(self, lattice: DataFrame, key: tuple, df: DataFrame) -> None:
+    def put(self, lattice: DataFrame, key: tuple, answer: Any,
+            rows: int = 1) -> None:
+        """Store `answer`, weighing `rows` against PLAN_CACHE_ROWS."""
         with self._lock:
-            if lattice is not self._lattice:
+            if lattice is not self._lattice or rows > PLAN_CACHE_ROWS:
                 return
-            self._plans[key] = df
-            self._plans.move_to_end(key)
-            if len(self._plans) > PLAN_CACHE_SIZE:
-                self._plans.popitem(last=False)
-
-    def discard(self, key: tuple, df: DataFrame) -> None:
-        """Drop `key` if it still holds `df`."""
-        with self._lock:
-            if self._plans.get(key) is df:
-                del self._plans[key]
+            _, replaced = self._answers.pop(key, (None, 0))
+            self._answers[key] = (answer, rows)
+            self._rows += rows - replaced
+            while (len(self._answers) > PLAN_CACHE_SIZE
+                   or self._rows > PLAN_CACHE_ROWS):
+                _, (_, evicted) = self._answers.popitem(last=False)
+                self._rows -= evicted
 
 
 def _answer(
@@ -298,19 +317,15 @@ def _answer(
     aggregate: str,
     metric_id: str,
 ) -> dict[str, Any]:
-    """Envelope the cached frame for `key`, or `build()` one; only a
-    frame that collected without raising is kept."""
-    df = None if plans is None else plans.get(lattice, key)
-    if df is None:
-        df = build()
-    try:
-        body = message_envelope(df, key_col, aggregate, metric_id)
-    except Exception:
-        if plans is not None:
-            plans.discard(key, df)
-        raise
+    """A new envelope around the stored answer for `key`, or `build()`'s
+    collected; an answer is stored only after its collect returned."""
+    rows = None if plans is None else plans.get(lattice, key)
+    if rows is not None:
+        return _envelope(rows, key_col, aggregate, metric_id)
+    body = message_envelope(build(), key_col, aggregate, metric_id)
     if plans is not None:
-        plans.put(lattice, key, df)
+        rows = tuple((k, v) for k, v in body["data"])
+        plans.put(lattice, key, rows, len(rows))
     return body
 
 

@@ -406,6 +406,18 @@ def _check_bloom_k(k: int) -> None:
             f"slice per family member); got {k}")
 
 
+#: largest bitmap a family member can address: each position is a
+#: 32-bit digest slice mod m_bits, so bits at 2^32 and above stay unset
+_BLOOM_MAX_M = 1 << 32
+
+
+def _check_bloom_m(m_bits: int) -> None:
+    if not 1 <= m_bits <= _BLOOM_MAX_M:
+        raise ValueError(
+            f"bloom m_bits must be in 1..2^32 (positions are 32-bit "
+            f"digest slices); got {m_bits}")
+
+
 def _bloom_digest_col(h: Column) -> Column:
     """The per-hash md5 digest every family member slices."""
     return F.md5(h.cast("string"))
@@ -465,6 +477,7 @@ def build_bloom_bitmap(spark, index_path: str, m_bits: int = 1 << 21,
     bit_or is commutative, so production can instead MERGE a delta's
     fold into a stored bitmap incrementally (the HLL property)."""
     _check_bloom_k(k)
+    _check_bloom_m(m_bits)
     train = _spread_index(read_shingle_index(spark, index_path))
     pos = F.explode(F.array(*[
         _bloom_pos_from_digest(F.col("_dig"), i, m_bits) for i in range(k)
@@ -493,6 +506,7 @@ def _bloom_probe(probes: DataFrame, bitmap: DataFrame, m_bits: int,
     from operator import and_ as _and
 
     _check_bloom_k(k)
+    _check_bloom_m(m_bits)
     had_dig = "_dig" in probes.columns
     if not had_dig:
         probes = probes.withColumn("_dig", _bloom_digest_col(F.col("_h")))
@@ -719,6 +733,8 @@ def contamination_bloom_sweep(
     exact joins; every number is bit-identical (global sums equal the
     summed per-key audit rows), so the DuckDB mirror is unchanged."""
     _check_bloom_k(k)
+    for m in m_list:
+        _check_bloom_m(m)
     train = read_shingle_index(spark, index_path)
     # one fold, every rung: ~sum(m/32) rows, statistic-sized. ONE md5
     # digest per index hash feeds every (rung, member) position — the

@@ -13,13 +13,13 @@ sent to the client. The scatter-gather
 `local=true` flag (QueryingController.java:123-210) has no equivalent —
 Spark executes the distributed merge itself (SURVEY §2.6 D2).
 
-Plan reuse: the context owns one `api.PlanCache` (at most
-`api.PLAN_CACHE_SIZE` final query DataFrames, least recently used
-evicted), scoped to the lattice object it serves. A repeated request,
-keyed by its validated plan inputs (see `api`), collects the DataFrame
-an earlier one built, skipping the cover, the plan building and Spark's
-already-materialized stages. Re-pointing `EngineContext.lattice` (e.g.
-at a view store's new version) empties the cache.
+Answer reuse: the context owns one `api.PlanCache` (at most
+`api.PLAN_CACHE_SIZE` answers and `api.PLAN_CACHE_ROWS` data rows, least
+recently used evicted), scoped to the lattice object it serves. A
+repeated request, keyed by its validated plan inputs (see `api`), is
+answered from the rows an earlier one collected: no cover, no plan
+building, no Spark job. Re-pointing `EngineContext.lattice` (e.g. at a
+view store's new version) empties the cache.
 
 Deliberately stdlib-only (no Flask/FastAPI in the sandbox); a production
 deployment would mount `handle_history`/`handle_snapshot` behind any
@@ -53,7 +53,7 @@ _ROUTE = re.compile(
 class EngineContext:
     """Everything the routes need: the materialized lattice, optional
     bronze readings (src=raw), config mirroring AppConfig env, and the
-    plan cache scoped to the lattice."""
+    answer cache scoped to the lattice."""
 
     def __init__(
         self,
@@ -76,7 +76,7 @@ class EngineContext:
 
     @lattice.setter
     def lattice(self, lattice: DataFrame) -> None:
-        # plans built on the old lattice must not answer for the new one
+        # answers from the old lattice must not answer for the new one
         self.plans.bind(lattice)
         self._lattice = lattice
 

@@ -24,6 +24,13 @@ def get_spark(
     Defaults target the driver harness (local[N]); on a real cluster the same
     configs apply, only master/shuffle sizing change. AQE is on so skewed cell
     keys and over-partitioned shuffles get re-planned at runtime.
+
+    PySpark's DataFrame-debugging call-site capture is off: with it on,
+    every Column function walks the Python stack and makes extra py4j
+    round trips (active session, a conf read, origin set/clear), about
+    two thirds of a served plan's calls. The only loss is the Python
+    call-site section of an AnalysisException's text. It is a static
+    conf, so only a session this factory creates gets it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     builder = (
@@ -38,6 +45,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     # Ensure UTC even when reusing a session created elsewhere (driver harness).
@@ -50,7 +58,9 @@ def configure(spark: SparkSession) -> SparkSession:
 
     UTC is the one hard requirement. A tuning conf the deployment does not
     let a session modify (pyspark's `AnalysisException`) is skipped with a
-    warning naming it; any other error propagates."""
+    warning naming it; any other error propagates. Static confs cannot be
+    set here, so `get_spark`'s `spark.python.sql.dataFrameDebugging.enabled`
+    is not among them: on a running session it would only warn."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     tuning = {
         "spark.sql.adaptive.enabled": "true",

@@ -215,9 +215,8 @@ def test_plan_cache_repeat_builds_no_plan(spark, small_lattice, monkeypatch,
     again = _call(case, lattice, case[3], plans)
     assert first == again == uncached
     assert len(builds) == 1 and len(plans) == 1
-    # the hit collects the very frame the miss built, which keeps its
-    # materialized stages; a re-select would be a new Dataset
-    assert len(collected) == 2 and collected[0] is collected[1]
+    # the hit answers from the stored rows: no Spark job at all
+    assert len(collected) == 1
 
 
 def test_plan_cache_miss_adds_no_py4j_calls(spark, small_lattice, monkeypatch):
@@ -245,6 +244,84 @@ def test_plan_cache_miss_adds_no_py4j_calls(spark, small_lattice, monkeypatch):
     plans = api.PlanCache(lattice)
     assert calls(plans) <= uncached  # a miss
     assert calls(plans) < uncached / 2  # a hit: the collect only
+
+
+#: py4j commands building the small city snapshot plan may take (it takes
+#: 100); with PySpark's call-site capture on and a global sort it took 365
+PLAN_PY4J_BUDGET = 110
+
+
+def test_snapshot_plan_build_stays_in_py4j_budget(spark, small_lattice,
+                                                  monkeypatch):
+    import py4j.java_gateway as gw
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    lattice, sent = small_lattice(), []
+    send = gw.GatewayClient.send_command
+
+    def counted(client, command, *a, **kw):
+        if not command.startswith("m\nd\n"):  # object releases, as above
+            sent.append(1)
+        return send(client, command, *a, **kw)
+
+    monkeypatch.setattr(gw.GatewayClient, "send_command", counted)
+
+    def calls():
+        before = len(sent)
+        Q.snapshot_bbox_geohashing(lattice, "m", "avg", 6, "min", SMALL_TS_MS,
+                                   *SMALL_BBOXES["city"])
+        return len(sent) - before
+
+    calls()  # warms lazily fetched JVM handles
+    assert calls() <= PLAN_PY4J_BUDGET
+
+
+@pytest.mark.parametrize("name", CACHE_CASES)
+def test_plan_cache_hit_body_is_fresh(spark, small_lattice, name):
+    case, lattice = CACHE_CASES[name], small_lattice()
+    plans = api.PlanCache(lattice)
+    first = _call(case, lattice, case[2], plans)
+    want = _call(case, lattice, case[2])
+    assert first == want and want["data"]
+    for body in (first, _call(case, lattice, case[3], plans)):
+        body["data"][0][1] = "changed"
+        body["data"].append(["extra", 0])
+        body["columns"].append("extra")
+        body["metadata"]["metric_id"] = "changed"
+    assert _call(case, lattice, case[3], plans) == want
+
+
+def test_plan_cache_does_not_store_an_answer_over_the_row_bound(
+        spark, small_lattice, monkeypatch):
+    case, lattice = CACHE_CASES["snapshot_geohashing"], small_lattice()
+    rows = len(_call(case, lattice, case[2])["data"])
+    builds = _count_calls(monkeypatch, Q, ROUTES["snapshot_geohashing"])
+    plans = api.PlanCache(lattice)
+    monkeypatch.setattr(api, "PLAN_CACHE_ROWS", rows - 1)
+    for _ in range(2):
+        _call(case, lattice, case[2], plans)
+    assert len(builds) == 2 and len(plans) == 0 and plans.rows == 0
+    monkeypatch.setattr(api, "PLAN_CACHE_ROWS", rows)
+    for _ in range(2):
+        _call(case, lattice, case[2], plans)
+    assert len(builds) == 3 and len(plans) == 1 and plans.rows == rows
+
+
+def test_plan_cache_evicts_down_to_the_row_bound():
+    lattice, bound = object(), api.PLAN_CACHE_ROWS
+    plans = api.PlanCache(lattice)
+    third = bound // 3
+    for i in range(3):
+        plans.put(lattice, (i,), i, third)
+    plans.put(lattice, ("over",), "over", bound + 1)  # dropped, evicts nothing
+    assert len(plans) == 3 and plans.rows == 3 * third
+    assert plans.get(lattice, (0,)) == 0  # now the most recent
+    plans.put(lattice, (3,), 3, third)
+    assert plans.rows <= bound
+    assert [plans.get(lattice, (i,)) for i in range(4)] == [0, None, 2, 3]
+    plans.put(lattice, (0,), 0, bound)  # a replaced answer's rows leave
+    assert plans.rows == bound and len(plans) == 1
+    assert plans.get(lattice, (0,)) == 0
 
 
 def test_plan_cache_is_scoped_to_its_lattice(spark, small_lattice, monkeypatch):

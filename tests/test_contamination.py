@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from explora_kafka_spark.operators import contamination as C
@@ -536,3 +537,10 @@ def test_bloom_sweep_rungs_consistent(spark, tmp_path):
     assert fps[-1] < fps[0]    # growing the bitmap pays off
     for r in sweep:
         assert r["n_bloom_hits"] >= r["n_contaminated"]
+
+
+def test_bloom_m_bits_fits_the_32_bit_position_family():
+    C._check_bloom_m(2**32)
+    for m_bits in (2**32 + 1, 0):
+        with pytest.raises(ValueError, match="m_bits"):
+            C._check_bloom_m(m_bits)

@@ -14,6 +14,7 @@ from explora_kafka_spark.functions.timeutil import (
 )
 from explora_kafka_spark.plans import query as Q
 from explora_kafka_spark.plans import views as V
+from tests.conftest import SMALL_BBOXES, SMALL_CELLS, SMALL_TS_MS
 
 
 @pytest.fixture(scope="module")
@@ -201,6 +202,65 @@ def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
     assert len(geo.geohash_cover_bbox(*antwerp, 6)) > 500
     calls(one_cell)  # first build warms lazily fetched JVM handles
     assert calls(antwerp) <= calls(one_cell) + 5
+
+
+@pytest.fixture(scope="module")
+def spread_lattice(spark, small_lattice, tmp_path_factory):
+    """`small_lattice` over ten minutes, written as 8 parquet files, so
+    every slice spans several files and input partitions."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    base = small_lattice()
+    minutes = [base.withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {k} MINUTES"))
+               for k in range(10)]
+    path = str(tmp_path_factory.mktemp("spread") / "lattice")
+    reduce(DataFrame.unionByName, minutes).repartition(8).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+TAIL_ROUTES = {
+    "history": lambda lat: Q.history(
+        lat, "m", "sum", 6, "min", cells=SMALL_CELLS["city"]),
+    "snapshot_in": lambda lat: Q.snapshot_bbox_geohashing(
+        lat, "m", "avg", 6, "min", SMALL_TS_MS + 120_000, *SMALL_BBOXES["city"]),
+    "snapshot_strip": lambda lat: Q.snapshot_bbox_geohashing(
+        lat, "m", "count", 6, "min", SMALL_TS_MS, *SMALL_BBOXES["strip"]),
+}
+
+
+@pytest.fixture
+def uncoalesced_shuffles(spark):
+    """AQE keeps every shuffle partition, so a tiny result still spans
+    several partitions."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("route", TAIL_ROUTES)
+def test_served_result_takes_one_shuffle(spread_lattice, uncoalesced_shuffles,
+                                         monkeypatch, route):
+    """A served route sorts its result in one partition: no range
+    partitioning, at most one hash exchange, and the rows and order of
+    the same aggregate under a global `orderBy(key)`."""
+    files = (spread_lattice.filter(F.col("res") == "min")
+             .select(F.input_file_name()).distinct().count())
+    assert files >= 4
+    df = TAIL_ROUTES[route](spread_lattice)
+    rows = df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert "rangepartitioning" not in plan
+    assert plan.count("Exchange hashpartitioning") <= 1
+    if route == "snapshot_strip":
+        assert "BroadcastHashJoin" in plan
+    else:
+        assert "Join" not in plan
+    monkeypatch.setattr(Q, "_sorted", lambda d, key: d.orderBy(key))
+    assert len(rows) > 1 and rows == TAIL_ROUTES[route](spread_lattice).collect()
 
 
 def test_interval_arithmetic():

@@ -35,10 +35,13 @@ CASES: dict[str, tuple[str, list[str]]] = {
     "snapshot_bbox_geohash": (
         "A 7,482-cell cover prefix-compresses (compress_cover) to 538 "
         "prefixes and ships as one SQL IN expression (one IN per prefix "
-        "length) — no broadcast build, no exchange; only covers above "
-        "4,096 compressed prefixes become a broadcast semi-join. Asserted "
+        "length) — no broadcast build; only covers above 4,096 "
+        "compressed prefixes become a broadcast semi-join. Asserted "
         "join-free in tests/test_plans.py::"
-        "test_large_covers_are_joinless_predicates.",
+        "test_large_covers_are_joinless_predicates. The one exchange is "
+        "the per-cell merge's hash shuffle: the result sorts within one "
+        "partition, with no range-partition exchange "
+        "(tests/test_views_query.py::test_served_result_takes_one_shuffle).",
         [r"FileScan", r"PartitionFilters", r"Join", r"Exchange"],
     ),
     "ann_topk_ivf_indexed": (
