@@ -18,9 +18,16 @@ These are the engine's two query shapes (QueryingService.java:38-143):
   `IN` expression, one `IN` per prefix length, built in a single JVM call.
   Above it, the cover becomes a broadcast semi-join.
 
+The lattice holds one row per (metric_id, precision, res, gh, ts): every
+store writer keeps that key unique (see plans/views.py). A snapshot selects
+one (metric_id, precision, res, ts) slice, so each of its cells already IS
+one merged row and is served as it is — a point get, like the reference's
+(QueryingController.java:232-282), with no re-aggregate and no shuffle.
+History merges many cells per timestamp, so it keeps its aggregate.
+
 All avg values are derived sum/count AFTER the merge (util/Aggregator.java:19-32).
 Served results are sorted inside one partition (`_sorted`), not by a global
-sort: a request runs one shuffle, its aggregate's.
+sort: a history runs one shuffle, its aggregate's; a snapshot runs none.
 """
 
 from __future__ import annotations
@@ -151,11 +158,13 @@ def _snapshot(lattice: DataFrame, metric: str, aggregate: str,
               cells: Sequence[str] | None, cell_prefix: str | None = None,
               alphabet: str | None = None) -> DataFrame:
     """[gh, {aggregate}] over the cells of one slice, cell-ascending —
-    the tail every snapshot shares (see `_filter_cells` for `alphabet`)."""
+    the tail every snapshot shares (see `_filter_cells` for `alphabet`).
+    The slice holds one row per `gh` (the view store's key-uniqueness
+    invariant), so it is projected as it is: filter → projection → sort
+    in one stage, with no group-by merging a row with itself."""
     view = _filter_cells(_slice(lattice, metric, precision, res, ts_ms),
                          cells, cell_prefix, alphabet, precision)
-    merged = view.groupBy("gh").agg(*_merge_cols())
-    return _sorted(_agg_projection(merged, aggregate, "gh"), "gh")
+    return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
 
 
 def history(
@@ -426,6 +435,22 @@ def snapshot_polygon_quadtiling(
                      cover, alphabet=geo.QUAD_ALPHABET)
 
 
+def _nearest(lattice: DataFrame, metric: str, aggregate: str,
+             precision: int, res: str, ts_ms: int,
+             dist_m: dict[str, float], n: int) -> DataFrame:
+    """The `n` cells of one slice nearest the point, [gh, dist_m,
+    {aggregate}] by (dist_m, gh). `dist_m` maps each cover cell to its
+    distance, so the broadcast mapping holds one row per cell; joined to
+    a slice with one row per `gh`, every cell comes out once, with no
+    merge."""
+    mapping = lattice.sparkSession.createDataFrame(
+        list(dist_m.items()), "gh string, dist_m double")
+    joined = (_slice(lattice, metric, precision, res, ts_ms)
+              .join(F.broadcast(mapping), "gh"))
+    out = _agg_projection(joined, aggregate, "gh", extra=["dist_m"])
+    return out.orderBy("dist_m", "gh").limit(n)
+
+
 def snapshot_nearest_quadtiling(
     lattice: DataFrame,
     metric: str,
@@ -454,22 +479,11 @@ def snapshot_nearest_quadtiling(
     Cells with no data contribute nothing (non-empty semantics); if
     fewer than `n` covered cells have data, the result is shorter —
     widen `radius_m` to search farther."""
-    cover = geo.quadkey_cover_circle(lat, lon, radius_m, zoom)
-    rows = [
-        (qk, round(geo.bbox_min_dist_m(
-            geo.quadkey_decode_bbox(qk), lat, lon), 6))
-        for qk in cover
-    ]
-    mapping = lattice.sparkSession.createDataFrame(
-        rows, "gh string, dist_m double")
-    merged = (
-        _slice(lattice, metric, zoom, res, ts_ms)
-        .join(F.broadcast(mapping), "gh")
-        .groupBy("gh", "dist_m")
-        .agg(*_merge_cols())
-    )
-    out = _agg_projection(merged, aggregate, "gh", extra=["dist_m"])
-    return out.orderBy("dist_m", "gh").limit(n)
+    dist_m = {
+        qk: round(geo.bbox_min_dist_m(geo.quadkey_decode_bbox(qk), lat, lon), 6)
+        for qk in geo.quadkey_cover_circle(lat, lon, radius_m, zoom)
+    }
+    return _nearest(lattice, metric, aggregate, zoom, res, ts_ms, dist_m, n)
 
 
 def snapshot_nearest_geohashing(
@@ -486,22 +500,13 @@ def snapshot_nearest_geohashing(
 ) -> DataFrame:
     """Geohash twin of snapshot_nearest_quadtiling (same driver-side
     exact distances, geohash cover/decode)."""
-    cover = geo.geohash_cover_circle(lat, lon, radius_m, precision)
-    rows = []
-    for gh in cover:
+    dist_m = {}
+    for gh in geo.geohash_cover_circle(lat, lon, radius_m, precision):
         la_lo, la_hi, lo_lo, lo_hi = geo.geohash_decode_bbox(gh)
-        rows.append((gh, round(geo.bbox_min_dist_m(
-            (la_hi, lo_lo, la_lo, lo_hi), lat, lon), 6)))
-    mapping = lattice.sparkSession.createDataFrame(
-        rows, "gh string, dist_m double")
-    merged = (
-        _slice(lattice, metric, precision, res, ts_ms)
-        .join(F.broadcast(mapping), "gh")
-        .groupBy("gh", "dist_m")
-        .agg(*_merge_cols())
-    )
-    out = _agg_projection(merged, aggregate, "gh", extra=["dist_m"])
-    return out.orderBy("dist_m", "gh").limit(n)
+        dist_m[gh] = round(geo.bbox_min_dist_m(
+            (la_hi, lo_lo, la_lo, lo_hi), lat, lon), 6)
+    return _nearest(lattice, metric, aggregate, precision, res, ts_ms,
+                    dist_m, n)
 
 
 def snapshot_route_quadtiling(

@@ -19,6 +19,16 @@ aggregates the (much smaller) previous level:
 `avg` is always derived sum/count *after* the final merge (never an average of
 averages — SURVEY.md §7 "hard parts").
 
+**Key-uniqueness invariant**: a stored lattice holds exactly ONE row per
+(metric_id, precision, res, gh, ts). Every writer ends in an aggregate on
+that key (`view_lattice` per (precision, res) branch, `aggregate_partials`
+and `incremental_update` in the store merges, the first version included),
+or moves whole files without touching rows (`compact_store` rewrites them,
+`expire_store` drops month partitions). The snapshot tail in plans/query.py
+relies on it: it serves a slice's rows as they are, without re-merging them,
+so a writer that broke it would answer two rows for one cell
+(tests/test_view_keys.py checks every writer).
+
 At 100 TB: the base aggregation is the only shuffle proportional to raw data;
 its key space (metric × cell × minute) is bounded and well-distributed (cells
 are hash-like strings). Rollups shuffle only aggregated rows. Materialized

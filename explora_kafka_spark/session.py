@@ -30,7 +30,13 @@ def get_spark(
     round trips (active session, a conf read, origin set/clear), about
     two thirds of a served plan's calls. The only loss is the Python
     call-site section of an AnalysisException's text. It is a static
-    conf, so only a session this factory creates gets it.
+    conf, fixed when the SparkContext starts, so only a session this
+    factory creates gets it. `__spark_entry__.py` cannot set it: its
+    `entry(spark)` and `queries()` are handed a session the caller has
+    already started, a running session takes only runtime confs (see
+    `configure`), and one process holds one SparkContext. There the
+    capture stays on, which costs plan-building py4j calls per registry
+    query, small next to the query's runtime.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     builder = (

@@ -459,28 +459,29 @@ class ParquetViewStore:
             old_v = self.current_version()
             new_v = f"v_{uuid.uuid4().hex[:12]}"
             new_dir = os.path.join(self.path, new_v)
+            batch = delta.drop("ts_m")
+            old_v_linked = None
             if old_v is None:
-                # delta is persisted above, so the sizing count is a
-                # cache read
-                _write_store_layout(delta, new_dir, rows=delta.count())
-                self._commit(new_v, effective_bid, None)
-                return True
-            old_raw = self._read_raw(spark)
-            if "ts_m" not in old_raw.columns:
-                # legacy store written before the partitioned layout: the
-                # ts_m pruning filter would raise and _link_untouched
-                # would mislink flat files — migrate with one full
-                # rewrite; every later merge is incremental again
-                merged = incremental_update(old_raw, delta.drop("ts_m"))
-                _write_store_layout(_with_ts_month(merged), new_dir)
-                self._commit(new_v, effective_bid, old_v)
-                return True
-            # ---- partition-pruned incremental path ----
-            existing_touched = old_raw.filter(
-                _touched_partitions(tuple(r) for r in key_rows)).drop("ts_m")
-            merged = _with_ts_month(
-                incremental_update(existing_touched, delta.drop("ts_m"))
-            ).persist()
+                # the first version folds the delta too: a delta with a
+                # repeated key must not land as two rows of one cell
+                # (the view store's key-uniqueness invariant)
+                merged = aggregate_partials(batch)
+            else:
+                old_raw = self._read_raw(spark)
+                if "ts_m" not in old_raw.columns:
+                    # legacy store written before the partitioned layout:
+                    # the ts_m pruning filter would raise and
+                    # _link_untouched would mislink flat files — migrate
+                    # with one full rewrite; every later merge is
+                    # incremental again
+                    merged = incremental_update(old_raw, batch)
+                else:
+                    # ---- partition-pruned incremental path ----
+                    existing_touched = old_raw.filter(_touched_partitions(
+                        tuple(r) for r in key_rows)).drop("ts_m")
+                    merged = incremental_update(existing_touched, batch)
+                    old_v_linked = old_v
+            merged = _with_ts_month(merged).persist()
             try:
                 # persist before the layout write: repartitionByRange's
                 # sampling pass would otherwise execute the whole merge
@@ -488,7 +489,9 @@ class ParquetViewStore:
                 _write_store_layout(merged, new_dir, rows=merged.count())
             finally:
                 merged.unpersist()
-            self._link_untouched(os.path.join(self.path, old_v), new_dir)
+            if old_v_linked is not None:
+                self._link_untouched(
+                    os.path.join(self.path, old_v_linked), new_dir)
             self._commit(new_v, effective_bid, old_v)
             return True
         finally:

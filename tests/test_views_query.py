@@ -1,6 +1,9 @@
 """View lattice + query algebra tests: lattice-vs-direct equivalence (the A2
 merge algebra), incremental update, and history/snapshot vs DuckDB oracles."""
 
+import gc
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -191,6 +194,9 @@ def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
                         lambda client, *a, **kw: sent.append(1) or send(client, *a, **kw))
 
     def calls(bbox):
+        # release earlier tests' garbage first: Python's GC sends one
+        # release command per collected JVM handle, whenever it runs
+        gc.collect()
         before = len(sent)
         Q.snapshot_bbox_geohashing(lattice, "view", "avg", 6, "min",
                                    1704844800000, *bbox)
@@ -260,6 +266,43 @@ def test_served_result_takes_one_shuffle(spread_lattice, uncoalesced_shuffles,
     else:
         assert "Join" not in plan
     monkeypatch.setattr(Q, "_sorted", lambda d, key: d.orderBy(key))
+    assert len(rows) > 1 and rows == TAIL_ROUTES[route](spread_lattice).collect()
+
+
+def _jobs_and_stages(sc, group):
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    return len(jobs), sum(len(st.getJobInfo(j).stageIds) for j in jobs)
+
+
+@pytest.mark.parametrize("route", ["snapshot_in", "snapshot_strip"])
+def test_snapshot_tail_merges_nothing(spark, spread_lattice, monkeypatch,
+                                      route):
+    """A snapshot slice holds one row per cell, so the tail serves it as
+    it is: the IN path plans no exchange and no aggregate and runs one
+    job of one stage; the strip adds only its cover's broadcast, a
+    second job and stage. Rows and order equal the per-cell group-by
+    form the tail had before."""
+    sc = spark.sparkContext
+    group = f"snapshot-tail-{route}"
+    sc.setJobGroup(group, group)
+    try:
+        df = TAIL_ROUTES[route](spread_lattice)
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert "HashAggregate" not in plan
+    exchanges = re.findall(r"\w*Exchange\b", plan)
+    if route == "snapshot_strip":
+        assert exchanges == ["BroadcastExchange"]
+        assert _jobs_and_stages(sc, group) == (2, 2)
+    else:
+        assert exchanges == []
+        assert _jobs_and_stages(sc, group) == (1, 1)
+    cells = Q._filter_cells
+    monkeypatch.setattr(Q, "_filter_cells", lambda *a: cells(*a).groupBy(
+        "gh").agg(*Q._merge_cols()))
     assert len(rows) > 1 and rows == TAIL_ROUTES[route](spread_lattice).collect()
 
 

@@ -38,11 +38,14 @@ CASES: dict[str, tuple[str, list[str]]] = {
         "length) — no broadcast build; only covers above 4,096 "
         "compressed prefixes become a broadcast semi-join. Asserted "
         "join-free in tests/test_plans.py::"
-        "test_large_covers_are_joinless_predicates. The one exchange is "
-        "the per-cell merge's hash shuffle: the result sorts within one "
-        "partition, with no range-partition exchange "
-        "(tests/test_views_query.py::test_served_result_takes_one_shuffle).",
-        [r"FileScan", r"PartitionFilters", r"Join", r"Exchange"],
+        "test_large_covers_are_joinless_predicates. The slice holds one "
+        "row per cell (the view store's key-uniqueness invariant, "
+        "plans/views.py), so nothing is merged: no aggregate and no "
+        "exchange, only the scan, its filter and a sort inside one "
+        "partition, one job of one stage "
+        "(tests/test_views_query.py::test_snapshot_tail_merges_nothing).",
+        [r"FileScan", r"PartitionFilters", r"Join", r"Exchange",
+         r"HashAggregate", r"Sort", r"Coalesce"],
     ),
     "ann_topk_ivf_indexed": (
         "Serving from the materialized IVF index: the lists scan is "
