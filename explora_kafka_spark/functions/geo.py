@@ -17,11 +17,14 @@ Semantics pinned to the reference:
 The geohash codec itself is a from-scratch implementation of the public geohash
 algorithm (Niemeyer 2008); the reference uses com.github.davidmoten:geo for it.
 
-Driver-side covers are pure functions (a bbox cover at zoom 14 is ≤ a few
-thousand cells — trivially driver-computable, then pushed down as an `isin`
-filter or broadcast-joined when large). Per-row cell derivation is exposed as
-**native Column expressions** (bit arithmetic / substring), not Python UDFs, so
-the hot path stays inside whole-stage codegen.
+Driver-side covers are pure functions. A bbox cover is an index rectangle
+(`geohash_bbox_rect`, `quadkey_bbox_rect`, O(1)), which the bbox snapshots
+filter on each lattice row's stored cell axes (`with_cell_axes`) without
+enumerating it; refined region covers (circle, polygon, route) are
+enumerated and pushed down as one `IN` expression, or broadcast-joined when
+large. Per-row cell derivation is exposed as **native Column expressions**
+(bit arithmetic / substring), not Python UDFs, so the hot path stays inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from __future__ import annotations
 import math
 from typing import List, Tuple
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -38,6 +41,54 @@ from pyspark.sql import functions as F
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _BASE32_IDX = {c: i for i, c in enumerate(_BASE32)}
+
+
+def geohash_axis_bits(precision: int) -> Tuple[int, int]:
+    """(lon_bits, lat_bits) of a geohash of `precision` characters: the
+    5·precision interleaved bits start with longitude, so longitude takes
+    the odd one."""
+    total_bits = precision * 5
+    return (total_bits + 1) // 2, total_bits // 2
+
+
+def _axis_index(v: float, offset: float, span: float, bits: int) -> int:
+    """Cell index of coordinate `v` on an axis of 2^bits cells spanning
+    [-offset, span - offset]: floor of the scaled coordinate, the top edge
+    clamped into the last cell."""
+    return min(int((v + offset) / span * (1 << bits)), (1 << bits) - 1)
+
+
+def geohash_cell_index(lat: float, lon: float, precision: int) -> Tuple[int, int]:
+    """(lon index, lat index) of the `precision` cell holding (lat, lon)
+    — the integer axes `geohash_encode` interleaves."""
+    lon_bits, lat_bits = geohash_axis_bits(precision)
+    return (_axis_index(lon, 180.0, 360.0, lon_bits),
+            _axis_index(lat, 90.0, 180.0, lat_bits))
+
+
+def geohash_from_index(lon_idx: int, lat_idx: int, precision: int) -> str:
+    """The geohash of the `precision` cell at axis indices (lon, lat)."""
+    _, _, chars = _geohash_bit_layout(precision)
+    axis = {"lon": lon_idx, "lat": lat_idx}
+    out = []
+    for spec in chars:
+        idx = 0
+        for ax, shift in spec:
+            idx = (idx << 1) | ((axis[ax] >> shift) & 1)
+        out.append(_BASE32[idx])
+    return "".join(out)
+
+
+def geohash_to_index(gh: str) -> Tuple[int, int]:
+    """(lon index, lat index) of a geohash cell at its own precision —
+    the inverse of `geohash_from_index`."""
+    _, _, chars = _geohash_bit_layout(len(gh))
+    axis = {"lon": 0, "lat": 0}
+    for c, spec in zip(gh, chars):
+        idx = _BASE32_IDX[c]
+        for pos, (ax, shift) in enumerate(spec):
+            axis[ax] |= ((idx >> (4 - pos)) & 1) << shift
+    return axis["lon"], axis["lat"]
 
 
 def geohash_encode(lat: float, lon: float, precision: int = 12) -> str:
@@ -51,26 +102,8 @@ def geohash_encode(lat: float, lon: float, precision: int = 12) -> str:
     scales east) — one definition everywhere keeps all three
     implementations bit-identical, which the hypothesis property tests
     enforce."""
-    total_bits = precision * 5
-    lon_bits = (total_bits + 1) // 2
-    lat_bits = total_bits // 2
-    lon_idx = min(int((lon + 180.0) / 360.0 * (1 << lon_bits)), (1 << lon_bits) - 1)
-    lat_idx = min(int((lat + 90.0) / 180.0 * (1 << lat_bits)), (1 << lat_bits) - 1)
-    chars = []
-    li, ai = lon_bits, lat_bits  # bits remaining per axis, MSB-first
-    for _ in range(precision):
-        idx = 0
-        for t in range(5):
-            b = len(chars) * 5 + t
-            if b % 2 == 0:
-                li -= 1
-                bit = (lon_idx >> li) & 1
-            else:
-                ai -= 1
-                bit = (lat_idx >> ai) & 1
-            idx = (idx << 1) | bit
-        chars.append(_BASE32[idx])
-    return "".join(chars)
+    return geohash_from_index(*geohash_cell_index(lat, lon, precision),
+                              precision)
 
 
 def geohash_decode_bbox(gh: str) -> Tuple[float, float, float, float]:
@@ -120,6 +153,19 @@ def geohash_children(prefix: str, precision: int) -> List[str]:
     return sorted(out)
 
 
+def geohash_bbox_rect(
+    north: float, west: float, south: float, east: float, precision: int
+) -> Tuple[int, int, int, int]:
+    """(x0, x1, y0, y1): the inclusive lon/lat index rectangle of the
+    cells `geohash_cover_bbox` enumerates, in O(1). Corners come from the
+    encoder's clamped index (`geohash_cell_index`). A box with west > east
+    (or south > north) walks one column at west (one row at south), as
+    the cover walk does."""
+    x0, y0 = geohash_cell_index(south, west, precision)
+    x1, y1 = geohash_cell_index(north, east, precision)
+    return x0, max(x0, x1), y0, max(y0, y1)
+
+
 def geohash_cover_size(
     north: float, west: float, south: float, east: float, precision: int
 ) -> int:
@@ -127,23 +173,44 @@ def geohash_cover_size(
     lets the query planner pick a cover precision BEFORE enumerating
     (a precision-6 cover of a continent is ~10^8 cells; enumerating it
     driver-side is the scale bug, not just shipping it)."""
-    total_bits = precision * 5
-    lon_bits = (total_bits + 1) // 2
-    lat_bits = total_bits // 2
-    lat_step = 180.0 / (1 << lat_bits)
-    lon_step = 360.0 / (1 << lon_bits)
-    lat_cells = int((north + 90.0) / lat_step) - int((south + 90.0) / lat_step) + 1
-    lon_cells = int((east + 180.0) / lon_step) - int((west + 180.0) / lon_step) + 1
-    return max(lat_cells, 1) * max(lon_cells, 1)
+    x0, x1, y0, y1 = geohash_bbox_rect(north, west, south, east, precision)
+    return (x1 - x0 + 1) * (y1 - y0 + 1)
 
 
 def quadkey_cover_size(
     north: float, west: float, south: float, east: float, zoom: int
 ) -> int:
-    """Exact tile count `quadkey_cover_bbox` would produce, in O(1)."""
+    """Exact tile count `quadkey_cover_bbox` would produce, in O(1) (0
+    when west > east or south > north: the reference loop runs empty)."""
     min_x, min_y = latlon_to_tile(south, west, zoom)
     max_x, max_y = latlon_to_tile(north, east, zoom)
-    return max(max_x - min_x + 1, 1) * max(min_y - max_y + 1, 1)
+    return max(max_x - min_x + 1, 0) * max(min_y - max_y + 1, 0)
+
+
+def _stored_ranges(lo: int, hi: int, zoom: int) -> List[Tuple[int, int]]:
+    """Tile indices lo..hi as inclusive ranges of the index a quadkey
+    stores. A quadkey keeps the low `zoom` bits of each index, so a tile
+    outside the grid (x = 2^zoom at lon = 180, y < 0 or ≥ 2^zoom beyond
+    the Mercator latitude) wraps onto the tile its key names."""
+    if hi < lo:
+        return []
+    n = 1 << zoom
+    if hi - lo + 1 >= n:
+        return [(0, n - 1)]
+    a, b = lo % n, hi % n
+    return [(a, b)] if a <= b else [(0, b), (a, n - 1)]
+
+
+def quadkey_bbox_rect(
+    north: float, west: float, south: float, east: float, zoom: int
+) -> Tuple[List[Tuple[int, int]], List[Tuple[int, int]]]:
+    """(x ranges, y ranges): the tiles `quadkey_cover_bbox` enumerates,
+    as inclusive ranges of the stored tile x and y (at most two per axis,
+    see `_stored_ranges`; none when the cover is empty), in O(1)."""
+    min_x, min_y = latlon_to_tile(south, west, zoom)
+    max_x, max_y = latlon_to_tile(north, east, zoom)
+    xs, ys = _stored_ranges(min_x, max_x, zoom), _stored_ranges(max_y, min_y, zoom)
+    return (xs, ys) if xs and ys else ([], [])
 
 
 def geohash_cover_bbox(
@@ -155,10 +222,7 @@ def geohash_cover_bbox(
     QueryingController.java:240-244): walk the lat/lon grid in steps of the
     cell size, encoding each sample point.
     """
-    # cell extents at this precision: lon bits = ceil(5p/2), lat bits = floor(5p/2)
-    total_bits = precision * 5
-    lon_bits = (total_bits + 1) // 2
-    lat_bits = total_bits // 2
+    lon_bits, lat_bits = geohash_axis_bits(precision)
     lat_step = 180.0 / (1 << lat_bits)
     lon_step = 360.0 / (1 << lon_bits)
     hashes = set()
@@ -202,6 +266,17 @@ def tile_to_quadkey(x: int, y: int, zoom: int) -> str:
             d += 2
         digits.append(str(d))
     return "".join(digits)
+
+
+def quadkey_to_tile(qk: str) -> Tuple[int, int]:
+    """(x, y) tile of a quadkey at its own zoom — the inverse of
+    `tile_to_quadkey`."""
+    x = y = 0
+    for c in qk:
+        d = int(c)
+        x = x * 2 + (d & 1)
+        y = y * 2 + ((d >> 1) & 1)
+    return x, y
 
 
 def quadkey(lat: float, lon: float, zoom: int) -> str:
@@ -313,11 +388,7 @@ def circle_bbox(
 def quadkey_decode_bbox(qk: str) -> Tuple[float, float, float, float]:
     """(north, west, south, east) of a quadkey tile — inverse of
     tile_to_quadkey + the Mercator tile edges."""
-    x = y = 0
-    for c in qk:
-        d = int(c)
-        x = x * 2 + (d & 1)
-        y = y * 2 + ((d >> 1) & 1)
+    x, y = quadkey_to_tile(qk)
     n = 2.0 ** len(qk)
 
     def _lat(yy: float) -> float:
@@ -627,9 +698,7 @@ def _geohash_bit_layout(precision: int):
     Each of the 5·precision interleaved bits (even = longitude, odd = latitude,
     MSB first — Niemeyer base-32 geohash) maps to one bit of the integer cell
     index along its axis."""
-    total = precision * 5
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
+    lon_bits, lat_bits = geohash_axis_bits(precision)
     chars = []
     for k in range(precision):
         spec = []  # (axis, shift) per bit, MSB→LSB within the char
@@ -641,6 +710,73 @@ def _geohash_bit_layout(precision: int):
                 spec.append(("lat", lat_bits - 1 - (b - 1) // 2))
         chars.append(spec)
     return lon_bits, lat_bits, chars
+
+
+#: cell schemes a lattice's `gh` column can hold
+CELL_SCHEMES = ("geohash", "quadkey")
+
+#: base-32 digits in `conv`'s order, position for position with _BASE32
+_CONV_BASE32 = "0123456789abcdefghijklmnopqrstuv"
+
+
+#: (shift, mask) steps that gather the even bits of a 62-bit word into
+#: its low 31 bits (the classic Morton "compact by one" sequence)
+_COMPACT_STEPS = (
+    (1, 0x3333333333333333), (2, 0x0F0F0F0F0F0F0F0F), (4, 0x00FF00FF00FF00FF),
+    (8, 0x0000FFFF0000FFFF), (16, 0x00000000FFFFFFFF),
+)
+
+
+def _even_bits_sql(source: str, out: str) -> list[str]:
+    """SELECT items leaving `out` = the even bits of the SQL long
+    `source`, packed into an int (Morton de-interleave of one axis). Each
+    step is a lateral alias of the one before, so it is evaluated once
+    and every expression stays small."""
+    items = [f"({source}) & {0x5555555555555555} AS _{out}0"]
+    for i, (shift, mask) in enumerate(_COMPACT_STEPS):
+        items.append(f"(_{out}{i} | shiftright(_{out}{i}, {shift})) & {mask}"
+                     f" AS _{out}{i + 1}")
+    return items + [f"CAST(_{out}{len(_COMPACT_STEPS)} AS INT) AS {out}"]
+
+
+def with_cell_axes(df: DataFrame, cells: str = "geohash") -> DataFrame:
+    """`df` with its cell's integer axes `cx`, `cy` at the cell's own
+    precision, derived from `gh` natively (no Python UDF).
+
+    `cells` names the scheme `gh` holds — never guessed from the data: a
+    quadkey's digits are valid base-32 too.
+    - "geohash": `cx`/`cy` are the longitude/latitude indices
+      `geohash_to_index` returns (up to precision 12);
+    - "quadkey": `cx`/`cy` are the tile x/y `quadkey_to_tile` returns
+      (up to zoom 31).
+
+    One SQL expression per axis serves every precision: `gh` read as a
+    base-32 (base-4) integer is the cell's Morton code, whose axis bits
+    alternate, longitude (x) first from the top. A `gh` that is no cell
+    of the scheme (a character outside its alphabet, or longer) gets
+    null axes, so no rectangle selects it — as no cover would."""
+    if cells == "geohash":
+        alphabet, max_len = _BASE32, 12
+        digits = f"conv(translate(gh, '{_BASE32}', '{_CONV_BASE32}'), 32, 10)"
+        # 5·len bits: longitude holds the top bit, so it sits on the even
+        # positions iff the length is odd
+        x_bits, y_bits = ("shiftright(_cell_m, 1 - length(gh) % 2)",
+                          "shiftright(_cell_m, length(gh) % 2)")
+    elif cells == "quadkey":
+        alphabet, max_len = QUAD_ALPHABET, 31
+        digits = "conv(gh, 4, 10)"
+        x_bits, y_bits = "_cell_m", "shiftright(_cell_m, 1)"
+    else:
+        raise ValueError(f"cells must be one of {CELL_SCHEMES}; got {cells!r}")
+    morton = (f"CASE WHEN length(gh) <= {max_len}"
+              f" AND translate(gh, '{alphabet}', '') = ''"
+              f" THEN CAST({digits} AS BIGINT) END")
+    temps = ["_cell_m"] + [f"_{c}{i}" for c in ("cx", "cy")
+                           for i in range(len(_COMPACT_STEPS) + 1)]
+    return df.selectExpr(
+        "*", f"{morton} AS _cell_m",
+        *_even_bits_sql(x_bits, "cx"), *_even_bits_sql(y_bits, "cy"),
+    ).drop(*temps)
 
 
 def geohash_col(lat_col: Column, lon_col: Column, precision: int) -> Column:

@@ -398,6 +398,26 @@ def vacuum_shingle_index(path: str, grace_secs: float = 86400.0
 #: for the same layout; md5 stays the cross-engine parity convention.
 _BLOOM_MAX_K = 4
 
+#: the position family above, as `build_bloom_bitmap` tags it on its
+#: `mask` column's metadata (which a parquet round trip keeps). Every
+#: probe checks the tag: a bitmap folded by another family — one
+#: persisted before the one-digest family, which carries no tag — sets
+#: other bits, so probing it would answer silent false negatives.
+BLOOM_FAMILY = "md5-slice32"
+_BLOOM_TAG = "bloom_family"
+
+
+def _check_bloom_family(bitmap: DataFrame) -> None:
+    """Refuse a bitmap not tagged with BLOOM_FAMILY (a schema read, no
+    Spark job)."""
+    fields = {f.name: f for f in bitmap.schema.fields}
+    family = fields["mask"].metadata.get(_BLOOM_TAG) if "mask" in fields else None
+    if family != BLOOM_FAMILY:
+        raise ValueError(
+            f"bloom bitmap family {family!r} is not {BLOOM_FAMILY!r}: its "
+            "bits come from another position family, so probes would miss "
+            "members; rebuild it with build_bloom_bitmap")
+
 
 def _check_bloom_k(k: int) -> None:
     if not 1 <= k <= _BLOOM_MAX_K:
@@ -475,7 +495,8 @@ def build_bloom_bitmap(spark, index_path: str, m_bits: int = 1 << 21,
     live in 32-bit words so shift/bit_or arithmetic is exact and
     overflow-free on BOTH engines. One linear pass over the index;
     bit_or is commutative, so production can instead MERGE a delta's
-    fold into a stored bitmap incrementally (the HLL property)."""
+    fold into a stored bitmap incrementally (the HLL property). `mask`
+    carries the BLOOM_FAMILY tag every probe checks."""
     _check_bloom_k(k)
     _check_bloom_m(m_bits)
     train = _spread_index(read_shingle_index(spark, index_path))
@@ -489,7 +510,8 @@ def build_bloom_bitmap(spark, index_path: str, m_bits: int = 1 << 21,
             F.expr("CAST(pos DIV 32 AS INT)").alias("w"),
             F.expr("shiftleft(1L, CAST(pos % 32 AS INT))").alias("m"),
         )
-        .groupBy("w").agg(F.expr("bit_or(m)").alias("mask"))
+        .groupBy("w").agg(F.expr("bit_or(m)").alias(
+            "mask", metadata={_BLOOM_TAG: BLOOM_FAMILY}))
     ).localCheckpoint(eager=True)
 
 
@@ -501,12 +523,13 @@ def _bloom_probe(probes: DataFrame, bitmap: DataFrame, m_bits: int,
     chain hashes each probe once, not once per rung), each resolved
     against the broadcast bitmap's word, hit = all k bits set. k
     broadcast hash joins against a ~256 KB table — no shuffle of the
-    probe side."""
+    probe side. Raises on a bitmap without the BLOOM_FAMILY tag."""
     from functools import reduce as _reduce
     from operator import and_ as _and
 
     _check_bloom_k(k)
     _check_bloom_m(m_bits)
+    _check_bloom_family(bitmap)
     had_dig = "_dig" in probes.columns
     if not had_dig:
         probes = probes.withColumn("_dig", _bloom_digest_col(F.col("_h")))
@@ -555,7 +578,8 @@ def contamination_check_bloom(
     a gate thresholding `contamination <= taint_max` in this mode can
     only over-reject, never leak held-out content. Pass a pre-built
     `bitmap` (`build_bloom_bitmap`) to amortize the index fold across
-    micro-batches when the index is static between corpus snapshots."""
+    micro-batches when the index is static between corpus snapshots; an
+    untagged one raises (`_bloom_probe`)."""
     if bitmap is None:
         bitmap = build_bloom_bitmap(spark, index_path, m_bits, k)
     probes = _batch_shingle_hashes(batch, n, key)
@@ -755,7 +779,8 @@ def contamination_bloom_sweep(
             F.expr("CAST(e.pos DIV 32 AS INT)").alias("w"),
             F.expr("shiftleft(1L, CAST(e.pos % 32 AS INT))").alias("mk"),
         )
-        .groupBy("m", "w").agg(F.expr("bit_or(mk)").alias("mask"))
+        .groupBy("m", "w").agg(F.expr("bit_or(mk)").alias(
+            "mask", metadata={_BLOOM_TAG: BLOOM_FAMILY}))
     ).localCheckpoint(eager=True)
     scored = (
         _batch_shingle_hashes(batch, n, key)

@@ -8,15 +8,22 @@ These are the engine's two query shapes (QueryingService.java:38-143):
   re-aggregation; Catalyst pushes the (metric, precision, res) filters to
   partition pruning and (gh, ts) to parquet row-group skipping.
 
-- **snapshot**: one aggregate per cell over a bbox at one instant — replaces
-  tile-cover point lookups / geohash children enumeration
-  (QueryingController.java:100-121, 232-282). Covers are computed driver-side
-  (pure functions, functions/geo.py) and take one of two paths. Up to
-  COMPRESSED_COVER_LIMIT prefixes after `geo.compress_cover` (complete
-  sibling families fold into their parent prefix — strictly dominates the
-  reference's 32^k enumeration, SURVEY.md §4), the cover ships as ONE SQL
-  `IN` expression, one `IN` per prefix length, built in a single JVM call.
-  Above it, the cover becomes a broadcast semi-join.
+- **snapshot**: one aggregate per cell over a region at one instant —
+  replaces tile-cover point lookups / geohash children enumeration
+  (QueryingController.java:100-121, 232-282). A bbox cover is an index
+  rectangle [x0..x1] × [y0..y1] (`geo.geohash_bbox_rect`,
+  `geo.quadkey_bbox_rect`, O(1)), so the bbox routes filter every lattice
+  row's stored cell axes (`cx`, `cy`, plans/views.py) with two integer
+  ranges plus the `gh` range between the rectangle's Morton corners — all
+  pushed to the parquet scan, no cover enumerated (`_snapshot_rect`).
+  Radius, polygon and route covers are refined cell by cell, so they are
+  computed driver-side (pure functions, functions/geo.py) and take one of
+  two paths. Up to COMPRESSED_COVER_LIMIT prefixes after
+  `geo.compress_cover` (complete sibling families fold into their parent
+  prefix — strictly dominates the reference's 32^k enumeration, SURVEY.md
+  §4), the cover ships as ONE SQL `IN` expression, one `IN` per prefix
+  length, built in a single JVM call. Above it, the cover becomes a
+  broadcast semi-join.
 
 The lattice holds one row per (metric_id, precision, res, gh, ts): every
 store writer keeps that key unique (see plans/views.py). A snapshot selects
@@ -48,10 +55,11 @@ from ..functions.timeutil import (
 
 #: ceiling on a cell predicate's literal count: up to this many
 #: (compressed) cells ship as one SQL `IN` expression — no join, no
-#: broadcast build, no shuffle. Spatial covers compress ~10-100× (bbox
-#: interiors are complete subtrees), so this path handles every real
-#: bbox; larger sets (incompressible non-spatial ones, long thin strips)
-#: become a broadcast semi-join, which beats a huge literal list.
+#: broadcast build, no shuffle. Region covers compress ~10-100× (their
+#: interiors are complete subtrees); larger sets (user-supplied history
+#: cells, long thin route corridors) become a broadcast semi-join, which
+#: beats a huge literal list. Bbox snapshots never get here: they filter
+#: the stored rectangle.
 COMPRESSED_COVER_LIMIT = 4096
 
 
@@ -164,6 +172,76 @@ def _snapshot(lattice: DataFrame, metric: str, aggregate: str,
     in one stage, with no group-by merging a row with itself."""
     view = _filter_cells(_slice(lattice, metric, precision, res, ts_ms),
                          cells, cell_prefix, alphabet, precision)
+    return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
+
+
+def _require_cell_axes(lattice: DataFrame) -> None:
+    """Refuse a lattice written before rows stored their cell axes: a
+    schema check, no Spark job."""
+    if not {"cx", "cy"} <= set(lattice.columns):
+        raise ValueError(
+            "lattice has no cx/cy cell-axis columns (written before they "
+            "were stored): rebuild it with build_views, or rewrite its "
+            "store with compact_store, before serving bbox snapshots")
+
+
+def _axis_between(col: str, ranges, shift: int) -> str:
+    """`col` inside any of the inclusive index `ranges`, each taken from
+    the cover precision down to the view's: cell i holds view cells
+    i<<shift … ((i+1)<<shift)-1."""
+    terms = [f"{col} BETWEEN {a << shift} AND {((b + 1) << shift) - 1}"
+             for a, b in ranges]
+    return terms[0] if len(terms) == 1 else "(" + " OR ".join(terms) + ")"
+
+
+def _rect_predicate(xs, ys, kx: int, ky: int, cell_code) -> str:
+    """SQL predicate on (`cx`, `cy`, `gh`) selecting the view cells under
+    an index rectangle: x in any of `xs`, y in any of `ys` (inclusive
+    ranges at the cover precision, `kx` / `ky` bits coarser than the
+    view's per axis). The `gh` range between the rectangle's two Morton
+    corners (`cell_code(x, y)` at the view precision: `gh` order is
+    Morton order) rides along, so a gh-sorted file skips its row groups
+    outside it."""
+    if not xs or not ys:
+        return "false"
+    lo = cell_code(xs[0][0] << kx, ys[0][0] << ky)
+    hi = cell_code(((xs[-1][1] + 1) << kx) - 1, ((ys[-1][1] + 1) << ky) - 1)
+    return (f"{_axis_between('cx', xs, kx)} AND {_axis_between('cy', ys, ky)}"
+            f" AND gh BETWEEN '{lo}' AND '{hi}'")
+
+
+def geohash_rect_predicate(north: float, west: float, south: float,
+                           east: float, cover_p: int, precision: int) -> str:
+    """The `precision` cells under the bbox's precision-`cover_p` cover
+    (`geo.geohash_cover_bbox`), as a `_rect_predicate`; each axis widens
+    by its own bit count."""
+    x0, x1, y0, y1 = geo.geohash_bbox_rect(north, west, south, east, cover_p)
+    lon_bits, lat_bits = geo.geohash_axis_bits(precision)
+    cover_lon, cover_lat = geo.geohash_axis_bits(cover_p)
+    return _rect_predicate(
+        [(x0, x1)], [(y0, y1)], lon_bits - cover_lon, lat_bits - cover_lat,
+        lambda x, y: geo.geohash_from_index(x, y, precision))
+
+
+def quadkey_rect_predicate(north: float, west: float, south: float,
+                           east: float, cover_zoom: int, zoom: int) -> str:
+    """The `zoom` tiles under the bbox's zoom-`cover_zoom` cover
+    (`geo.quadkey_cover_bbox`), as a `_rect_predicate`."""
+    xs, ys = geo.quadkey_bbox_rect(north, west, south, east, cover_zoom)
+    k = zoom - cover_zoom
+    return _rect_predicate(xs, ys, k, k,
+                           lambda x, y: geo.tile_to_quadkey(x, y, zoom))
+
+
+def _snapshot_rect(lattice: DataFrame, metric: str, aggregate: str,
+                   precision: int, res: str, ts_ms: int,
+                   predicate: str) -> DataFrame:
+    """`_snapshot` over the cells a `_rect_predicate` selects: the stored
+    `cx`, `cy` answer it with two integer ranges, and all its ranges
+    reach the scan's PushedFilters. No cover is enumerated and no join
+    is planned."""
+    _require_cell_axes(lattice)
+    view = _slice(lattice, metric, precision, res, ts_ms).filter(F.expr(predicate))
     return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
 
 
@@ -342,16 +420,19 @@ def snapshot_bbox_quadtiling(
     → one cell predicate replacing per-quadkey point gets,
     QueryingController.java:248-262).
 
-    When the exact-zoom cover exceeds COVER_ENUM_LIMIT, the cover is taken
-    at the coarsest sufficient zoom and applied as a quadkey-prefix filter
-    (a tile's quadkey prefix IS its ancestor tile's quadkey). Matches the
-    reference's coarse-cover + children-enumeration semantics
-    (QueryingController.java:240-282): edge tiles outside the bbox may be
-    included."""
+    The tiles the reference's cover loop walks form an index rectangle
+    (`geo.quadkey_bbox_rect`), so the lattice's stored tile axes
+    (`cx`, `cy`) answer it with two integer ranges
+    (`quadkey_rect_predicate`); nothing is enumerated. When the
+    exact-zoom cover would exceed COVER_ENUM_LIMIT tiles, the rectangle
+    is taken at the coarsest sufficient zoom (`adaptive_cover_zoom`) and
+    widened to every view tile under it. Matches the reference's coarse-cover +
+    children-enumeration semantics (QueryingController.java:240-282):
+    edge tiles outside the bbox may be included."""
     cover_zoom = adaptive_cover_zoom(north, west, south, east, zoom)
-    cover = geo.quadkey_cover_bbox(north, west, south, east, cover_zoom)
-    return _snapshot(lattice, metric, aggregate, zoom, res, ts_ms,
-                     cover, alphabet=geo.QUAD_ALPHABET)
+    return _snapshot_rect(
+        lattice, metric, aggregate, zoom, res, ts_ms,
+        quadkey_rect_predicate(north, west, south, east, cover_zoom, zoom))
 
 
 def snapshot_radius_quadtiling(
@@ -632,10 +713,11 @@ def snapshot_bbox_geohashing(
 ) -> DataFrame:
     """Snapshot over a bbox in geohashing mode (Q5 → cell predicate,
     replacing cover + base-32 children enumeration,
-    QueryingController.java:240-282). Same adaptive coarse-cover prefix
-    strategy as the quad-tiling path when the exact-precision cover would
-    exceed COVER_ENUM_LIMIT."""
+    QueryingController.java:240-282): the geohash twin of
+    snapshot_bbox_quadtiling. The cover is the lon/lat index rectangle
+    `geo.geohash_bbox_rect`, taken at `adaptive_cover_precision` and
+    widened to the view precision (`geohash_rect_predicate`)."""
     cover_p = adaptive_cover_precision(north, west, south, east, precision)
-    cover = geo.geohash_cover_bbox(north, west, south, east, cover_p)
-    return _snapshot(lattice, metric, aggregate, precision, res, ts_ms,
-                     cover, alphabet=geo.GEOHASH_ALPHABET)
+    return _snapshot_rect(
+        lattice, metric, aggregate, precision, res, ts_ms,
+        geohash_rect_predicate(north, west, south, east, cover_p, precision))

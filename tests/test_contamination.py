@@ -544,3 +544,29 @@ def test_bloom_m_bits_fits_the_32_bit_position_family():
     for m_bits in (2**32 + 1, 0):
         with pytest.raises(ValueError, match="m_bits"):
             C._check_bloom_m(m_bits)
+
+
+def test_bloom_probe_refuses_an_untagged_bitmap(spark, tmp_path):
+    """A `(w, mask)` table without the family tag — one persisted before
+    the one-digest family — sets other bits, so probing it would answer
+    silent false negatives: both probe entry points raise instead. A
+    tagged bitmap keeps its tag through a parquet round trip."""
+    train = _docs_df(spark, [
+        (i, f"alpha beta gamma delta epsilon zeta eta theta iota{i}")
+        for i in range(10)
+    ])
+    C.build_shingle_index(train, str(tmp_path / "sh"))
+    tagged = C.build_bloom_bitmap(spark, str(tmp_path / "sh"))
+    tagged.write.parquet(str(tmp_path / "bitmap"))
+    stored = spark.read.parquet(str(tmp_path / "bitmap"))
+    got = C.contamination_check_bloom(spark, train, str(tmp_path / "sh"),
+                                      bitmap=stored).collect()
+    assert got and all(r["n_contaminated"] == r["n_shingles"] for r in got)
+
+    untagged = stored.select("w", F.col("mask").alias("mask", metadata={}))
+    probes = spark.createDataFrame([(1, 7)], "doc_id long, _h long")
+    with pytest.raises(ValueError, match="bloom bitmap family"):
+        C._bloom_probe(probes, untagged, 1 << 21, 4)
+    with pytest.raises(ValueError, match="bloom bitmap family"):
+        C.contamination_check_bloom(spark, train, str(tmp_path / "sh"),
+                                    bitmap=untagged)

@@ -7,11 +7,12 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from explora_kafka_spark.functions import geo
+from explora_kafka_spark.plans import query as Q
 
 # Mercator-safe domain; stay off exact cell boundaries (float paths may
 # differ by 1 ulp exactly on an edge, flipping the floor)
@@ -126,3 +127,187 @@ def test_compress_cover_membership_equivalence(s, w, dlat, dlon):
             for ch in alphabet:
                 cand = c[:-1] + ch
                 assert member(cand) == (cand in full)
+
+
+# ---------------------------------------------------------------------------
+# bbox covers as index rectangles: cover sizes, and the stored-axes
+# predicate the bbox snapshots filter (`Q.*_rect_predicate`)
+# ---------------------------------------------------------------------------
+
+
+def _coord(draw, lo, hi, step):
+    """A coordinate in [lo, hi]: a float, an exact cell edge, or a bound."""
+    kind = draw(st.sampled_from(["float", "edge", "lo", "hi"]))
+    if kind == "float":
+        return draw(st.floats(min_value=lo, max_value=hi, allow_nan=False))
+    if kind == "edge":
+        return lo + draw(st.integers(0, round((hi - lo) / step))) * step
+    return lo if kind == "lo" else hi
+
+
+def _far(draw, start, lo, hi, step):
+    """The box's other bound: up to 30 cells past `start` (clamped to
+    `hi`, so the top edge comes up), `hi` itself, or below `start`
+    (a box with west > east or south > north)."""
+    kind = draw(st.sampled_from(["cells", "span", "hi", "below"]))
+    if kind == "cells":
+        return min(hi, start + draw(st.integers(0, 30)) * step)
+    if kind == "span":
+        return min(hi, start + draw(st.floats(0, 30 * step, allow_nan=False)))
+    if kind == "hi":
+        return hi
+    return max(lo, start - draw(st.floats(0, 30 * step, allow_nan=False)))
+
+
+@st.composite
+def geohash_boxes(draw):
+    p = draw(st.integers(min_value=1, max_value=8))
+    lon_bits, lat_bits = geo.geohash_axis_bits(p)
+    lat_step, lon_step = 180.0 / (1 << lat_bits), 360.0 / (1 << lon_bits)
+    south = _coord(draw, -90.0, 90.0, lat_step)
+    west = _coord(draw, -180.0, 180.0, lon_step)
+    north = _far(draw, south, -90.0, 90.0, lat_step)
+    east = _far(draw, west, -180.0, 180.0, lon_step)
+    return (north, west, south, east), p
+
+
+@st.composite
+def quadkey_boxes(draw):
+    z = draw(st.integers(min_value=1, max_value=16))
+    step = 360.0 / (1 << z)
+    m = geo.MERCATOR_MAX_LAT
+    south = _coord(draw, -m, m, 170.0 / (1 << z))
+    west = _coord(draw, -180.0, 180.0, step)
+    north = _far(draw, south, -m, draw(st.sampled_from([m, 89.0])),
+                 170.0 / (1 << z))
+    east = _far(draw, west, -180.0, 180.0, step)
+    return (north, west, south, east), z
+
+
+@settings(max_examples=300, deadline=None)
+@given(box=geohash_boxes())
+def test_geohash_cover_size_is_the_cover_length(box):
+    bbox, p = box
+    size = geo.geohash_cover_size(*bbox, p)
+    assume(size <= 4000)
+    assert size == len(geo.geohash_cover_bbox(*bbox, p))
+
+
+@settings(max_examples=300, deadline=None)
+@given(box=quadkey_boxes())
+def test_quadkey_cover_size_is_the_cover_length(box):
+    bbox, z = box
+    size = geo.quadkey_cover_size(*bbox, z)
+    assume(size <= 4000)
+    assert size == len(geo.quadkey_cover_bbox(*bbox, z))
+
+
+def test_cover_sizes_at_the_top_edges():
+    """The walk clamps north = 90 / east = 180 into the last cell; so
+    does the size."""
+    for bbox, p in [((90, 10, 89.9, 10.5), 3), ((10, 179, 9.5, 180), 3),
+                    ((90, 179, 89, 180), 2)]:
+        assert geo.geohash_cover_size(*bbox, p) \
+            == len(geo.geohash_cover_bbox(*bbox, p)) \
+            == {(90, 10, 89.9, 10.5): 1, (10, 179, 9.5, 180): 2,
+                (90, 179, 89, 180): 1}[bbox]
+
+
+def test_antimeridian_boxes_keep_todays_covers():
+    """west > east is not split at ±180: the geohash walk covers one
+    column at west, the quad loop nothing. Sizes and the rectangle
+    predicates say the same."""
+    bbox = (10, 179.5, 9, -179.5)
+    gh = geo.geohash_cover_bbox(*bbox, 4)
+    assert len(gh) == geo.geohash_cover_size(*bbox, 4) == 6
+    assert {geo.geohash_to_index(c)[0] for c in gh} \
+        == {geo.geohash_cell_index(9, 179.5, 4)[0]}
+    assert _selected(Q.geohash_rect_predicate(*bbox, 4, 4), _geohash_cells(gh, 4)) \
+        == set(gh)
+    assert geo.quadkey_cover_bbox(*bbox, 4) == []
+    assert geo.quadkey_cover_size(*bbox, 4) == 0
+    assert Q.quadkey_rect_predicate(*bbox, 4, 4) == "false"
+
+
+def _selected(predicate: str, cells) -> set:
+    """The `gh` of the (gh, cx, cy) rows `predicate` keeps, in DuckDB."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (gh VARCHAR, cx INTEGER, cy INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", list(cells))
+    return {r[0] for r in con.execute(f"SELECT gh FROM t WHERE {predicate}").fetchall()}
+
+
+def _geohash_cells(cover, p):
+    """(gh, cx, cy) of every precision-`p` cell under the cover and of its
+    one-cell ring (which the predicate must drop)."""
+    lon_bits, lat_bits = geo.geohash_axis_bits(p)
+    xy = set()
+    for c in cover:
+        x, y = geo.geohash_to_index(c)
+        kx = lon_bits - geo.geohash_axis_bits(len(c))[0]
+        ky = lat_bits - geo.geohash_axis_bits(len(c))[1]
+        for dx in range(-1, (1 << kx) + 1):
+            for dy in range(-1, (1 << ky) + 1):
+                X, Y = (x << kx) + dx, (y << ky) + dy
+                if 0 <= X < (1 << lon_bits) and 0 <= Y < (1 << lat_bits):
+                    xy.add((X, Y))
+    return [(geo.geohash_from_index(X, Y, p), X, Y) for X, Y in xy]
+
+
+@settings(max_examples=200, deadline=None)
+@given(box=geohash_boxes(), finer=st.integers(0, 1))
+def test_geohash_rect_predicate_selects_exactly_the_cover(box, finer):
+    """Decoding the enumerated cover to (cx, cy): the snapshot's
+    predicate at view precision p + `finer` keeps exactly the view cells
+    under the cover (and none of its ring)."""
+    bbox, p = box
+    assume(geo.geohash_cover_size(*bbox, p) * 32 ** finer <= 3000)
+    cover = geo.geohash_cover_bbox(*bbox, p)
+    view = p + finer
+    cells = _geohash_cells(cover, view)
+    want = {gh for gh, _, _ in cells if gh[:p] in set(cover)}
+    assert _selected(Q.geohash_rect_predicate(*bbox, p, view), cells) == want
+
+
+@settings(max_examples=200, deadline=None)
+@given(box=quadkey_boxes(), finer=st.integers(0, 2))
+def test_quadkey_rect_predicate_selects_exactly_the_cover(box, finer):
+    bbox, z = box
+    assume(geo.quadkey_cover_size(*bbox, z) * 4 ** finer <= 3000)
+    cover = set(geo.quadkey_cover_bbox(*bbox, z))
+    view, n = z + finer, 1 << (z + finer)
+    if not cover:  # south > north or west > east: the loop runs empty
+        assert Q.quadkey_rect_predicate(*bbox, z, view) == "false"
+        return
+    xy = set()
+    for c in cover:
+        x, y = geo.quadkey_to_tile(c)
+        for dx in range(-1, (1 << finer) + 1):
+            for dy in range(-1, (1 << finer) + 1):
+                xy.add((((x << finer) + dx) % n, ((y << finer) + dy) % n))
+    cells = [(geo.tile_to_quadkey(X, Y, view), X, Y) for X, Y in xy]
+    want = {qk for qk, _, _ in cells if qk[:z] in cover}
+    assert _selected(Q.quadkey_rect_predicate(*bbox, z, view), cells) == want
+
+
+def test_cell_axes_match_the_pure_decoders(spark):
+    """`with_cell_axes` (native SQL, one expression for every precision)
+    equals `geohash_to_index` / `quadkey_to_tile` on random cells of
+    every precision; a string that is no cell of the scheme gets null
+    axes."""
+    import random
+
+    rng = random.Random(11)
+    points = [(rng.uniform(-85, 85), rng.uniform(-180, 180)) for _ in range(400)]
+    cases = {
+        "geohash": ([geo.geohash_encode(la, lo, rng.randint(1, 12)) for la, lo in points]
+                    + [geo.geohash_encode(90.0, 180.0, 12), geo.geohash_encode(-90.0, -180.0, 1)],
+                    geo.geohash_to_index, ["u1a", "u1b0000000000", "UB"]),
+        "quadkey": ([geo.quadkey(la, lo, rng.randint(1, 31)) for la, lo in points],
+                    geo.quadkey_to_tile, ["124", "0" * 32]),
+    }
+    for cells, (valid, decode, invalid) in cases.items():
+        df = spark.createDataFrame([(c,) for c in valid + invalid], "gh string")
+        got = {r.gh: (r.cx, r.cy) for r in geo.with_cell_axes(df, cells).collect()}
+        assert all(got[c] == decode(c) for c in valid), cells
+        assert all(got[c] == (None, None) for c in invalid), cells

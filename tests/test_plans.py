@@ -278,10 +278,10 @@ def test_time_predicates_reach_the_scan(plans):
 def test_large_covers_are_joinless_predicates(plans, spark):
     # large covers prefix-compress (compress_cover) and ship as one SQL IN
     # expression (no join, no broadcast build, no exchange on the probe
-    # side) up to COMPRESSED_COVER_LIMIT prefixes. The registry's bbox
-    # cover is 7,482 cells (538 prefixes); the route cover is 5,090 cells
-    # (1,463 prefixes), so it stays joinless only when the route path
-    # compresses with its alphabet.
+    # side) up to COMPRESSED_COVER_LIMIT prefixes. The route cover is
+    # 5,090 cells (1,463 prefixes), so it stays joinless only when the
+    # route path compresses with its alphabet. The registry's bbox (a
+    # 7,482-cell cover) filters the stored rectangle and enumerates none.
     route = Q.snapshot_route_geohashing(
         E._geo_lattice(spark, SF_DIR, "geohash", 5, 3), "view", "count", 3,
         "day", E._SNAP_DAY_MS, [(-50.0, -100.0), (-10.0, -20.0), (30.0, 60.0)],

@@ -146,7 +146,7 @@ def test_repoint_serves_the_new_lattice(small_srv, small_lattice):
 
 
 def test_cached_requests_answer_concurrently(small_srv):
-    # the city takes the IN-predicate path, the strip the broadcast join
+    # a small and a long thin bbox, each filtering the stored rectangle
     ctx, base = small_srv
     cases = [(bbox, agg) for bbox in ("city", "strip") for agg in ("avg", "sum", "count")]
     want = {c: _uncached(ctx.lattice, *c) for c in cases}

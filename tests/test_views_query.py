@@ -3,6 +3,7 @@ merge algebra), incremental update, and history/snapshot vs DuckDB oracles."""
 
 import gc
 import re
+import threading
 
 import duckdb
 import pytest
@@ -190,8 +191,17 @@ def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
 
     sent = []
     send = gw.GatewayClient.send_command
-    monkeypatch.setattr(gw.GatewayClient, "send_command",
-                        lambda client, *a, **kw: sent.append(1) or send(client, *a, **kw))
+    me = threading.get_ident()
+
+    def counted(client, command, *a, **kw):
+        # this thread's plan commands: object releases ("m" "d") come
+        # whenever Python's GC runs, and other threads' commands are
+        # not this plan's
+        if threading.get_ident() == me and not command.startswith("m\nd\n"):
+            sent.append(1)
+        return send(client, command, *a, **kw)
+
+    monkeypatch.setattr(gw.GatewayClient, "send_command", counted)
 
     def calls(bbox):
         # release earlier tests' garbage first: Python's GC sends one
@@ -236,6 +246,29 @@ TAIL_ROUTES = {
 }
 
 
+def _cover_snapshot(lattice, aggregate, res, ts_ms, bbox, cells, precision=6):
+    """A bbox snapshot through its enumerated cover at the adaptive
+    precision (IN list, or broadcast semi-join above
+    COMPRESSED_COVER_LIMIT prefixes): the route's plan before it
+    filtered the stored rectangle."""
+    if cells == "quadkey":
+        z = Q.adaptive_cover_zoom(*bbox, precision)
+        cover, alphabet = geo.quadkey_cover_bbox(*bbox, z), geo.QUAD_ALPHABET
+    else:
+        p = Q.adaptive_cover_precision(*bbox, precision)
+        cover, alphabet = geo.geohash_cover_bbox(*bbox, p), geo.GEOHASH_ALPHABET
+    return Q._snapshot(lattice, "m", aggregate, precision, res, ts_ms, cover,
+                       alphabet=alphabet)
+
+
+COVER_ROUTES = {
+    "snapshot_in": lambda lat: _cover_snapshot(
+        lat, "avg", "min", SMALL_TS_MS + 120_000, SMALL_BBOXES["city"], "geohash"),
+    "snapshot_strip": lambda lat: _cover_snapshot(
+        lat, "count", "min", SMALL_TS_MS, SMALL_BBOXES["strip"], "geohash"),
+}
+
+
 @pytest.fixture
 def uncoalesced_shuffles(spark):
     """AQE keeps every shuffle partition, so a tiny result still spans
@@ -261,10 +294,7 @@ def test_served_result_takes_one_shuffle(spread_lattice, uncoalesced_shuffles,
     plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
     assert "rangepartitioning" not in plan
     assert plan.count("Exchange hashpartitioning") <= 1
-    if route == "snapshot_strip":
-        assert "BroadcastHashJoin" in plan
-    else:
-        assert "Join" not in plan
+    assert "Join" not in plan
     monkeypatch.setattr(Q, "_sorted", lambda d, key: d.orderBy(key))
     assert len(rows) > 1 and rows == TAIL_ROUTES[route](spread_lattice).collect()
 
@@ -279,10 +309,10 @@ def _jobs_and_stages(sc, group):
 def test_snapshot_tail_merges_nothing(spark, spread_lattice, monkeypatch,
                                       route):
     """A snapshot slice holds one row per cell, so the tail serves it as
-    it is: the IN path plans no exchange and no aggregate and runs one
-    job of one stage; the strip adds only its cover's broadcast, a
-    second job and stage. Rows and order equal the per-cell group-by
-    form the tail had before."""
+    it is: a bbox snapshot, the city's or the strip's whose 5,462-cell
+    cover once took a broadcast join, plans no exchange and no aggregate
+    and runs one job of one stage. Rows and order equal the enumerated
+    cover's under the per-cell group-by form the tail had before."""
     sc = spark.sparkContext
     group = f"snapshot-tail-{route}"
     sc.setJobGroup(group, group)
@@ -293,17 +323,74 @@ def test_snapshot_tail_merges_nothing(spark, spread_lattice, monkeypatch,
         sc.setJobGroup(None, None)
     plan = _plan(df).split("== Initial Plan ==")[0]
     assert "HashAggregate" not in plan
-    exchanges = re.findall(r"\w*Exchange\b", plan)
-    if route == "snapshot_strip":
-        assert exchanges == ["BroadcastExchange"]
-        assert _jobs_and_stages(sc, group) == (2, 2)
-    else:
-        assert exchanges == []
-        assert _jobs_and_stages(sc, group) == (1, 1)
+    assert re.findall(r"\w*Exchange\b", plan) == []
+    assert _jobs_and_stages(sc, group) == (1, 1)
     cells = Q._filter_cells
     monkeypatch.setattr(Q, "_filter_cells", lambda *a: cells(*a).groupBy(
         "gh").agg(*Q._merge_cols()))
-    assert len(rows) > 1 and rows == TAIL_ROUTES[route](spread_lattice).collect()
+    assert len(rows) > 1 and rows == COVER_ROUTES[route](spread_lattice).collect()
+
+
+RECT_CASES = [("geohash", box) for box in ("city", "strip")] + [("quadkey", "quad")]
+
+
+@pytest.mark.parametrize("cells,box", RECT_CASES)
+def test_bbox_snapshot_filters_the_stored_rectangle(spark, small_lattice,
+                                                    cells, box):
+    """A bbox snapshot filters the stored cell axes: the scan's
+    PushedFilters hold the `cx`/`cy` ranges and the `gh` Morton range,
+    the plan has no exchange or join and enumerates no cover, and the
+    rows and order equal the enumerated cover's."""
+    lattice = small_lattice()
+    route = (Q.snapshot_bbox_quadtiling if cells == "quadkey"
+             else Q.snapshot_bbox_geohashing)
+    df = route(lattice, "m", "avg", 6, "min", SMALL_TS_MS, *SMALL_BBOXES[box])
+    rows = df.collect()
+    assert set(SMALL_CELLS[box]) <= {r.gh for r in rows}
+    assert rows == _cover_snapshot(lattice, "avg", "min", SMALL_TS_MS,
+                                   SMALL_BBOXES[box], cells).collect()
+
+
+@pytest.mark.parametrize("cells,box", RECT_CASES)
+def test_bbox_rectangle_reaches_the_parquet_scan(spark, small_lattice,
+                                                 tmp_path, cells, box):
+    """Written to parquet, the rectangle's three ranges reach the scan's
+    PushedFilters, and the plan has no exchange and no join."""
+    path = str(tmp_path / "lattice")
+    small_lattice().write.partitionBy("metric_id", "precision", "res").parquet(path)
+    lattice = spark.read.parquet(path)
+    route = (Q.snapshot_bbox_quadtiling if cells == "quadkey"
+             else Q.snapshot_bbox_geohashing)
+    df = route(lattice, "m", "count", 6, "min", SMALL_TS_MS, *SMALL_BBOXES[box])
+    # print the scan's whole filter list, not its first 100 characters
+    key = "spark.sql.maxMetadataStringLength"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        plan = _plan(df)
+    finally:
+        spark.conf.set(key, before)
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    for col in ("cx", "cy", "gh"):
+        assert f"GreaterThanOrEqual({col}," in pushed
+        assert f"LessThanOrEqual({col}," in pushed
+    assert "Exchange" not in plan and "Join" not in plan
+    assert set(SMALL_CELLS[box]) <= {r.gh for r in df.collect()}
+
+
+def test_bbox_snapshot_refuses_a_lattice_without_cell_axes(spark, small_lattice):
+    """A lattice written before rows stored `cx`/`cy` fails loudly,
+    before any Spark job, instead of answering from a missing column."""
+    old = small_lattice().drop("cx", "cy")
+    sc = spark.sparkContext
+    sc.setJobGroup("no-axes", "no-axes")
+    try:
+        for route in (Q.snapshot_bbox_geohashing, Q.snapshot_bbox_quadtiling):
+            with pytest.raises(ValueError, match="compact_store"):
+                route(old, "m", "avg", 6, "min", SMALL_TS_MS, *SMALL_BBOXES["city"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("no-axes") == []
 
 
 def test_interval_arithmetic():

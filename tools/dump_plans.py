@@ -2,7 +2,8 @@
 claims in SCALE.md (pushdown, partition pruning, broadcast joins, no
 cartesian products, struct-IN merge pruning).
 
-Usage: python tools/dump_plans.py   (writes PLANS.md at the repo root)
+Usage: python tools/dump_plans.py            (writes PLANS.md at the repo root)
+       python tools/dump_plans.py NAME ...   (replaces only those sections)
 """
 
 from __future__ import annotations
@@ -28,21 +29,24 @@ CASES: dict[str, tuple[str, list[str]]] = {
         [r"FileScan", r"PartitionFilters", r"PushedFilters"],
     ),
     "snapshot_bbox_quad": (
-        "BBox cover becomes a cell-prefix membership predicate, pushed to "
-        "the scan — never an unbounded literal enumeration.",
-        [r"FileScan", r"PartitionFilters", r"PushedFilters"],
+        "A bbox cover is an index rectangle: the scan's PushedFilters hold "
+        "integer ranges on the stored tile axes (cx, cy) and the gh range "
+        "between the rectangle's Morton corners. No cover is enumerated, "
+        "no IN list is shipped, and the plan has no join, no Exchange and "
+        "no BroadcastExchange.",
+        [r"FileScan", r"PartitionFilters", r"PushedFilters", r"Join",
+         r"Exchange"],
     ),
     "snapshot_bbox_geohash": (
-        "A 7,482-cell cover prefix-compresses (compress_cover) to 538 "
-        "prefixes and ships as one SQL IN expression (one IN per prefix "
-        "length) — no broadcast build; only covers above 4,096 "
-        "compressed prefixes become a broadcast semi-join. Asserted "
-        "join-free in tests/test_plans.py::"
-        "test_large_covers_are_joinless_predicates. The slice holds one "
-        "row per cell (the view store's key-uniqueness invariant, "
-        "plans/views.py), so nothing is merged: no aggregate and no "
-        "exchange, only the scan, its filter and a sort inside one "
-        "partition, one job of one stage "
+        "The precision-3 bbox's 7,482-cell cover is never enumerated: the "
+        "scan pushes cx/cy ranges (lon/lat cell indices) and the gh Morton "
+        "range, so the plan is the same whatever the cover size "
+        "(tests/test_views_query.py::"
+        "test_bbox_rectangle_reaches_the_parquet_scan). The slice holds "
+        "one row per cell (the view store's key-uniqueness invariant, "
+        "plans/views.py), so nothing is merged: no aggregate, no Exchange "
+        "and no BroadcastExchange, only the scan, its filter and a sort "
+        "inside one partition, one job of one stage "
         "(tests/test_views_query.py::test_snapshot_tail_merges_nothing).",
         [r"FileScan", r"PartitionFilters", r"Join", r"Exchange",
          r"HashAggregate", r"Sort", r"Coalesce"],
@@ -425,41 +429,58 @@ CASES: dict[str, tuple[str, list[str]]] = {
 }
 
 
-def main() -> None:
+def _section(name: str, df) -> list[str]:
+    """PLANS.md's section for one case: its claim and the plan lines its
+    selectors keep."""
+    claim, pats = CASES[name]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    keep = []
+    for line in plan.splitlines():
+        if any(re.search(p, line) for p in pats):
+            # trim codegen ids and long schema tails for readability
+            line = re.sub(r"\s+ReadSchema:.*$", "", line.rstrip())
+            keep.append(line[:1000])
+    return [f"## {name}", "", claim, "", "```",
+            *(keep if keep else ["(no matching nodes — plan below)",
+                                 *plan.splitlines()[:10]]),
+            "```", ""]
+
+
+def main(names: list[str]) -> None:
+    """Write every CASES section, or with `names` replace only those
+    sections of the existing PLANS.md."""
     spark = get_spark(app_name="explora-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    # print scan filter lists whole (the default cuts them at 100 chars)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "400")
     queries = E.queries()
-    out = [
-        "# PLANS — captured physical-plan evidence (sf0.01)",
-        "",
-        "Generated by `python tools/dump_plans.py`. Each section keeps only",
-        "the load-bearing plan rows (scans, joins, exchanges) for the claim",
-        "it evidences; `tests/test_plans.py` asserts the same properties in",
-        "CI so they cannot regress silently.",
-        "",
-    ]
-    for name, (claim, pats) in CASES.items():
-        df = queries[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        keep = []
-        for line in plan.splitlines():
-            if any(re.search(p, line) for p in pats):
-                # trim codegen ids and long schema tails for readability
-                line = re.sub(r"\s+ReadSchema:.*$", "", line.rstrip())
-                keep.append(line[:400])
-        out.append(f"## {name}")
-        out.append("")
-        out.append(claim)
-        out.append("")
-        out.append("```")
-        out.extend(keep if keep else ["(no matching nodes — plan below)",
-                                      *plan.splitlines()[:10]])
-        out.append("```")
-        out.append("")
+    sections = {name: _section(name, queries[name](spark, SF_DIR))
+                for name in (names or CASES)}
+    if names:
+        with open("PLANS.md") as f:
+            text = f.read()
+        for name, lines in sections.items():
+            head = f"## {name}\n"
+            start = text.index(head)
+            end = text.find("\n## ", start + len(head))
+            end = len(text) if end < 0 else end + 1
+            text = text[:start] + "\n".join(lines) + "\n" + text[end:]
+        out = text
+    else:
+        out = "\n".join([
+            "# PLANS — captured physical-plan evidence (sf0.01)",
+            "",
+            "Generated by `python tools/dump_plans.py`. Each section keeps only",
+            "the load-bearing plan rows (scans, joins, exchanges) for the claim",
+            "it evidences; `tests/test_plans.py` asserts the same properties in",
+            "CI so they cannot regress silently.",
+            "",
+            *(line for lines in sections.values() for line in lines),
+        ])
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
+        f.write(out)
     print("wrote PLANS.md")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
