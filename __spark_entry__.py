@@ -186,8 +186,6 @@ _GEO_LATTICES: dict[tuple, str] = {}
 #: and the re-grouped float `sum` fold diverges at the last ulp from
 #: the standalone builds' stored rows.
 _GEO_SPECS = (("quad", 6, 6), ("geohash", 5, 3), ("quad", 14, 14))
-#: the lattice cell scheme (`views.view_lattice`'s `cells`) per kind
-_CELL_SCHEME = {"geohash": "geohash", "quad": "quadkey"}
 
 
 def _build_geo_lattices(spark, sf_dir: str) -> None:
@@ -199,7 +197,7 @@ def _build_geo_lattices(spark, sf_dir: str) -> None:
         d = tempfile.mkdtemp(prefix="explora_geoviews_")
         _TMPDIRS.append(d)
         V.build_views(r, f"{d}/views", precisions=(view_p,),
-                      resolutions=("day",), cells=_CELL_SCHEME[kind])
+                      resolutions=("day",))
         _GEO_LATTICES[(sf_dir, kind, cell_p, view_p)] = f"{d}/views"
 
     with ThreadPoolExecutor(max_workers=len(_GEO_SPECS)) as pool:
@@ -219,7 +217,7 @@ def _geo_lattice(spark, sf_dir, kind, cell_precision, view_precision) -> DataFra
             _TMPDIRS.append(d)
             V.build_views(r, f"{d}/views",
                           precisions=(view_precision,),
-                          resolutions=("day",), cells=_CELL_SCHEME[kind])
+                          resolutions=("day",))
             _GEO_LATTICES[key] = f"{d}/views"
     return spark.read.parquet(_GEO_LATTICES[key])
 
@@ -352,8 +350,8 @@ def q_geohash_cells(spark, sf_dir):
 
 
 def q_snapshot_bbox_quad(spark, sf_dir):
-    """Q4 bbox→quadkey cover at zoom 6: the lattice's stored tile axes
-    (cx, cy) filtered by the cover's index rectangle, no cover enumerated."""
+    """Q4 bbox→quadkey cover at zoom 6: each row's tile x/y, read from its
+    quadkey, filtered by the cover's index rectangle; no cover enumerated."""
     lattice = _geo_lattice(spark, sf_dir, "quad", 6, 6)
     df = Q.snapshot_bbox_quadtiling(lattice, "view", "count", 6, "day",
                                     _SNAP_DAY_MS, *_BBOX)
@@ -362,8 +360,8 @@ def q_snapshot_bbox_quad(spark, sf_dir):
 
 def q_snapshot_bbox_geohash(spark, sf_dir):
     """Q5 bbox→geohash cover at precision 3: its 7,482 cells are an index
-    rectangle, filtered as cx/cy ranges pushed to the scan — no cover
-    enumerated, no IN list and no join."""
+    rectangle, filtered as two axis ranges on each row's geohash plus a gh
+    range pushed to the scan — no cover enumerated, no IN list, no join."""
     lattice = _geo_lattice(spark, sf_dir, "geohash", 5, 3)
     df = Q.snapshot_bbox_geohashing(lattice, "view", "count", 3, "day",
                                     _SNAP_DAY_MS, *_BBOX)

@@ -19,8 +19,8 @@ algorithm (Niemeyer 2008); the reference uses com.github.davidmoten:geo for it.
 
 Driver-side covers are pure functions. A bbox cover is an index rectangle
 (`geohash_bbox_rect`, `quadkey_bbox_rect`, O(1)), which the bbox snapshots
-filter on each lattice row's stored cell axes (`with_cell_axes`) without
-enumerating it; refined region covers (circle, polygon, route) are
+filter on each lattice row's cell axes, read from its `gh` as a Morton code
+(`cell_morton_sql`), without enumerating it; refined region covers (circle, polygon, route) are
 enumerated and pushed down as one `IN` expression, or broadcast-joined when
 large. Per-row cell derivation is exposed as **native Column expressions**
 (bit arithmetic / substring), not Python UDFs, so the hot path stays inside
@@ -32,7 +32,7 @@ from __future__ import annotations
 import math
 from typing import List, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -712,71 +712,47 @@ def _geohash_bit_layout(precision: int):
     return lon_bits, lat_bits, chars
 
 
-#: cell schemes a lattice's `gh` column can hold
-CELL_SCHEMES = ("geohash", "quadkey")
-
 #: base-32 digits in `conv`'s order, position for position with _BASE32
 _CONV_BASE32 = "0123456789abcdefghijklmnopqrstuv"
 
 
-#: (shift, mask) steps that gather the even bits of a 62-bit word into
-#: its low 31 bits (the classic Morton "compact by one" sequence)
-_COMPACT_STEPS = (
-    (1, 0x3333333333333333), (2, 0x0F0F0F0F0F0F0F0F), (4, 0x00FF00FF00FF00FF),
-    (8, 0x0000FFFF0000FFFF), (16, 0x00000000FFFFFFFF),
-)
+def dilate(v: int, offset: int) -> int:
+    """`v` with its bits spread to every other bit of a Morton code, bit i
+    to bit 2i + `offset`. Spreading keeps order, so an axis range
+    a ≤ x ≤ b is `dilate(a) ≤ code & dilate(all ones) ≤ dilate(b)`."""
+    out, i = 0, 0
+    while v:
+        out |= (v & 1) << (2 * i + offset)
+        v >>= 1
+        i += 1
+    return out
 
 
-def _even_bits_sql(source: str, out: str) -> list[str]:
-    """SELECT items leaving `out` = the even bits of the SQL long
-    `source`, packed into an int (Morton de-interleave of one axis). Each
-    step is a lateral alias of the one before, so it is evaluated once
-    and every expression stays small."""
-    items = [f"({source}) & {0x5555555555555555} AS _{out}0"]
-    for i, (shift, mask) in enumerate(_COMPACT_STEPS):
-        items.append(f"(_{out}{i} | shiftright(_{out}{i}, {shift})) & {mask}"
-                     f" AS _{out}{i + 1}")
-    return items + [f"CAST(_{out}{len(_COMPACT_STEPS)} AS INT) AS {out}"]
+def cell_morton_sql(cells: str, precision: int) -> Tuple[str, int, int]:
+    """(SQL, x offset, y offset): a lattice `gh` read as its cell's Morton
+    code — a BIGINT whose bits alternate between the axes, x (longitude,
+    tile x) on the bits from `x offset` up, y on those from `y offset` —
+    natively, no Python UDF.
 
-
-def with_cell_axes(df: DataFrame, cells: str = "geohash") -> DataFrame:
-    """`df` with its cell's integer axes `cx`, `cy` at the cell's own
-    precision, derived from `gh` natively (no Python UDF).
-
-    `cells` names the scheme `gh` holds — never guessed from the data: a
-    quadkey's digits are valid base-32 too.
-    - "geohash": `cx`/`cy` are the longitude/latitude indices
-      `geohash_to_index` returns (up to precision 12);
-    - "quadkey": `cx`/`cy` are the tile x/y `quadkey_to_tile` returns
-      (up to zoom 31).
-
-    One SQL expression per axis serves every precision: `gh` read as a
-    base-32 (base-4) integer is the cell's Morton code, whose axis bits
-    alternate, longitude (x) first from the top. A `gh` that is no cell
-    of the scheme (a character outside its alphabet, or longer) gets
-    null axes, so no rectangle selects it — as no cover would."""
+    `cells` names the scheme `gh` holds ("geohash" or "quadkey"): the
+    route knows it, and it is never guessed from the data (a quadkey's
+    digits are valid base-32 too). A `gh` that is no `precision` cell of
+    the scheme (another length, or a character outside its alphabet)
+    reads as null, so no axis range selects it — as no cover would."""
     if cells == "geohash":
-        alphabet, max_len = _BASE32, 12
+        alphabet = _BASE32
         digits = f"conv(translate(gh, '{_BASE32}', '{_CONV_BASE32}'), 32, 10)"
-        # 5·len bits: longitude holds the top bit, so it sits on the even
-        # positions iff the length is odd
-        x_bits, y_bits = ("shiftright(_cell_m, 1 - length(gh) % 2)",
-                          "shiftright(_cell_m, length(gh) % 2)")
+        # 5·precision bits with longitude on the top one: longitude sits
+        # on the even bits iff the bit count is odd
+        x_off = 1 - precision % 2
     elif cells == "quadkey":
-        alphabet, max_len = QUAD_ALPHABET, 31
-        digits = "conv(gh, 4, 10)"
-        x_bits, y_bits = "_cell_m", "shiftright(_cell_m, 1)"
+        alphabet, digits, x_off = QUAD_ALPHABET, "conv(gh, 4, 10)", 0
     else:
-        raise ValueError(f"cells must be one of {CELL_SCHEMES}; got {cells!r}")
-    morton = (f"CASE WHEN length(gh) <= {max_len}"
-              f" AND translate(gh, '{alphabet}', '') = ''"
-              f" THEN CAST({digits} AS BIGINT) END")
-    temps = ["_cell_m"] + [f"_{c}{i}" for c in ("cx", "cy")
-                           for i in range(len(_COMPACT_STEPS) + 1)]
-    return df.selectExpr(
-        "*", f"{morton} AS _cell_m",
-        *_even_bits_sql(x_bits, "cx"), *_even_bits_sql(y_bits, "cy"),
-    ).drop(*temps)
+        raise ValueError(f"cells must be 'geohash' or 'quadkey'; got {cells!r}")
+    sql = (f"CASE WHEN length(gh) = {precision}"
+           f" AND translate(gh, '{alphabet}', '') = ''"
+           f" THEN CAST({digits} AS BIGINT) END")
+    return sql, x_off, 1 - x_off
 
 
 def geohash_col(lat_col: Column, lon_col: Column, precision: int) -> Column:

@@ -12,10 +12,11 @@ These are the engine's two query shapes (QueryingService.java:38-143):
   replaces tile-cover point lookups / geohash children enumeration
   (QueryingController.java:100-121, 232-282). A bbox cover is an index
   rectangle [x0..x1] × [y0..y1] (`geo.geohash_bbox_rect`,
-  `geo.quadkey_bbox_rect`, O(1)), so the bbox routes filter every lattice
-  row's stored cell axes (`cx`, `cy`, plans/views.py) with two integer
-  ranges plus the `gh` range between the rectangle's Morton corners — all
-  pushed to the parquet scan, no cover enumerated (`_snapshot_rect`).
+  `geo.quadkey_bbox_rect`, O(1)), so the bbox routes read each lattice
+  row's cell axes from its `gh` (the cell's Morton code,
+  `geo.cell_morton_sql`), filter them with two integer ranges, and push
+  the `gh` range between the rectangle's Morton corners to the parquet
+  scan — no cover enumerated, no store column added (`_snapshot_rect`).
   Radius, polygon and route covers are refined cell by cell, so they are
   computed driver-side (pure functions, functions/geo.py) and take one of
   two paths. Up to COMPRESSED_COVER_LIMIT prefixes after
@@ -59,7 +60,7 @@ from ..functions.timeutil import (
 #: interiors are complete subtrees); larger sets (user-supplied history
 #: cells, long thin route corridors) become a broadcast semi-join, which
 #: beats a huge literal list. Bbox snapshots never get here: they filter
-#: the stored rectangle.
+#: their cover's index rectangle.
 COMPRESSED_COVER_LIMIT = 4096
 
 
@@ -175,72 +176,74 @@ def _snapshot(lattice: DataFrame, metric: str, aggregate: str,
     return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
 
 
-def _require_cell_axes(lattice: DataFrame) -> None:
-    """Refuse a lattice written before rows stored their cell axes: a
-    schema check, no Spark job."""
-    if not {"cx", "cy"} <= set(lattice.columns):
-        raise ValueError(
-            "lattice has no cx/cy cell-axis columns (written before they "
-            "were stored): rebuild it with build_views, or rewrite its "
-            "store with compact_store, before serving bbox snapshots")
-
-
-def _axis_between(col: str, ranges, shift: int) -> str:
-    """`col` inside any of the inclusive index `ranges`, each taken from
-    the cover precision down to the view's: cell i holds view cells
-    i<<shift … ((i+1)<<shift)-1."""
-    terms = [f"{col} BETWEEN {a << shift} AND {((b + 1) << shift) - 1}"
+def _axis_between(code: str, offset: int, ranges, shift: int) -> str:
+    """The axis on the bits from `offset` up of the Morton `code` inside
+    any of the inclusive index `ranges`, each taken from the cover
+    precision down to the view's: cell i holds view cells i<<shift …
+    ((i+1)<<shift)-1. Spreading an index onto its bits keeps order
+    (`geo.dilate`), so the masked code compares against spread bounds."""
+    axis = f"(({code}) & {geo.dilate((1 << 31) - 1, offset)})"
+    terms = [f"{axis} BETWEEN {geo.dilate(a << shift, offset)}"
+             f" AND {geo.dilate(((b + 1) << shift) - 1, offset)}"
              for a, b in ranges]
     return terms[0] if len(terms) == 1 else "(" + " OR ".join(terms) + ")"
 
 
-def _rect_predicate(xs, ys, kx: int, ky: int, cell_code) -> str:
-    """SQL predicate on (`cx`, `cy`, `gh`) selecting the view cells under
-    an index rectangle: x in any of `xs`, y in any of `ys` (inclusive
-    ranges at the cover precision, `kx` / `ky` bits coarser than the
-    view's per axis). The `gh` range between the rectangle's two Morton
-    corners (`cell_code(x, y)` at the view precision: `gh` order is
-    Morton order) rides along, so a gh-sorted file skips its row groups
-    outside it."""
+def _rect_predicate(xs, ys, kx: int, ky: int, cell_code, morton) -> str:
+    """SQL predicate on a slice's rows selecting the view cells under an
+    index rectangle: x in any of `xs`, y in any of `ys` (inclusive ranges
+    at the cover precision, `kx` / `ky` bits coarser than the view's per
+    axis), read from each row's Morton code (`morton`: its SQL and the
+    x, y bit offsets, `geo.cell_morton_sql`). The `gh` range between the
+    rectangle's two Morton corners (`cell_code(x, y)` at the view
+    precision: `gh` order is Morton order) rides along and reaches the
+    scan, so a gh-sorted file skips its row groups outside it."""
     if not xs or not ys:
         return "false"
+    code, x_off, y_off = morton
     lo = cell_code(xs[0][0] << kx, ys[0][0] << ky)
     hi = cell_code(((xs[-1][1] + 1) << kx) - 1, ((ys[-1][1] + 1) << ky) - 1)
-    return (f"{_axis_between('cx', xs, kx)} AND {_axis_between('cy', ys, ky)}"
-            f" AND gh BETWEEN '{lo}' AND '{hi}'")
+    return (f"gh BETWEEN '{lo}' AND '{hi}'"
+            f" AND {_axis_between(code, x_off, xs, kx)}"
+            f" AND {_axis_between(code, y_off, ys, ky)}")
 
 
 def geohash_rect_predicate(north: float, west: float, south: float,
-                           east: float, cover_p: int, precision: int) -> str:
+                           east: float, cover_p: int, precision: int,
+                           morton=None) -> str:
     """The `precision` cells under the bbox's precision-`cover_p` cover
-    (`geo.geohash_cover_bbox`), as a `_rect_predicate`; each axis widens
-    by its own bit count."""
+    (`geo.geohash_cover_bbox`), as a `_rect_predicate` on `gh` (`morton`:
+    `geo.cell_morton_sql` by default); each axis widens by its own bit
+    count."""
     x0, x1, y0, y1 = geo.geohash_bbox_rect(north, west, south, east, cover_p)
     lon_bits, lat_bits = geo.geohash_axis_bits(precision)
     cover_lon, cover_lat = geo.geohash_axis_bits(cover_p)
     return _rect_predicate(
         [(x0, x1)], [(y0, y1)], lon_bits - cover_lon, lat_bits - cover_lat,
-        lambda x, y: geo.geohash_from_index(x, y, precision))
+        lambda x, y: geo.geohash_from_index(x, y, precision),
+        morton or geo.cell_morton_sql("geohash", precision))
 
 
 def quadkey_rect_predicate(north: float, west: float, south: float,
-                           east: float, cover_zoom: int, zoom: int) -> str:
+                           east: float, cover_zoom: int, zoom: int,
+                           morton=None) -> str:
     """The `zoom` tiles under the bbox's zoom-`cover_zoom` cover
-    (`geo.quadkey_cover_bbox`), as a `_rect_predicate`."""
+    (`geo.quadkey_cover_bbox`), as a `_rect_predicate` on `gh` (`morton`:
+    `geo.cell_morton_sql` by default)."""
     xs, ys = geo.quadkey_bbox_rect(north, west, south, east, cover_zoom)
     k = zoom - cover_zoom
-    return _rect_predicate(xs, ys, k, k,
-                           lambda x, y: geo.tile_to_quadkey(x, y, zoom))
+    return _rect_predicate(
+        xs, ys, k, k, lambda x, y: geo.tile_to_quadkey(x, y, zoom),
+        morton or geo.cell_morton_sql("quadkey", zoom))
 
 
 def _snapshot_rect(lattice: DataFrame, metric: str, aggregate: str,
                    precision: int, res: str, ts_ms: int,
                    predicate: str) -> DataFrame:
-    """`_snapshot` over the cells a `_rect_predicate` selects: the stored
-    `cx`, `cy` answer it with two integer ranges, and all its ranges
-    reach the scan's PushedFilters. No cover is enumerated and no join
-    is planned."""
-    _require_cell_axes(lattice)
+    """`_snapshot` over the cells a `_rect_predicate` selects: each row's
+    axes are read from its `gh`, so any lattice answers it, and the `gh`
+    range reaches the scan's PushedFilters. No cover is enumerated and
+    no join is planned."""
     view = _slice(lattice, metric, precision, res, ts_ms).filter(F.expr(predicate))
     return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
 
@@ -421,8 +424,8 @@ def snapshot_bbox_quadtiling(
     QueryingController.java:248-262).
 
     The tiles the reference's cover loop walks form an index rectangle
-    (`geo.quadkey_bbox_rect`), so the lattice's stored tile axes
-    (`cx`, `cy`) answer it with two integer ranges
+    (`geo.quadkey_bbox_rect`), so each row's tile x and y, read from its
+    quadkey, answer it with two integer ranges
     (`quadkey_rect_predicate`); nothing is enumerated. When the
     exact-zoom cover would exceed COVER_ENUM_LIMIT tiles, the rectangle
     is taken at the coarsest sufficient zoom (`adaptive_cover_zoom`) and

@@ -29,23 +29,15 @@ relies on it: it serves a slice's rows as they are, without re-merging them,
 so a writer that broke it would answer two rows for one cell
 (tests/test_view_keys.py checks every writer).
 
-**Cell axes**: every row also stores its cell's integer axes `cx`, `cy`
-at the row's own precision (`geo.with_cell_axes`: geohash lon/lat
-indices, or quadkey tile x/y), derived from `gh` after the writer's
-final aggregate (`build_views`: after its range exchange), so the key
-is unchanged. The writers take the cell
-scheme as an explicit `cells` argument ("geohash" by default; quad
-lattices pass "quadkey"), never guessed from the data. The bbox
-snapshots filter these columns with two pushed integer ranges instead of
-enumerating a cover; a store written before them is refused there and
-migrated by its next merge or compaction (streaming/pipeline.py).
-
 At 100 TB: the base aggregation is the only shuffle proportional to raw data;
 its key space (metric × cell × minute) is bounded and well-distributed (cells
 are hash-like strings). Rollups shuffle only aggregated rows. Materialized
 tables are partitioned by (metric_id, precision, res) — the query layer's
 view-selection columns (L1) — and sorted by (gh, ts) within partitions so the
-parquet scan prunes to one view and min/max-skips to the requested cells.
+parquet scan prunes to one view and min/max-skips to the requested cells. A
+bbox snapshot skips to the `gh` range between its rectangle's Morton corners
+(`gh` order is Morton order) and reads each row's cell axes from its `gh`, so
+the store needs no axis column (plans/query.py `_snapshot_rect`).
 """
 
 from __future__ import annotations
@@ -55,7 +47,6 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import with_cell_axes
 from ..functions.timeutil import RES_TO_UNIT, VIEW_RESOLUTIONS, truncate_ts_col
 
 #: dev-default geohash precisions (AppConfig.java:13, Dockerfile:26-27)
@@ -119,12 +110,10 @@ def build_views(
     path: str,
     precisions: Sequence[int] = DEFAULT_PRECISIONS,
     resolutions: Iterable[str] = VIEW_RESOLUTIONS,
-    cells: str = "geohash",
 ) -> None:
-    """Build + materialize the lattice (`cells`: the scheme the readings'
-    `geohash` column holds, see `view_lattice`), releasing the cascade
-    caches when the write finishes (long-lived sessions would otherwise
-    accumulate one persisted level per build).
+    """Build + materialize the lattice, releasing the cascade caches when
+    the write finishes (long-lived sessions would otherwise accumulate
+    one persisted level per build).
 
     The per-precision time cascades are materialized CONCURRENTLY
     before the write (optimization round 15, guide §2.6): each cascade
@@ -138,8 +127,10 @@ def build_views(
 
     persisted: list[DataFrame] = []
     chains: list[list[DataFrame]] = []
-    lattice = _view_union(readings, precisions, resolutions, True,
-                          persisted, chains)
+    lattice = view_lattice(
+        readings, precisions=precisions, resolutions=resolutions,
+        persist=True, _persisted=persisted, _chains=chains,
+    )
     try:
         # the space cascade (each precision's base derives from the
         # previous one) is materialized sequentially so concurrent time
@@ -155,7 +146,7 @@ def build_views(
                 list(pool.map(_warm, time_chains))
         elif time_chains:
             _warm(time_chains[0])
-        materialize_views(lattice, path, cells)
+        materialize_views(lattice, path)
     finally:
         for df in persisted:
             df.unpersist()
@@ -166,17 +157,14 @@ def view_lattice(
     precisions: Sequence[int] = DEFAULT_PRECISIONS,
     resolutions: Iterable[str] = VIEW_RESOLUTIONS,
     persist: bool = True,
-    cells: str = "geohash",
+    _persisted: list[DataFrame] | None = None,
+    _chains: list[list[DataFrame]] | None = None,
 ) -> DataFrame:
     """The full multi-resolution lattice as one DataFrame.
 
     Output: metric_id, precision(int), res(string), gh, ts(timestamp),
-    count(long), sum(double), avg(double), min, max, cx(int), cy(int).
-    `cx`, `cy` are the cell's integer axes (`geo.with_cell_axes`) under
-    the scheme `cells` ("geohash" or "quadkey") the readings' `geohash`
-    column holds — the caller names it; it is never guessed. Replaces
-    the reference's M·P·4 stores (IngestStream.java:372-394) with a
-    rollup cascade.
+    count(long), sum(double), avg(double). Replaces the reference's M·P·4
+    stores (IngestStream.java:372-394) with a rollup cascade.
 
     Each cascade level is persisted (MEMORY_AND_DISK) before the next level
     derives from it: Spark does NOT dedupe common subplans across union
@@ -185,21 +173,6 @@ def view_lattice(
     scale-killer. With persist, raw data is shuffled exactly once (the base
     aggregation) and every rollup reads cached aggregate rows.
     """
-    return with_cell_axes(
-        _view_union(readings, precisions, resolutions, persist), cells)
-
-
-def _view_union(
-    readings: DataFrame,
-    precisions: Sequence[int],
-    resolutions: Iterable[str],
-    persist: bool,
-    _persisted: list[DataFrame] | None = None,
-    _chains: list[list[DataFrame]] | None = None,
-) -> DataFrame:
-    """`view_lattice` without the cell axes: the union of its P·R
-    per-(precision, res) pieces (`build_views` collects the persisted
-    levels and cascade chains it creates)."""
     from pyspark import StorageLevel
 
     resolutions = [r for r in VIEW_RESOLUTIONS if r in set(resolutions)]  # keep grain order
@@ -281,22 +254,18 @@ def lattice_partials(
     )
 
 
-def aggregate_partials(partials: DataFrame, cells: str = "geohash") -> DataFrame:
+def aggregate_partials(partials: DataFrame) -> DataFrame:
     """Fold cell-partial (or already-aggregated) lattice rows to the final
-    lattice (A2 merge algebra): one aggregation, map-side partials, then
-    the cell axes of scheme `cells` (see `view_lattice`)."""
-    return with_cell_axes(
+    lattice (A2 merge algebra): one aggregation, map-side partials."""
+    return (
         partials.groupBy("metric_id", "precision", "res", "gh", "ts")
         .agg(*_agg_cols())
-        .transform(_with_avg),
-        cells,
+        .transform(_with_avg)
     )
 
 
-def materialize_views(lattice: DataFrame, path: str,
-                      cells: str = "geohash") -> None:
-    """Write the lattice, with its cell axes of scheme `cells`
-    (`view_lattice`), partitioned for query-time pruning.
+def materialize_views(lattice: DataFrame, path: str) -> None:
+    """Write the lattice partitioned for query-time pruning.
 
     Partition columns = the view-selection keys (L1: metric, precision, res);
     within files, rows sorted by (gh, ts) so parquet min/max stats replace the
@@ -307,15 +276,9 @@ def materialize_views(lattice: DataFrame, path: str,
     columns collapses each slice into a single task (VERDICT r1 #3), which at
     scale means one writer for billions of rows. Range partitioning keeps
     file-level (gh, ts) ordering for min/max skipping with real parallelism.
-
-    The axes are derived after the range exchange: above it they are one
-    projection the write stage compiles once; below it the optimizer
-    would copy them into every (precision, res) branch of the union.
     """
     (
-        with_cell_axes(
-            lattice.repartitionByRange("metric_id", "precision", "res", "gh"),
-            cells)
+        lattice.repartitionByRange("metric_id", "precision", "res", "gh")
         .sortWithinPartitions("gh", "ts")
         .write.mode("overwrite")
         .partitionBy("metric_id", "precision", "res")
@@ -323,10 +286,8 @@ def materialize_views(lattice: DataFrame, path: str,
     )
 
 
-def incremental_update(existing: DataFrame, delta_lattice: DataFrame,
-                       cells: str = "geohash") -> DataFrame:
-    """Merge a new micro-batch's lattice into an existing one (A2 algebra;
-    `cells` as in `view_lattice`).
+def incremental_update(existing: DataFrame, delta_lattice: DataFrame) -> DataFrame:
+    """Merge a new micro-batch's lattice into an existing one (A2 algebra).
 
     Batch twin of the streaming foreachBatch MERGE (streaming/pipeline.py);
     parity with the per-record incremental aggregator IngestStream.java:84-92.
@@ -335,6 +296,5 @@ def incremental_update(existing: DataFrame, delta_lattice: DataFrame,
         existing.select("metric_id", "precision", "res", "gh", "ts",
                         "count", "sum", "min", "max")
         .unionByName(delta_lattice.select("metric_id", "precision", "res", "gh",
-                                          "ts", "count", "sum", "min", "max")),
-        cells,
+                                          "ts", "count", "sum", "min", "max"))
     )

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.geo import with_cell_axes
 from ..functions.literals import literal_in
 from ..functions.timeutil import VIEW_RESOLUTIONS
 from ..plans.views import (
@@ -194,15 +193,6 @@ def _touched_partitions(keys):
 
 _LATTICE_COLS = ("metric_id", "precision", "res", "gh", "ts",
                  "count", "sum", "avg", "min", "max")
-
-
-def _needs_migration(stored: DataFrame) -> bool:
-    """Whether a store version predates the current layout, so the next
-    merge rewrites it whole: without `ts_m` (the flat layout) the
-    partition-pruning filter would raise and `_link_untouched` would
-    mislink flat files; without `cx`, `cy` linked rows would lack the
-    cell axes bbox snapshots filter on."""
-    return not {"ts_m", "cx", "cy"} <= set(stored.columns)
 
 
 def _with_ts_month(lattice: DataFrame) -> DataFrame:
@@ -432,19 +422,12 @@ class ParquetViewStore:
         spark: SparkSession,
         delta_lattice: DataFrame,
         batch_id: int | None = None,
-        cells: str = "geohash",
     ) -> bool:
         """Partition-pruned MERGE of a delta; returns False (no-op) when
         `batch_id` was already applied — the replay guard that makes the
         non-idempotent count/sum merge exactly-once under foreachBatch
         redelivery. An untracked merge (batch_id=None) carries the last
-        recorded batch id forward so the guard survives it. `cells` names
-        the scheme of the store's `gh` (`views.view_lattice`): the
-        merged rows' `cx`, `cy` derive from it.
-
-        A store written before the partitioned layout or before rows kept
-        their cell axes migrates in this merge's one full rewrite; every
-        later merge is incremental again."""
+        recorded batch id forward so the guard survives it."""
         last = self.last_batch_id()
         if batch_id is not None and last is not None and batch_id <= last:
             return False
@@ -482,17 +465,21 @@ class ParquetViewStore:
                 # the first version folds the delta too: a delta with a
                 # repeated key must not land as two rows of one cell
                 # (the view store's key-uniqueness invariant)
-                merged = aggregate_partials(batch, cells)
+                merged = aggregate_partials(batch)
             else:
                 old_raw = self._read_raw(spark)
-                if _needs_migration(old_raw):
-                    merged = incremental_update(old_raw, batch, cells)
+                if "ts_m" not in old_raw.columns:
+                    # legacy store written before the partitioned layout:
+                    # the ts_m pruning filter would raise and
+                    # _link_untouched would mislink flat files — migrate
+                    # with one full rewrite; every later merge is
+                    # incremental again
+                    merged = incremental_update(old_raw, batch)
                 else:
                     # ---- partition-pruned incremental path ----
                     existing_touched = old_raw.filter(_touched_partitions(
                         tuple(r) for r in key_rows)).drop("ts_m")
-                    merged = incremental_update(existing_touched, batch,
-                                                cells)
+                    merged = incremental_update(existing_touched, batch)
                     old_v_linked = old_v
             merged = _with_ts_month(merged).persist()
             try:
@@ -517,7 +504,6 @@ class ParquetViewStore:
         precisions=DEFAULT_PRECISIONS,
         resolutions=VIEW_RESOLUTIONS,
         batch_id: int | None = None,
-        cells: str = "geohash",
     ) -> bool:
         """Fused MERGE of a raw micro-batch (optimization guide §2.3/§2.4):
         instead of materializing a delta lattice (one aggregation per
@@ -537,9 +523,8 @@ class ParquetViewStore:
         (metric_id, yyyyMM(ts)) of the raw batch — a two-column
         column-pruned pass instead of executing the whole delta plan.
 
-        Same exactly-once contract, `cells` and one-rewrite migration of
-        an old store as `merge`; callers guard empty batches (foreachBatch
-        already skips them)."""
+        Same exactly-once contract as `merge`; callers guard empty
+        batches (foreachBatch already skips them)."""
         last = self.last_batch_id()
         if batch_id is not None and last is not None and batch_id <= last:
             return False
@@ -572,12 +557,14 @@ class ParquetViewStore:
         new_dir = os.path.join(self.path, new_v)
         old_v_linked = None
         if old_v is None:
-            merged = _with_ts_month(aggregate_partials(partials, cells))
+            merged = _with_ts_month(aggregate_partials(partials))
         else:
             old_raw = self._read_raw(spark)
-            if _needs_migration(old_raw):
+            if "ts_m" not in old_raw.columns:
+                # legacy flat store: one full migrating rewrite (see merge)
                 merged = _with_ts_month(
-                    incremental_update(old_raw, partials, cells))
+                    incremental_update(old_raw, partials))
+                old_v_linked = None
             else:
                 existing_touched = old_raw.filter(_touched_partitions(
                     (r["metric_id"], p, res, r["ts_m"])
@@ -586,7 +573,7 @@ class ParquetViewStore:
                     for res in resolutions
                 )).drop("ts_m")
                 merged = _with_ts_month(
-                    incremental_update(existing_touched, partials, cells))
+                    incremental_update(existing_touched, partials))
                 old_v_linked = old_v
         merged = merged.persist()
         try:
@@ -663,21 +650,15 @@ def expire_store(store: ParquetViewStore, min_ts_m: int) -> int:
     return expired
 
 
-def compact_store(spark: SparkSession, store: ParquetViewStore,
-                  cells: str = "geohash") -> None:
+def compact_store(spark: SparkSession, store: ParquetViewStore) -> None:
     """Rewrite the whole current version in query-optimal layout (global
     gh range-partitioning + in-file (gh, ts) sort). Incremental merges
     already keep the directory partitioning; compaction coalesces the
     small files a long merge history accumulates — the maintenance job a
-    lakehouse table schedules as OPTIMIZE. The batch-id guard survives.
-    Rows keep their stored cell axes; a store written before rows kept
-    them gets `cx`, `cy` of scheme `cells` (`views.view_lattice`) in
-    this rewrite."""
+    lakehouse table schedules as OPTIMIZE. The batch-id guard survives."""
     current = store._read_raw(spark)
     if current is None:
         return
-    if "cx" not in current.columns:
-        current = with_cell_axes(current, cells)
     new_v = f"v_{uuid.uuid4().hex[:12]}"
     # count() over a bare parquet read touches only row-group metadata
     # (empty read schema) — cheap relative to the rewrite it sizes

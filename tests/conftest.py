@@ -37,8 +37,8 @@ def readings(events):
 #: the one instant of `small_lattice`'s views (2024-01-10T00:00:00Z)
 SMALL_TS_MS = 1704844800000
 #: (N, W, S, E) boxes `small_lattice` has cells in: a city in geohash
-#: cells, a strip too long and thin for its cover to compress (5,462
-#: cells), and a region in zoom-6 quad tiles
+#: cells, a strip too long and thin for its cover to compress (so it
+#: takes the broadcast path), and a region in zoom-6 quad tiles
 SMALL_BBOXES = {
     "city": (51.31, 4.30, 51.17, 4.50),
     "strip": (51.2005, -30.0, 51.1995, 30.0),
@@ -58,24 +58,22 @@ SMALL_CELLS = {
 def small_lattice(spark):
     """`make(scale)`: a p6 lattice of the SMALL_CELLS at SMALL_TS_MS,
     `min` and `hour` views of metric "m"; `scale` multiplies every sum,
-    min and max. Each cell's `cx`, `cy` are its own scheme's axes: the
-    quad box's cells are quadkeys, the others geohashes."""
+    min and max."""
     import datetime as dt
 
     ts = dt.datetime.fromtimestamp(SMALL_TS_MS / 1000, tz=dt.timezone.utc)
-    cells = [(c, geo.quadkey_to_tile(c) if box == "quad" else geo.geohash_to_index(c))
-             for box, cs in SMALL_CELLS.items() for c in cs]
+    cells = [c for box in SMALL_CELLS.values() for c in box]
 
     def make(scale: float = 1.0):
         rows = []
-        for i, (cell, (cx, cy)) in enumerate(cells):
+        for i, cell in enumerate(cells):
             count, total = 1 + i % 3, scale * (i + 1.5)
             for res in ("min", "hour"):
                 rows.append(("m", 6, res, cell, ts, count, total,
-                             total / count, total / count, total, cx, cy))
+                             total / count, total / count, total))
         return spark.createDataFrame(
             rows, "metric_id string, precision int, res string, gh string, "
                   "ts timestamp, count long, sum double, avg double, "
-                  "min double, max double, cx int, cy int")
+                  "min double, max double")
 
     return make

@@ -130,7 +130,7 @@ def test_compress_cover_membership_equivalence(s, w, dlat, dlon):
 
 
 # ---------------------------------------------------------------------------
-# bbox covers as index rectangles: cover sizes, and the stored-axes
+# bbox covers as index rectangles: cover sizes, and the axis-range
 # predicate the bbox snapshots filter (`Q.*_rect_predicate`)
 # ---------------------------------------------------------------------------
 
@@ -222,18 +222,33 @@ def test_antimeridian_boxes_keep_todays_covers():
     assert len(gh) == geo.geohash_cover_size(*bbox, 4) == 6
     assert {geo.geohash_to_index(c)[0] for c in gh} \
         == {geo.geohash_cell_index(9, 179.5, 4)[0]}
-    assert _selected(Q.geohash_rect_predicate(*bbox, 4, 4), _geohash_cells(gh, 4)) \
-        == set(gh)
+    predicate = Q.geohash_rect_predicate(*bbox, 4, 4, _morton("geohash", 4))
+    assert _selected(predicate, _geohash_cells(gh, 4), "geohash") == set(gh)
     assert geo.quadkey_cover_bbox(*bbox, 4) == []
     assert geo.quadkey_cover_size(*bbox, 4) == 0
     assert Q.quadkey_rect_predicate(*bbox, 4, 4) == "false"
 
 
-def _selected(predicate: str, cells) -> set:
-    """The `gh` of the (gh, cx, cy) rows `predicate` keeps, in DuckDB."""
+_TO_CONV = str.maketrans(geo.GEOHASH_ALPHABET, "0123456789abcdefghijklmnopqrstuv")
+
+
+def _code(gh: str, cells: str) -> int:
+    """A cell's Morton code: its digits read in base 32 (base 4)."""
+    return int(gh.translate(_TO_CONV), 32) if cells == "geohash" else int(gh, 4)
+
+
+def _morton(cells: str, precision: int):
+    """A rectangle predicate's `morton` reading DuckDB's column `m`."""
+    return ("m", *geo.cell_morton_sql(cells, precision)[1:])
+
+
+def _selected(predicate: str, cells, scheme: str) -> set:
+    """The `gh` of the (gh, x, y) cells `predicate` keeps, run in DuckDB
+    over each cell's Morton code `m`."""
     con = duckdb.connect()
-    con.execute("CREATE TABLE t (gh VARCHAR, cx INTEGER, cy INTEGER)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", list(cells))
+    con.execute("CREATE TABLE t (gh VARCHAR, m BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)",
+                    [(gh, _code(gh, scheme)) for gh, _, _ in cells])
     return {r[0] for r in con.execute(f"SELECT gh FROM t WHERE {predicate}").fetchall()}
 
 
@@ -257,7 +272,7 @@ def _geohash_cells(cover, p):
 @settings(max_examples=200, deadline=None)
 @given(box=geohash_boxes(), finer=st.integers(0, 1))
 def test_geohash_rect_predicate_selects_exactly_the_cover(box, finer):
-    """Decoding the enumerated cover to (cx, cy): the snapshot's
+    """Decoding the enumerated cover to its axes: the snapshot's
     predicate at view precision p + `finer` keeps exactly the view cells
     under the cover (and none of its ring)."""
     bbox, p = box
@@ -266,7 +281,8 @@ def test_geohash_rect_predicate_selects_exactly_the_cover(box, finer):
     view = p + finer
     cells = _geohash_cells(cover, view)
     want = {gh for gh, _, _ in cells if gh[:p] in set(cover)}
-    assert _selected(Q.geohash_rect_predicate(*bbox, p, view), cells) == want
+    predicate = Q.geohash_rect_predicate(*bbox, p, view, _morton("geohash", view))
+    assert _selected(predicate, cells, "geohash") == want
 
 
 @settings(max_examples=200, deadline=None)
@@ -287,27 +303,43 @@ def test_quadkey_rect_predicate_selects_exactly_the_cover(box, finer):
                 xy.add((((x << finer) + dx) % n, ((y << finer) + dy) % n))
     cells = [(geo.tile_to_quadkey(X, Y, view), X, Y) for X, Y in xy]
     want = {qk for qk, _, _ in cells if qk[:z] in cover}
-    assert _selected(Q.quadkey_rect_predicate(*bbox, z, view), cells) == want
+    predicate = Q.quadkey_rect_predicate(*bbox, z, view, _morton("quadkey", view))
+    assert _selected(predicate, cells, "quadkey") == want
 
 
-def test_cell_axes_match_the_pure_decoders(spark):
-    """`with_cell_axes` (native SQL, one expression for every precision)
-    equals `geohash_to_index` / `quadkey_to_tile` on random cells of
-    every precision; a string that is no cell of the scheme gets null
-    axes."""
+def _even_bits(v: int) -> int:
+    """The even bits of `v`, packed: one axis of a Morton code."""
+    out, i = 0, 0
+    while v:
+        out |= (v & 1) << i
+        v >>= 2
+        i += 1
+    return out
+
+
+def test_cell_morton_sql_decodes_to_the_pure_axes(spark):
+    """`cell_morton_sql` (native SQL) reads random cells of every
+    precision as the Morton code whose bits from the x and y offsets up
+    are `geohash_to_index` / `quadkey_to_tile`; a string that is no cell
+    of the scheme and precision reads as null."""
     import random
 
     rng = random.Random(11)
     points = [(rng.uniform(-85, 85), rng.uniform(-180, 180)) for _ in range(400)]
     cases = {
-        "geohash": ([geo.geohash_encode(la, lo, rng.randint(1, 12)) for la, lo in points]
+        "geohash": (12, [geo.geohash_encode(la, lo, rng.randint(1, 12)) for la, lo in points]
                     + [geo.geohash_encode(90.0, 180.0, 12), geo.geohash_encode(-90.0, -180.0, 1)],
                     geo.geohash_to_index, ["u1a", "u1b0000000000", "UB"]),
-        "quadkey": ([geo.quadkey(la, lo, rng.randint(1, 31)) for la, lo in points],
+        "quadkey": (31, [geo.quadkey(la, lo, rng.randint(1, 31)) for la, lo in points],
                     geo.quadkey_to_tile, ["124", "0" * 32]),
     }
-    for cells, (valid, decode, invalid) in cases.items():
+    for cells, (top, valid, decode, invalid) in cases.items():
         df = spark.createDataFrame([(c,) for c in valid + invalid], "gh string")
-        got = {r.gh: (r.cx, r.cy) for r in geo.with_cell_axes(df, cells).collect()}
-        assert all(got[c] == decode(c) for c in valid), cells
-        assert all(got[c] == (None, None) for c in invalid), cells
+        # each precision's expression reads only its own length
+        codes = ", ".join(geo.cell_morton_sql(cells, p)[0] for p in range(1, top + 1))
+        got = {r.gh: r.m for r in df.selectExpr("gh", f"coalesce({codes}) AS m").collect()}
+        for c in valid:
+            _, x_off, y_off = geo.cell_morton_sql(cells, len(c))
+            assert got[c] == _code(c, cells), (cells, c)
+            assert (_even_bits(got[c] >> x_off), _even_bits(got[c] >> y_off)) == decode(c)
+        assert all(got[c] is None for c in invalid), cells

@@ -2,9 +2,7 @@
 one row per (metric_id, precision, res, gh, ts). The snapshot tail
 (`plans/query.py::_snapshot`) serves a slice's rows without re-merging
 them, so a writer that repeated a key would answer two rows for one
-cell. Every writer also stores each row's cell axes `cx`, `cy`, which
-the bbox snapshots filter on, and migrates a store written without
-them."""
+cell."""
 
 from __future__ import annotations
 
@@ -13,10 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as E
-from explora_kafka_spark.functions import geo
-from explora_kafka_spark.plans import query as Q
 from explora_kafka_spark.plans import views as V
+from explora_kafka_spark.sources.tables import load_readings
 from explora_kafka_spark.streaming import pipeline as P
 from tests.conftest import SF_DIR
 
@@ -26,12 +22,10 @@ LATTICE = dict(precisions=(7, 6), resolutions=("min", "hour"))
 
 def _unique_rows(df) -> int:
     """Row count of `df`, asserted non-zero and equal to its distinct
-    view keys; every row holds its geohash cell's axes in `cx`, `cy`."""
+    view keys."""
     rows = df.count()
     assert rows > 0
     assert df.select(*KEY).distinct().count() == rows
-    axes = df.select("gh", "cx", "cy").distinct().collect()
-    assert axes and all((r.cx, r.cy) == geo.geohash_to_index(r.gh) for r in axes)
     return rows
 
 
@@ -42,9 +36,8 @@ def _counts(df) -> dict:
 @pytest.fixture(scope="module")
 def halves(spark):
     """Two batches with overlapping view keys: the even and the odd
-    events share cells and hours. Cells are real geohashes (of each
-    user's synthetic point), so every row has cell axes."""
-    readings = E._geo_readings(spark, SF_DIR, "geohash", 12)
+    events share cells and hours."""
+    readings = load_readings(spark, SF_DIR)
     return (readings.filter(F.col("event_id") % 2 == 0),
             readings.filter(F.col("event_id") % 2 == 1))
 
@@ -119,41 +112,3 @@ def test_compact_and_expire_keep_unique_keys(spark, halves, tmp_path):
     assert _unique_rows(store.read(spark)) == before
     assert P.expire_store(store, 202402) > 0
     assert 0 < _unique_rows(store.read(spark)) < before
-
-
-def _store_without_cell_axes(spark, path, batch) -> P.ParquetViewStore:
-    """A store in the partitioned layout whose rows predate `cx`, `cy`."""
-    store = P.ParquetViewStore(path)
-    assert store.merge_readings(spark, batch, batch_id=0, **LATTICE)
-    P._write_store_layout(store._read_raw(spark).drop("cx", "cy"),
-                          os.path.join(path, "v_old"))
-    with open(os.path.join(path, "_CURRENT"), "w") as f:
-        f.write("v_old\n0")
-    return P.ParquetViewStore(path)
-
-
-@pytest.mark.parametrize("writer", ["merge", "merge_readings", "compact_store"])
-def test_store_without_cell_axes_migrates_in_one_rewrite(spark, halves, tmp_path,
-                                                         writer):
-    """Bbox snapshots refuse a store without cell axes; the next merge
-    (into another month, so an incremental merge would link the old
-    month's files as they are) or compaction rewrites every row with
-    them."""
-    store = _store_without_cell_axes(spark, str(tmp_path / "store"), halves[0])
-    assert "cx" not in store.read(spark).columns
-    with pytest.raises(ValueError, match="compact_store"):
-        Q.snapshot_bbox_geohashing(store.read(spark), "view", "count", 6,
-                                   "min", 1704844800000, 51.3, 4.3, 51.2, 4.5)
-    before = _counts(store.read(spark))
-    later = halves[1].withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 MONTH"))
-    if writer == "merge":
-        assert store.merge(spark, _delta(later), batch_id=1)
-    elif writer == "merge_readings":
-        assert store.merge_readings(spark, later, batch_id=1, **LATTICE)
-    else:
-        P.compact_store(spark, store)
-    after = store.read(spark)
-    _unique_rows(after)
-    counts = _counts(after)
-    assert all(counts[k] == c for k, c in before.items())
-    assert (len(counts) > len(before)) == (writer != "compact_store")

@@ -186,7 +186,7 @@ def test_cover_limit_boundary_keeps_rows(lattice):
 def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
     """Building a snapshot plan takes about as many py4j round trips for
     the 532-cell Antwerp cover (p6) as for a one-cell cover: the cover
-    reaches the JVM as one SQL string, not as one call chain per cell."""
+    reaches the JVM as one SQL predicate, not as one call chain per cell."""
     import py4j.java_gateway as gw
 
     sent = []
@@ -194,19 +194,17 @@ def test_snapshot_plan_cost_does_not_grow_with_the_cover(lattice, monkeypatch):
     me = threading.get_ident()
 
     def counted(client, command, *a, **kw):
-        # this thread's plan commands: object releases ("m" "d") come
-        # whenever Python's GC runs, and other threads' commands are
-        # not this plan's
-        if threading.get_ident() == me and not command.startswith("m\nd\n"):
+        # only this thread's commands are the plan's: py4j's
+        # FinalizerWorker thread sends the object releases ("m" "d") of
+        # earlier garbage whenever it wakes (once a second)
+        if threading.get_ident() == me:
             sent.append(1)
         return send(client, command, *a, **kw)
 
     monkeypatch.setattr(gw.GatewayClient, "send_command", counted)
 
     def calls(bbox):
-        # release earlier tests' garbage first: Python's GC sends one
-        # release command per collected JVM handle, whenever it runs
-        gc.collect()
+        gc.collect()  # free earlier tests' garbage before counting
         before = len(sent)
         Q.snapshot_bbox_geohashing(lattice, "view", "avg", 6, "min",
                                    1704844800000, *bbox)
@@ -250,7 +248,7 @@ def _cover_snapshot(lattice, aggregate, res, ts_ms, bbox, cells, precision=6):
     """A bbox snapshot through its enumerated cover at the adaptive
     precision (IN list, or broadcast semi-join above
     COMPRESSED_COVER_LIMIT prefixes): the route's plan before it
-    filtered the stored rectangle."""
+    filtered the cover's index rectangle."""
     if cells == "quadkey":
         z = Q.adaptive_cover_zoom(*bbox, precision)
         cover, alphabet = geo.quadkey_cover_bbox(*bbox, z), geo.QUAD_ALPHABET
@@ -335,12 +333,11 @@ RECT_CASES = [("geohash", box) for box in ("city", "strip")] + [("quadkey", "qua
 
 
 @pytest.mark.parametrize("cells,box", RECT_CASES)
-def test_bbox_snapshot_filters_the_stored_rectangle(spark, small_lattice,
-                                                    cells, box):
-    """A bbox snapshot filters the stored cell axes: the scan's
-    PushedFilters hold the `cx`/`cy` ranges and the `gh` Morton range,
-    the plan has no exchange or join and enumerates no cover, and the
-    rows and order equal the enumerated cover's."""
+def test_bbox_snapshot_filters_the_cover_rectangle(spark, small_lattice,
+                                                   cells, box):
+    """A bbox snapshot filters its cover's index rectangle on the axes it
+    reads from each row's `gh`: the rows and order equal the enumerated
+    cover's."""
     lattice = small_lattice()
     route = (Q.snapshot_bbox_quadtiling if cells == "quadkey"
              else Q.snapshot_bbox_geohashing)
@@ -354,8 +351,8 @@ def test_bbox_snapshot_filters_the_stored_rectangle(spark, small_lattice,
 @pytest.mark.parametrize("cells,box", RECT_CASES)
 def test_bbox_rectangle_reaches_the_parquet_scan(spark, small_lattice,
                                                  tmp_path, cells, box):
-    """Written to parquet, the rectangle's three ranges reach the scan's
-    PushedFilters, and the plan has no exchange and no join."""
+    """Written to parquet, the rectangle's `gh` Morton range reaches the
+    scan's PushedFilters, and the plan has no exchange and no join."""
     path = str(tmp_path / "lattice")
     small_lattice().write.partitionBy("metric_id", "precision", "res").parquet(path)
     lattice = spark.read.parquet(path)
@@ -371,26 +368,9 @@ def test_bbox_rectangle_reaches_the_parquet_scan(spark, small_lattice,
     finally:
         spark.conf.set(key, before)
     pushed = plan.split("PushedFilters: [")[1].split("]")[0]
-    for col in ("cx", "cy", "gh"):
-        assert f"GreaterThanOrEqual({col}," in pushed
-        assert f"LessThanOrEqual({col}," in pushed
+    assert "GreaterThanOrEqual(gh," in pushed and "LessThanOrEqual(gh," in pushed
     assert "Exchange" not in plan and "Join" not in plan
     assert set(SMALL_CELLS[box]) <= {r.gh for r in df.collect()}
-
-
-def test_bbox_snapshot_refuses_a_lattice_without_cell_axes(spark, small_lattice):
-    """A lattice written before rows stored `cx`/`cy` fails loudly,
-    before any Spark job, instead of answering from a missing column."""
-    old = small_lattice().drop("cx", "cy")
-    sc = spark.sparkContext
-    sc.setJobGroup("no-axes", "no-axes")
-    try:
-        for route in (Q.snapshot_bbox_geohashing, Q.snapshot_bbox_quadtiling):
-            with pytest.raises(ValueError, match="compact_store"):
-                route(old, "m", "avg", 6, "min", SMALL_TS_MS, *SMALL_BBOXES["city"])
-    finally:
-        sc.setJobGroup(None, None)
-    assert sc.statusTracker().getJobIdsForGroup("no-axes") == []
 
 
 def test_interval_arithmetic():

@@ -2,8 +2,7 @@
 claims in SCALE.md (pushdown, partition pruning, broadcast joins, no
 cartesian products, struct-IN merge pruning).
 
-Usage: python tools/dump_plans.py            (writes PLANS.md at the repo root)
-       python tools/dump_plans.py NAME ...   (replaces only those sections)
+Usage: python tools/dump_plans.py   (writes PLANS.md at the repo root)
 """
 
 from __future__ import annotations
@@ -29,18 +28,21 @@ CASES: dict[str, tuple[str, list[str]]] = {
         [r"FileScan", r"PartitionFilters", r"PushedFilters"],
     ),
     "snapshot_bbox_quad": (
-        "A bbox cover is an index rectangle: the scan's PushedFilters hold "
-        "integer ranges on the stored tile axes (cx, cy) and the gh range "
-        "between the rectangle's Morton corners. No cover is enumerated, "
-        "no IN list is shipped, and the plan has no join, no Exchange and "
-        "no BroadcastExchange.",
+        "A bbox cover is an index rectangle: each row's tile x/y are read "
+        "from its quadkey as a Morton code and filtered with two integer "
+        "ranges, and the gh range between the rectangle's Morton corners "
+        "is pushed to the scan (tests/test_views_query.py::"
+        "test_bbox_rectangle_reaches_the_parquet_scan). No cover is "
+        "enumerated, no IN list is shipped, and the plan has no join, no "
+        "Exchange and no BroadcastExchange.",
         [r"FileScan", r"PartitionFilters", r"PushedFilters", r"Join",
          r"Exchange"],
     ),
     "snapshot_bbox_geohash": (
         "The precision-3 bbox's 7,482-cell cover is never enumerated: the "
-        "scan pushes cx/cy ranges (lon/lat cell indices) and the gh Morton "
-        "range, so the plan is the same whatever the cover size "
+        "filter reads each row's lon/lat cell indices from its geohash and "
+        "keeps two index ranges, and the gh Morton range reaches the scan, "
+        "so the plan is the same whatever the cover size "
         "(tests/test_views_query.py::"
         "test_bbox_rectangle_reaches_the_parquet_scan). The slice holds "
         "one row per cell (the view store's key-uniqueness invariant, "
@@ -429,58 +431,41 @@ CASES: dict[str, tuple[str, list[str]]] = {
 }
 
 
-def _section(name: str, df) -> list[str]:
-    """PLANS.md's section for one case: its claim and the plan lines its
-    selectors keep."""
-    claim, pats = CASES[name]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    keep = []
-    for line in plan.splitlines():
-        if any(re.search(p, line) for p in pats):
-            # trim codegen ids and long schema tails for readability
-            line = re.sub(r"\s+ReadSchema:.*$", "", line.rstrip())
-            keep.append(line[:1000])
-    return [f"## {name}", "", claim, "", "```",
-            *(keep if keep else ["(no matching nodes — plan below)",
-                                 *plan.splitlines()[:10]]),
-            "```", ""]
-
-
-def main(names: list[str]) -> None:
-    """Write every CASES section, or with `names` replace only those
-    sections of the existing PLANS.md."""
+def main() -> None:
     spark = get_spark(app_name="explora-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    # print scan filter lists whole (the default cuts them at 100 chars)
-    spark.conf.set("spark.sql.maxMetadataStringLength", "400")
     queries = E.queries()
-    sections = {name: _section(name, queries[name](spark, SF_DIR))
-                for name in (names or CASES)}
-    if names:
-        with open("PLANS.md") as f:
-            text = f.read()
-        for name, lines in sections.items():
-            head = f"## {name}\n"
-            start = text.index(head)
-            end = text.find("\n## ", start + len(head))
-            end = len(text) if end < 0 else end + 1
-            text = text[:start] + "\n".join(lines) + "\n" + text[end:]
-        out = text
-    else:
-        out = "\n".join([
-            "# PLANS — captured physical-plan evidence (sf0.01)",
-            "",
-            "Generated by `python tools/dump_plans.py`. Each section keeps only",
-            "the load-bearing plan rows (scans, joins, exchanges) for the claim",
-            "it evidences; `tests/test_plans.py` asserts the same properties in",
-            "CI so they cannot regress silently.",
-            "",
-            *(line for lines in sections.values() for line in lines),
-        ])
+    out = [
+        "# PLANS — captured physical-plan evidence (sf0.01)",
+        "",
+        "Generated by `python tools/dump_plans.py`. Each section keeps only",
+        "the load-bearing plan rows (scans, joins, exchanges) for the claim",
+        "it evidences; `tests/test_plans.py` asserts the same properties in",
+        "CI so they cannot regress silently.",
+        "",
+    ]
+    for name, (claim, pats) in CASES.items():
+        df = queries[name](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        keep = []
+        for line in plan.splitlines():
+            if any(re.search(p, line) for p in pats):
+                # trim codegen ids and long schema tails for readability
+                line = re.sub(r"\s+ReadSchema:.*$", "", line.rstrip())
+                keep.append(line[:400])
+        out.append(f"## {name}")
+        out.append("")
+        out.append(claim)
+        out.append("")
+        out.append("```")
+        out.extend(keep if keep else ["(no matching nodes — plan below)",
+                                      *plan.splitlines()[:10]])
+        out.append("```")
+        out.append("")
     with open("PLANS.md", "w") as f:
-        f.write(out)
+        f.write("\n".join(out))
     print("wrote PLANS.md")
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    main()
