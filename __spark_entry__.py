@@ -182,9 +182,11 @@ _GEO_LATTICES: dict[tuple, str] = {}
 #: the wall-clock overlaps. A shared-aggregate rewrite was measured
 #: first and rejected: the (metric, cell, day) group count is ~0.7×
 #: the row count at every SF, so fusing the three aggregations saves
-#: only the two extra scans (~1 s) while adding a 200k-row checkpoint,
-#: and the re-grouped float `sum` fold diverges at the last ulp from
-#: the standalone builds' stored rows.
+#: only the two extra scans (~1 s) while adding a 200k-row checkpoint.
+#: (Float `sum` grouping is no reason either way: every lattice build
+#: folds per-cell partials, so a stored sum may differ from a direct
+#: GROUP BY in its last bits; the oracles compare sums rounded to 6
+#: places.)
 _GEO_SPECS = (("quad", 6, 6), ("geohash", 5, 3), ("quad", 14, 14))
 
 
@@ -269,8 +271,8 @@ def q_base_view_min_p7(spark, sf_dir):
 
 
 def q_lattice_hour_p6(spark, sf_dir):
-    """A6 lattice: hour × precision-6 slice — exercises BOTH the time cascade
-    (min→hour) and the space rollup (p7→p6) against a direct-from-raw oracle."""
+    """A6 lattice: hour × precision-6 slice — exercises BOTH the time fold
+    (min→hour) and the space fold (p7→p6) against a direct-from-raw oracle."""
     v = _views(spark, sf_dir).filter((F.col("precision") == 6) & (F.col("res") == "hour"))
     return v.select(
         "metric_id", "gh", ts_ms_col("ts").alias("bucket_ms"),
@@ -279,7 +281,7 @@ def q_lattice_hour_p6(spark, sf_dir):
 
 
 def q_lattice_month_p7(spark, sf_dir):
-    """A6 lattice: month grain via the min→hour→day→month cascade."""
+    """A6 lattice: month grain, folded from the minute base."""
     v = _views(spark, sf_dir).filter((F.col("precision") == 7) & (F.col("res") == "month"))
     return v.select(
         "metric_id", "gh", ts_ms_col("ts").alias("bucket_ms"),
@@ -515,7 +517,7 @@ def q_history_polygon_geohash(spark, sf_dir):
 
 
 def q_lattice_minmax_day(spark, sf_dir):
-    """A1/A2 extension: min/max carried through the rollup cascade (engine
+    """A1/A2 extension: min/max carried through the lattice fold (engine
     extension beyond the reference's avg/sum/count whitelist)."""
     v = _views(spark, sf_dir).filter((F.col("precision") == 6) & (F.col("res") == "day"))
     return v.select(
@@ -1043,8 +1045,7 @@ def q_retention_sweep(spark, sf_dir):
         store = SP.ParquetViewStore(f"{d}/store")
         store.merge(
             spark,
-            view_lattice(two, precisions=(6,), resolutions=("hour",),
-                         persist=False),
+            view_lattice(two, precisions=(6,), resolutions=("hour",)),
             batch_id=0,
         )
         SP.expire_store(store, 202402)

@@ -39,6 +39,65 @@ def full_artifact_name(sf: str, parallelism: int, cores: int | None) -> str:
     return profile_artifact_name(sf, parallelism)
 
 
+def warm_python_workers(spark) -> None:
+    """One-time Python-worker/Arrow warm-up: the FIRST Arrow stage in a
+    session pays ~5-7s spinning up the local[32] Python worker pool
+    (measured at sf0.1: multimodal_meta 7.14s cold vs 0.65s on every
+    subsequent run — r6's apparent "6.5x regression" was this harness
+    artifact landing on whichever mapInPandas query ran first, not
+    operator cost). A long-lived cluster holds warm workers, so warm
+    them first and let timings measure the operators."""
+    warm = spark.createDataFrame(
+        [(i,) for i in range(256)], "i: long"
+    ).repartition(spark.sparkContext.defaultParallelism)
+    warm.mapInPandas(lambda it: it, "i: long").count()
+
+
+def build_phases(spark) -> list:
+    """(name, thunk) of every ingestion build the registry queries read:
+    the lattice builds plus the streaming store / windowed builds, so
+    the per-query timings measure the query, not the build. The three
+    geo lattices are built together (`E._build_geo_lattices`), so they
+    are one phase."""
+    return [
+        ("main_lattice", lambda: E._views(spark, SF_DIR)),
+        ("geo_lattices", lambda: E._build_geo_lattices(spark, SF_DIR)),
+        ("stream_store",
+         lambda: E.queries()["stream_view_hour"](spark, SF_DIR).count()),
+        ("windowed_sink",
+         lambda: E.queries()["windowed_base_view"](spark, SF_DIR).count()),
+    ]
+
+
+def time_build_phases(spark) -> tuple[dict, dict, list]:
+    """Time every build phase twice, clearing the entry layer's path
+    caches in between so the second pass rebuilds for real, and keep
+    the min of the two per phase: the first pass also carries
+    JVM/codegen warm-up, and intermittent multi-second host stalls hit
+    the one-shot builds hardest. Returns (min per phase, first pass,
+    the phases the second pass lowered). The phase sum is
+    "view_build", the ingestion cost every view-backed query amortizes."""
+    phases: dict[str, float] = {}
+
+    def _pass() -> None:
+        for name, thunk in build_phases(spark):
+            t0 = time.time()
+            thunk()
+            t = round(time.time() - t0, 3)
+            phases[name] = min(t, phases.get(name, t))
+
+    _pass()
+    first_pass = dict(phases)
+    E._VIEWS.clear()
+    E._GEO_LATTICES.clear()
+    E._STREAMED.clear()
+    E._COMPACTED.clear()
+    E._WINDOWED.clear()
+    spark.catalog.clearCache()
+    _pass()
+    return phases, first_pass, [n for n in phases if phases[n] < first_pass[n]]
+
+
 def main() -> None:
     # The driver parses stdout for ONE JSON line; 5/5 rounds came back
     # "parsed": null because Spark/JVM noise (progress bars, log4j, py4j)
@@ -50,62 +109,11 @@ def main() -> None:
     spark = get_spark(app_name="explora-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # One-time Python-worker/Arrow warm-up: the FIRST Arrow stage in a
-    # session pays ~5-7s spinning up the local[32] Python worker pool
-    # (measured at sf0.1: multimodal_meta 7.14s cold vs 0.65s on every
-    # subsequent run — r6's apparent "6.5x regression" was this harness
-    # artifact landing on whichever mapInPandas query ran first, not
-    # operator cost). A long-lived cluster holds warm workers, so warm
-    # them here and let timings measure the operators.
-    warm = spark.createDataFrame(
-        [(i,) for i in range(256)], "i: long"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    warm.mapInPandas(lambda it: it, "i: long").count()
+    warm_python_workers(spark)
 
     timings: dict[str, float] = {}
 
-    # Lattice builds + materialization (the ingestion path every view-backed
-    # query amortizes), timed once with per-phase attribution so a build
-    # regression is attributable (VERDICT r3 #7). "view_build" stays the
-    # phase sum for round-over-round comparability.
-    phases: dict[str, float] = {}
-
-    def _phase(name: str, thunk) -> None:
-        t0 = time.time()
-        thunk()
-        t = round(time.time() - t0, 3)
-        phases[name] = min(t, phases[name]) if name in phases else t
-
-    BUILD_PHASES = [
-        ("main_lattice", lambda: E._views(spark, SF_DIR)),
-        ("geo_quad_z6", lambda: E._geo_lattice(spark, SF_DIR, "quad", 6, 6)),
-        ("geo_geohash_p5",
-         lambda: E._geo_lattice(spark, SF_DIR, "geohash", 5, 3)),
-        ("geo_quad_z14",
-         lambda: E._geo_lattice(spark, SF_DIR, "quad", 14, 14)),
-        # the streaming store / windowed builds are ingestion too — warm
-        # them so the per-query timings measure the query, not the run
-        ("stream_store",
-         lambda: E.queries()["stream_view_hour"](spark, SF_DIR).count()),
-        ("windowed_sink",
-         lambda: E.queries()["windowed_base_view"](spark, SF_DIR).count()),
-    ]
-    for name, thunk in BUILD_PHASES:
-        _phase(name, thunk)
-    # build phases get the same min-of-two stall policy as the queries
-    # below: the first pass also carries JVM/codegen warm-up, and this
-    # box's intermittent multi-second stalls hit the one-shot builds
-    # hardest. Clear the path caches so the second pass rebuilds for real.
-    first_pass = dict(phases)
-    E._VIEWS.clear()
-    E._GEO_LATTICES.clear()
-    E._STREAMED.clear()
-    E._COMPACTED.clear()
-    E._WINDOWED.clear()
-    spark.catalog.clearCache()
-    for name, thunk in BUILD_PHASES:
-        _phase(name, thunk)
-    build_remeasured = [n for n in phases if phases[n] < first_pass[n]]
+    phases, first_pass, build_remeasured = time_build_phases(spark)
     timings["view_build"] = round(sum(phases.values()), 3)
 
     # Min-of-two timing for EVERY query (VERDICT r7 #4): this box shows

@@ -25,6 +25,7 @@ stored. Callers that pass no cache build every time.
 
 from __future__ import annotations
 
+import math
 import threading
 import time
 from collections import OrderedDict
@@ -175,10 +176,13 @@ def validate_snapshot(
     try:
         bbox = [float(c) for c in bbox_raw.split(",")]
     except ValueError:
+        bbox = None
+    # float() also parses nan/inf, which no cover can be sized for
+    if bbox is None or not all(map(math.isfinite, bbox)):
         raise ApiError(
             "[getAirQualitySnapshot] You need to provide valid double values "
             "for the bounding box coordinates"
-        ) from None
+        )
     if len(bbox) < 4:
         # the reference would 500 on an IndexOutOfBounds here; a 400 with
         # the bbox-shape message is the intended behavior

@@ -182,35 +182,22 @@ def quadkey_cover_size(
 ) -> int:
     """Exact tile count `quadkey_cover_bbox` would produce, in O(1) (0
     when west > east or south > north: the reference loop runs empty)."""
-    min_x, min_y = latlon_to_tile(south, west, zoom)
-    max_x, max_y = latlon_to_tile(north, east, zoom)
-    return max(max_x - min_x + 1, 0) * max(min_y - max_y + 1, 0)
-
-
-def _stored_ranges(lo: int, hi: int, zoom: int) -> List[Tuple[int, int]]:
-    """Tile indices lo..hi as inclusive ranges of the index a quadkey
-    stores. A quadkey keeps the low `zoom` bits of each index, so a tile
-    outside the grid (x = 2^zoom at lon = 180, y < 0 or ≥ 2^zoom beyond
-    the Mercator latitude) wraps onto the tile its key names."""
-    if hi < lo:
-        return []
-    n = 1 << zoom
-    if hi - lo + 1 >= n:
-        return [(0, n - 1)]
-    a, b = lo % n, hi % n
-    return [(a, b)] if a <= b else [(0, b), (a, n - 1)]
+    rect = quadkey_bbox_rect(north, west, south, east, zoom)
+    if rect is None:
+        return 0
+    x0, x1, y0, y1 = rect
+    return (x1 - x0 + 1) * (y1 - y0 + 1)
 
 
 def quadkey_bbox_rect(
     north: float, west: float, south: float, east: float, zoom: int
-) -> Tuple[List[Tuple[int, int]], List[Tuple[int, int]]]:
-    """(x ranges, y ranges): the tiles `quadkey_cover_bbox` enumerates,
-    as inclusive ranges of the stored tile x and y (at most two per axis,
-    see `_stored_ranges`; none when the cover is empty), in O(1)."""
-    min_x, min_y = latlon_to_tile(south, west, zoom)
-    max_x, max_y = latlon_to_tile(north, east, zoom)
-    xs, ys = _stored_ranges(min_x, max_x, zoom), _stored_ranges(max_y, min_y, zoom)
-    return (xs, ys) if xs and ys else ([], [])
+) -> Tuple[int, int, int, int] | None:
+    """(x0, x1, y0, y1): the inclusive tile index rectangle
+    `quadkey_cover_bbox` enumerates, in O(1); None when the cover is
+    empty. y grows southward, so y0 comes from the north edge."""
+    x0, y1 = latlon_to_tile(south, west, zoom)
+    x1, y0 = latlon_to_tile(north, east, zoom)
+    return (x0, x1, y0, y1) if x0 <= x1 and y0 <= y1 else None
 
 
 def geohash_cover_bbox(
@@ -245,13 +232,24 @@ def geohash_cover_bbox(
 # ---------------------------------------------------------------------------
 
 
+#: Web-Mercator latitude domain — no quad tile exists beyond this, so quad
+#: covers clamp here (same domain limit as the reference's QuadHash)
+MERCATOR_MAX_LAT = 85.05112877980659
+
+
 def latlon_to_tile(lat: float, lon: float, zoom: int) -> Tuple[int, int]:
-    """(x, y) tile containing (lat, lon) at `zoom` — QuadHash.java:8-13."""
+    """(x, y) tile containing (lat, lon) at `zoom` — QuadHash.java:8-13,
+    kept on the grid: the latitude is clamped to ±MERCATOR_MAX_LAT (the
+    projection diverges at the poles) and each index into
+    [0, 2^zoom - 1] (lon = 180 would name tile 2^zoom), as
+    `geohash_cell_index` clamps the top edge. A point on the grid maps
+    to the same tile as the reference's formula."""
     n = 2.0**zoom
+    last = (1 << zoom) - 1
     xtile = int(math.floor((lon + 180.0) / 360.0 * n))
-    lat_rad = math.radians(lat)
+    lat_rad = math.radians(min(max(lat, -MERCATOR_MAX_LAT), MERCATOR_MAX_LAT))
     ytile = int(math.floor((1.0 - math.log(math.tan(lat_rad) + 1.0 / math.cos(lat_rad)) / math.pi) / 2.0 * n))
-    return xtile, ytile
+    return min(max(xtile, 0), last), min(max(ytile, 0), last)
 
 
 def tile_to_quadkey(x: int, y: int, zoom: int) -> str:
@@ -438,9 +436,6 @@ def bbox_min_dist_m(
     return min(cands)
 
 
-#: Web-Mercator latitude domain — no quad tile exists beyond this, so quad
-#: covers clamp here (same domain limit as the reference's QuadHash)
-MERCATOR_MAX_LAT = 85.05112877980659
 #: geohash cells span the full latitude range; stay a hair inside the pole
 #: so the encode bisection never sees lat == ±90
 _GEOHASH_MAX_LAT = 90.0 - 1e-9
@@ -664,15 +659,17 @@ def compress_cover(cells: List[str], alphabet: str) -> List[str]:
 
 def tile_x_col(lon_col: Column, zoom: int) -> Column:
     """Valid domain: lon ∈ [-180, 180). lon=180 yields tile 2^zoom (out of
-    range) — parity with QuadHash.java:8-13, which does not clamp either."""
+    range) — parity with QuadHash.java:8-13, which does not clamp; the
+    scalar `latlon_to_tile` clamps, so the two agree on the domain only."""
     return F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * F.lit(float(2**zoom))).cast("int")
 
 
 def tile_y_col(lat_col: Column, zoom: int) -> Column:
     """Valid domain: |lat| < ~85.0511 (Web-Mercator). Outside it the
-    projection diverges: the scalar twin returns out-of-range tiles and
-    this Column path yields null (NaN cast). Deliberate QuadHash.java
-    parity — callers clamp inputs if they accept open-domain data."""
+    projection diverges: this Column path yields an out-of-range tile or
+    null (NaN cast), while the scalar twin clamps onto the grid.
+    Deliberate QuadHash.java parity — callers clamp inputs if they
+    accept open-domain data."""
     lat_rad = F.radians(lat_col)
     merc = F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad))
     return F.floor((F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(2**zoom))).cast("int")

@@ -176,36 +176,35 @@ def _snapshot(lattice: DataFrame, metric: str, aggregate: str,
     return _sorted(_agg_projection(view, aggregate, "gh"), "gh")
 
 
-def _axis_between(code: str, offset: int, ranges, shift: int) -> str:
+def _axis_between(code: str, offset: int, a: int, b: int, shift: int) -> str:
     """The axis on the bits from `offset` up of the Morton `code` inside
-    any of the inclusive index `ranges`, each taken from the cover
-    precision down to the view's: cell i holds view cells i<<shift …
-    ((i+1)<<shift)-1. Spreading an index onto its bits keeps order
-    (`geo.dilate`), so the masked code compares against spread bounds."""
+    the inclusive index range a..b, taken from the cover precision down
+    to the view's: cell i holds view cells i<<shift … ((i+1)<<shift)-1.
+    Spreading an index onto its bits keeps order (`geo.dilate`), so the
+    masked code compares against spread bounds."""
     axis = f"(({code}) & {geo.dilate((1 << 31) - 1, offset)})"
-    terms = [f"{axis} BETWEEN {geo.dilate(a << shift, offset)}"
-             f" AND {geo.dilate(((b + 1) << shift) - 1, offset)}"
-             for a, b in ranges]
-    return terms[0] if len(terms) == 1 else "(" + " OR ".join(terms) + ")"
+    return (f"{axis} BETWEEN {geo.dilate(a << shift, offset)}"
+            f" AND {geo.dilate(((b + 1) << shift) - 1, offset)}")
 
 
-def _rect_predicate(xs, ys, kx: int, ky: int, cell_code, morton) -> str:
+def _rect_predicate(rect, kx: int, ky: int, cell_code, morton) -> str:
     """SQL predicate on a slice's rows selecting the view cells under an
-    index rectangle: x in any of `xs`, y in any of `ys` (inclusive ranges
-    at the cover precision, `kx` / `ky` bits coarser than the view's per
-    axis), read from each row's Morton code (`morton`: its SQL and the
-    x, y bit offsets, `geo.cell_morton_sql`). The `gh` range between the
-    rectangle's two Morton corners (`cell_code(x, y)` at the view
-    precision: `gh` order is Morton order) rides along and reaches the
-    scan, so a gh-sorted file skips its row groups outside it."""
-    if not xs or not ys:
+    index rectangle `rect` = (x0, x1, y0, y1) (inclusive, at the cover
+    precision, `kx` / `ky` bits coarser than the view's per axis; None
+    selects nothing), read from each row's Morton code (`morton`: its
+    SQL and the x, y bit offsets, `geo.cell_morton_sql`). The `gh` range
+    between the rectangle's two Morton corners (`cell_code(x, y)` at the
+    view precision: `gh` order is Morton order) rides along and reaches
+    the scan, so a gh-sorted file skips its row groups outside it."""
+    if rect is None:
         return "false"
+    x0, x1, y0, y1 = rect
     code, x_off, y_off = morton
-    lo = cell_code(xs[0][0] << kx, ys[0][0] << ky)
-    hi = cell_code(((xs[-1][1] + 1) << kx) - 1, ((ys[-1][1] + 1) << ky) - 1)
+    lo = cell_code(x0 << kx, y0 << ky)
+    hi = cell_code(((x1 + 1) << kx) - 1, ((y1 + 1) << ky) - 1)
     return (f"gh BETWEEN '{lo}' AND '{hi}'"
-            f" AND {_axis_between(code, x_off, xs, kx)}"
-            f" AND {_axis_between(code, y_off, ys, ky)}")
+            f" AND {_axis_between(code, x_off, x0, x1, kx)}"
+            f" AND {_axis_between(code, y_off, y0, y1, ky)}")
 
 
 def geohash_rect_predicate(north: float, west: float, south: float,
@@ -215,11 +214,11 @@ def geohash_rect_predicate(north: float, west: float, south: float,
     (`geo.geohash_cover_bbox`), as a `_rect_predicate` on `gh` (`morton`:
     `geo.cell_morton_sql` by default); each axis widens by its own bit
     count."""
-    x0, x1, y0, y1 = geo.geohash_bbox_rect(north, west, south, east, cover_p)
     lon_bits, lat_bits = geo.geohash_axis_bits(precision)
     cover_lon, cover_lat = geo.geohash_axis_bits(cover_p)
     return _rect_predicate(
-        [(x0, x1)], [(y0, y1)], lon_bits - cover_lon, lat_bits - cover_lat,
+        geo.geohash_bbox_rect(north, west, south, east, cover_p),
+        lon_bits - cover_lon, lat_bits - cover_lat,
         lambda x, y: geo.geohash_from_index(x, y, precision),
         morton or geo.cell_morton_sql("geohash", precision))
 
@@ -230,10 +229,10 @@ def quadkey_rect_predicate(north: float, west: float, south: float,
     """The `zoom` tiles under the bbox's zoom-`cover_zoom` cover
     (`geo.quadkey_cover_bbox`), as a `_rect_predicate` on `gh` (`morton`:
     `geo.cell_morton_sql` by default)."""
-    xs, ys = geo.quadkey_bbox_rect(north, west, south, east, cover_zoom)
     k = zoom - cover_zoom
     return _rect_predicate(
-        xs, ys, k, k, lambda x, y: geo.tile_to_quadkey(x, y, zoom),
+        geo.quadkey_bbox_rect(north, west, south, east, cover_zoom), k, k,
+        lambda x, y: geo.tile_to_quadkey(x, y, zoom),
         morton or geo.cell_morton_sql("quadkey", zoom))
 
 

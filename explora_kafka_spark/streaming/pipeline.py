@@ -44,6 +44,7 @@ from ..plans.views import (
     DEFAULT_PRECISIONS,
     aggregate_partials,
     incremental_update,
+    lattice_axes,
     lattice_partials,
 )
 
@@ -529,9 +530,7 @@ class ParquetViewStore:
         if batch_id is not None and last is not None and batch_id <= last:
             return False
         effective_bid = batch_id if batch_id is not None else last
-        resolutions = [r for r in VIEW_RESOLUTIONS
-                       if r in set(resolutions)]
-        precisions = sorted(precisions, reverse=True)
+        precisions, resolutions = lattice_axes(precisions, resolutions)
         partials = lattice_partials(
             readings, precisions=precisions, resolutions=resolutions)
         # ---- partition-key preflight (see merge(): null keys would

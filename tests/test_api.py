@@ -69,6 +69,12 @@ SNAPSHOT_400S = [
     ({"gh_precision": "zz"}, 'For input string: "zz"'),
     ({"gh_precision": "3"},
      "[getAirQualitySnapshot] geohash precision 3 is not yet supported"),
+    ({"bbox": "nan,4.31,51.17,4.50"},
+     "[getAirQualitySnapshot] You need to provide valid double values for "
+     "the bounding box coordinates"),
+    ({"bbox": "51.31,-inf,51.17,4.50"},
+     "[getAirQualitySnapshot] You need to provide valid double values for "
+     "the bounding box coordinates"),
 ]
 
 

@@ -202,6 +202,27 @@ def test_quadkey_cover_size_is_the_cover_length(box):
     assert size == len(geo.quadkey_cover_bbox(*bbox, z))
 
 
+@settings(max_examples=300, deadline=None)
+@given(box=quadkey_boxes(), south_pole=st.booleans())
+def test_quadkey_cover_has_no_repeated_key(box, south_pole):
+    """Tile indices stay on the grid, so no two steps of the cover loop
+    name the same key, even for a box reaching lon 180 or a pole."""
+    (north, west, south, east), z = box
+    bbox = (north, west, -90.0 if south_pole else south, east)
+    size = geo.quadkey_cover_size(*bbox, z)
+    assume(size <= 4000)
+    cover = geo.quadkey_cover_bbox(*bbox, z)
+    assert len(set(cover)) == len(cover) == size
+
+
+def test_quad_tiles_stay_on_the_grid():
+    assert geo.latlon_to_tile(-90, 0, 5) == (16, 31)
+    assert geo.latlon_to_tile(90, 0, 5) == (16, 0)
+    assert geo.latlon_to_tile(0, 180, 5) == (31, 16)
+    assert geo.quadkey_cover_bbox(10, -180, 9, 180, 2) == ["02", "03", "12", "13"]
+    assert geo.quadkey_cover_size(10, -180, 9, 180, 2) == 4
+
+
 def test_cover_sizes_at_the_top_edges():
     """The walk clamps north = 90 / east = 180 into the last cell; so
     does the size."""

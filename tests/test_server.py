@@ -14,7 +14,7 @@ import pytest
 from explora_kafka_spark import api, server
 from explora_kafka_spark.plans.views import view_lattice
 from explora_kafka_spark.sources.tables import load_readings
-from tests.conftest import SMALL_BBOXES, SMALL_TS_MS
+from tests.conftest import SMALL_BBOXES, SMALL_CELLS, SMALL_TS_MS
 
 NOW = 1706616000000
 
@@ -212,3 +212,50 @@ def test_500_body_hides_exception_text(small_srv, monkeypatch, caplog):
     assert (code, body) == (500, server.INTERNAL_ERROR)
     assert secret not in json.dumps(body)
     assert secret in caplog.text  # the traceback goes to the log
+
+
+# ---------------------------------------------------------------------------
+# bbox edges: the poles and non-finite coordinates, on both bbox routes
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(params=["geohashing", "quadtiling"])
+def index_srv(request, small_lattice):
+    ctx = server.EngineContext(small_lattice(), geo_index=request.param,
+                               supported_precision=(6,), now_ms=NOW)
+    s = server.serve(ctx)
+    yield f"http://127.0.0.1:{s.server_address[1]}"
+    s.shutdown()
+    s.server_close()
+
+
+def _bbox_url(base, bbox):
+    return (f"{base}/api/airquality/m/aggregate/count/snapshot"
+            f"?ts={SMALL_TS_MS}&bbox={bbox}&res=min&gh_precision=6")
+
+
+@pytest.mark.parametrize("bbox", ["nan,-10.0,40.0,20.0", "60.0,-10.0,40.0,inf",
+                                  "60.0,-Infinity,40.0,20.0"])
+def test_non_finite_bbox_is_400(index_srv, bbox):
+    assert _get(_bbox_url(index_srv, bbox)) == (400, {
+        "errorMessage": "[getAirQualitySnapshot] You need to provide valid "
+                        "double values for the bounding box coordinates",
+        "errorCode": 400,
+    })
+
+
+def test_quad_bbox_to_the_south_pole_answers_200(small_lattice):
+    """South = -90 is past the last quad tile row: the cover stops at
+    the Mercator limit instead of failing."""
+    ctx = server.EngineContext(small_lattice(), geo_index="quadtiling",
+                               supported_precision=(6,), now_ms=NOW)
+    s = server.serve(ctx)
+    try:
+        n, w, _, e = SMALL_BBOXES["quad"]
+        code, body = _get(_bbox_url(f"http://127.0.0.1:{s.server_address[1]}",
+                                    f"{n},{w},-90.0,{e}"))
+    finally:
+        s.shutdown()
+        s.server_close()
+    assert code == 200
+    assert {d[0] for d in body["data"]} >= set(SMALL_CELLS["quad"])

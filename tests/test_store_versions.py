@@ -19,8 +19,7 @@ def _delta(spark, metric=None):
     readings = load_readings(spark, SF_DIR)
     if metric:
         readings = readings.filter(F.col("metric_id") == metric)
-    return view_lattice(readings, precisions=(6,), resolutions=("min",),
-                        persist=False)
+    return view_lattice(readings, precisions=(6,), resolutions=("min",))
 
 
 def test_default_policy_keeps_only_current(spark, tmp_path):

@@ -39,7 +39,6 @@ def test_stream_batch_equivalence(spark, tmp_path):
     )
     batch = view_lattice(
         readings, precisions=(6,), resolutions=("min", "hour", "day"),
-        persist=False,
     )
     assert _lattice_rows(streamed) == _lattice_rows(batch)
 
@@ -119,8 +118,7 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
     from explora_kafka_spark.plans.views import view_lattice
 
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False)
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, delta, batch_id=0) is True
     once = {(r.gh, str(r.ts)): r["count"] for r in store.read(spark).collect()}
@@ -160,8 +158,7 @@ def test_store_layout_write_is_row_adaptive(spark, tmp_path):
     import os
 
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False)
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, delta, batch_id=0)
     root = str(tmp_path / "store" / store.current_version())
@@ -200,7 +197,7 @@ def test_merge_readings_equals_delta_merge(spark, tmp_path):
     twopass = P.ParquetViewStore(str(tmp_path / "twopass"))
     for bid, b in enumerate((b0, b1)):
         assert twopass.merge(
-            spark, view_lattice(b, persist=False, **kw), batch_id=bid)
+            spark, view_lattice(b, **kw), batch_id=bid)
 
     assert _lattice_rows(fused.read(spark)) == _lattice_rows(
         twopass.read(spark))
@@ -237,8 +234,7 @@ def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
     hard-link (not rewrite) every other partition — per-batch cost
     proportional to the delta, not the store (the round-2 scale seam)."""
     readings = load_readings(spark, SF_DIR)
-    full = view_lattice(readings, precisions=(6,), resolutions=("min", "hour"),
-                        persist=False)
+    full = view_lattice(readings, precisions=(6,), resolutions=("min", "hour"))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, full, batch_id=0)
     before = _partition_inodes(store)
@@ -246,7 +242,7 @@ def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
 
     click_only = view_lattice(
         readings.filter(F.col("metric_id") == "click"),
-        precisions=(6,), resolutions=("min", "hour"), persist=False,
+        precisions=(6,), resolutions=("min", "hour"),
     )
     assert store.merge(spark, click_only, batch_id=1)
     after = _partition_inodes(store)
@@ -273,8 +269,7 @@ def test_untracked_merge_preserves_batch_guard(spark, tmp_path):
     """A merge without a batch_id (e.g. a manual backfill) must carry the
     last recorded batch id forward, keeping the replay guard armed."""
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False)
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, delta, batch_id=3)
     assert store.merge(spark, delta, batch_id=None)  # untracked merge
@@ -298,8 +293,7 @@ def test_wire_to_engine_composition(spark):
     engine = P.to_engine_columns(P.decode_readings(raw))
     engine = P.with_event_time(engine)
     engine = P.filter_metrics(engine, ["no2"])
-    lattice = view_lattice(engine, precisions=(6,), resolutions=("min",),
-                           persist=False)
+    lattice = view_lattice(engine, precisions=(6,), resolutions=("min",))
     got = lattice.collect()
     assert len(got) == 1
     r = got[0]
@@ -363,7 +357,7 @@ def test_compact_store_preserves_data_and_prunes(spark, tmp_path):
 
     readings = load_readings(spark, SF_DIR)
     delta = view_lattice(readings, precisions=(6,),
-                         resolutions=("min", "hour"), persist=False)
+                         resolutions=("min", "hour"))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     store.merge(spark, delta, batch_id=0)
     before = _lattice_rows(store.read(spark))
@@ -388,8 +382,7 @@ def test_merge_rejects_null_partition_keys(spark, tmp_path):
     (null == null is null), and double-count on read — merge must refuse
     it loudly instead."""
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False).withColumn(
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",)).withColumn(
         "metric_id",
         F.when(F.col("metric_id") == "click", F.lit(None)).otherwise(
             F.col("metric_id")
@@ -407,8 +400,7 @@ def test_merge_migrates_legacy_unpartitioned_store(spark, tmp_path):
     import os
 
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False)
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store_path = str(tmp_path / "store")
     # hand-build a legacy store: flat parquet version dir + pointer
     legacy_dir = os.path.join(store_path, "v_legacy")
@@ -440,15 +432,14 @@ def test_merge_escaped_partition_values_not_double_counted(spark, tmp_path):
     readings = load_readings(spark, SF_DIR).withColumn(
         "metric_id", F.concat(F.col("metric_id"), F.lit(":v1"))
     )
-    full = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                        persist=False)
+    full = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, full, batch_id=0)
     once = _lattice_rows(store.read(spark))
 
     delta = view_lattice(
         readings.filter(F.col("metric_id") == "click:v1"),
-        precisions=(6,), resolutions=("min",), persist=False,
+        precisions=(6,), resolutions=("min",),
     )
     assert store.merge(spark, delta, batch_id=1)
     merged = _lattice_rows(store.read(spark))
@@ -516,8 +507,7 @@ def test_uncommitted_version_is_invisible(spark, tmp_path):
     from explora_kafka_spark.plans.views import view_lattice
 
     readings = load_readings(spark, SF_DIR)
-    delta = view_lattice(readings, precisions=(6,), resolutions=("min",),
-                         persist=False)
+    delta = view_lattice(readings, precisions=(6,), resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, delta, batch_id=0) is True
     committed = store.current_version()
@@ -576,8 +566,7 @@ def test_expire_store_drops_old_months_links_survivors(spark, tmp_path):
     two = readings.filter(F.col("event_id") % 2 == 0).unionByName(
         readings.filter(F.col("event_id") % 2 == 1)
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 MONTH")))
-    lat = view_lattice(two, precisions=(6,), resolutions=("hour",),
-                       persist=False)
+    lat = view_lattice(two, precisions=(6,), resolutions=("hour",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, lat, batch_id=0)
     before = _partition_inodes(store)
@@ -596,7 +585,7 @@ def test_expire_store_drops_old_months_links_survivors(spark, tmp_path):
     # rows = exactly the shifted odd-event slice
     want = _lattice_rows(view_lattice(
         two.filter(F.month("ts") == 2), precisions=(6,),
-        resolutions=("hour",), persist=False))
+        resolutions=("hour",)))
     assert _lattice_rows(
         P.ParquetViewStore(str(tmp_path / "store")).read(spark)
         .withColumn("precision", F.col("precision"))
@@ -608,8 +597,7 @@ def test_expire_store_noop_on_future_free_store(spark, tmp_path):
     """A cutoff at/below every stored month expires nothing and leaves
     the data identical."""
     readings = load_readings(spark, SF_DIR)
-    lat = view_lattice(readings, precisions=(6,), resolutions=("hour",),
-                       persist=False)
+    lat = view_lattice(readings, precisions=(6,), resolutions=("hour",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, lat, batch_id=0)
     before = _lattice_rows(store.read(spark))
@@ -677,8 +665,7 @@ def test_expire_store_refuses_total_expiry(spark, tmp_path):
     import pytest as _pytest
 
     readings = load_readings(spark, SF_DIR)
-    lat = view_lattice(readings, precisions=(6,), resolutions=("hour",),
-                       persist=False)
+    lat = view_lattice(readings, precisions=(6,), resolutions=("hour",))
     store = P.ParquetViewStore(str(tmp_path / "store"))
     assert store.merge(spark, lat, batch_id=0)
     before = _lattice_rows(store.read(spark))
@@ -947,7 +934,7 @@ def test_vacuum_store_reclaims_crashed_version_only(spark, tmp_path):
 
     readings = load_readings(spark, SF_DIR)
     delta = view_lattice(readings, precisions=(6,),
-                         resolutions=("min",), persist=False)
+                         resolutions=("min",))
     store = P.ParquetViewStore(str(tmp_path / "store"), keep_versions=2)
     store.merge(spark, delta, batch_id=0)
     store.merge(spark, delta, batch_id=1)

@@ -43,7 +43,7 @@ def halves(spark):
 
 
 def _delta(batch):
-    return V.view_lattice(batch, persist=False, **LATTICE)
+    return V.view_lattice(batch, **LATTICE)
 
 
 def _legacy_store(path, lattice) -> P.ParquetViewStore:

@@ -39,8 +39,8 @@ def _duck(sf_dir):
 
 
 def test_lattice_equals_direct_groupby(readings, lattice):
-    """Every (precision, res) slice of the cascaded lattice must equal the
-    direct groupBy from raw readings — validates the rollup algebra (A2/A6)."""
+    """Every (precision, res) slice of the lattice must equal the direct
+    groupBy from raw readings — validates the fold algebra (A2/A6)."""
     for p in (6, 7):
         for res in ("min", "hour", "day", "month"):
             direct = (
@@ -62,6 +62,55 @@ def test_lattice_equals_direct_groupby(readings, lattice):
             d = {tuple(r[:3]): (r[3], round(r[4], 6)) for r in direct.collect()}
             s = {tuple(r[:3]): (r[3], round(r[4], 6)) for r in slice_.collect()}
             assert d == s, f"lattice mismatch at precision={p} res={res}"
+
+
+LATTICE_KEY = ("metric_id", "precision", "res", "gh", "ts")
+
+
+def test_build_views_equals_duckdb_groupby(sf_dir, readings, tmp_path):
+    """Every (precision, res) view `build_views` stores is a DuckDB
+    GROUP BY of the raw readings: the same keys, count/min/max exactly,
+    sum and avg to 1e-12 relative (the fold adds partials in another
+    order than one pass over the raw values)."""
+    path = str(tmp_path / "views")
+    V.build_views(readings, path, precisions=(7, 6))
+    con = _duck(sf_dir)
+    direct = " UNION ALL ".join(
+        f"SELECT metric_id, {p} AS precision, '{res}' AS res,"
+        f" substr(geohash, 1, {p}) AS gh, date_trunc('{unit}', ts) AS ts,"
+        " count(*) AS count, sum(value) AS sum, sum(value) / count(*) AS avg,"
+        " min(value) AS min, max(value) AS max FROM readings GROUP BY ALL"
+        for p in (7, 6)
+        for res, unit in (("min", "minute"), ("hour", "hour"),
+                          ("day", "day"), ("month", "month")))
+    key = ", ".join(LATTICE_KEY)
+    rows, bad_keys, bad_exact, bad_float = con.execute(f"""
+        WITH want AS ({direct}),
+             got AS (SELECT * FROM read_parquet('{path}/**/*.parquet',
+                                                hive_partitioning = true))
+        SELECT count(*),
+               count(*) FILTER (w.count IS NULL OR g.count IS NULL),
+               count(*) FILTER (w.count <> g.count OR w.min <> g.min
+                                OR w.max <> g.max),
+               count(*) FILTER (abs(w.sum - g.sum) > 1e-12 * abs(w.sum)
+                                OR abs(w.avg - g.avg) > 1e-12 * abs(w.avg))
+        FROM want w FULL OUTER JOIN got g USING ({key})""").fetchone()
+    assert rows > 0
+    assert (bad_keys, bad_exact, bad_float) == (0, 0, 0)
+
+
+def test_build_views_runs_few_jobs_and_persists_nothing(spark, readings, tmp_path):
+    """The build is two aggregations and a range-partitioned write: at
+    most five jobs, and no cached level is left behind."""
+    sc = spark.sparkContext
+    persisted = len(sc._jsc.getPersistentRDDs())
+    sc.setJobGroup("build_views_jobs", "build_views")
+    try:
+        V.build_views(readings, str(tmp_path / "views"), precisions=(7, 6))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup("build_views_jobs")) <= 5
+    assert len(sc._jsc.getPersistentRDDs()) == persisted
 
 
 def test_avg_is_sum_over_count(lattice):

@@ -1,8 +1,8 @@
 """Same-commit A/B probe for the bench build phases ONLY (VERDICT r11
 "What's wrong" #2: view_build +4.9 s r10→r11, suspected variance).
 
-Replicates bench.py's build-phase protocol exactly — warm-up, first
-pass, cache-clear, second pass, min-of-two — without the 240-query
+Runs bench.py's build-phase protocol (`bench.time_build_phases`: warm-up,
+first pass, cache-clear, second pass, min-of-two) without the 240-query
 tail, so repeated runs isolate the build-phase variance band. Run it
 twice (fresh process each) and compare:
 
@@ -14,60 +14,23 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as E  # noqa: E402
+import bench  # noqa: E402
 from explora_kafka_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
     spark = get_spark(app_name="explora-build-ab")
     spark.sparkContext.setLogLevel("ERROR")
-    warm = spark.createDataFrame(
-        [(i,) for i in range(256)], "i: long"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    warm.mapInPandas(lambda it: it, "i: long").count()
-
-    phases: dict[str, float] = {}
-
-    def _phase(name: str, thunk) -> None:
-        t0 = time.time()
-        thunk()
-        t = round(time.time() - t0, 3)
-        phases[name] = min(t, phases[name]) if name in phases else t
-
-    BUILD_PHASES = [
-        ("main_lattice", lambda: E._views(spark, SF_DIR)),
-        ("geo_quad_z6", lambda: E._geo_lattice(spark, SF_DIR, "quad", 6, 6)),
-        ("geo_geohash_p5",
-         lambda: E._geo_lattice(spark, SF_DIR, "geohash", 5, 3)),
-        ("geo_quad_z14",
-         lambda: E._geo_lattice(spark, SF_DIR, "quad", 14, 14)),
-        ("stream_store",
-         lambda: E.queries()["stream_view_hour"](spark, SF_DIR).count()),
-        ("windowed_sink",
-         lambda: E.queries()["windowed_base_view"](spark, SF_DIR).count()),
-    ]
-    for name, thunk in BUILD_PHASES:
-        _phase(name, thunk)
-    first_pass = dict(phases)
-    E._VIEWS.clear()
-    E._GEO_LATTICES.clear()
-    E._STREAMED.clear()
-    E._COMPACTED.clear()
-    E._WINDOWED.clear()
-    spark.catalog.clearCache()
-    for name, thunk in BUILD_PHASES:
-        _phase(name, thunk)
+    bench.warm_python_workers(spark)
+    phases, first_pass, _ = bench.time_build_phases(spark)
     print(json.dumps({
         "view_build": round(sum(phases.values()), 3),
         "build_phases": phases,
         "build_phases_first_pass": first_pass,
-        "sf": SF_DIR,
+        "sf": bench.SF_DIR,
     }))
 
 
