@@ -6,26 +6,27 @@ Topology (Spark-first re-expression of the Kafka Streams DAG):
       → JSON decode + dead-letter split                  S2
       → event-time extraction (embedded epoch-ms)        S4
       → metric whitelist filter                          P2
-      → foreachBatch:
-          delta lattice = groupBy(metric, cell, bucket)  A1/A6
+      → foreachBatch (ParquetViewStore.merge_readings):
+          cell partials = batch × lattice coordinates     A1/A6
           MERGE into the parquet view store (A2 algebra) S5
 
 Why foreachBatch-MERGE instead of update-mode stateful aggregation: the
 reference's KTable upserts have NO watermark — a record arriving a year
 late still updates its bucket (IngestStream.java:372-394; SURVEY §2.7).
 Spark's in-query streaming state requires a watermark to bound state,
-which would drop very-late data. Aggregating each micro-batch as a
-*delta* and merging it into the durable store with the count/sum merge
+which would drop very-late data. Folding each micro-batch's cell
+partials into the durable store with the count/sum merge
 algebra (util/Aggregator.java:19-32) reproduces the reference's
 infinitely-late-update semantics exactly, keeps streaming state at zero,
 and makes the store identical to the batch lattice — so stream and batch
 answers coincide (the equivalence test in tests/test_streaming.py).
 
-At scale: each micro-batch shuffles only its own delta (bounded by
-trigger size); the MERGE re-aggregates store ∪ delta grouped by the view
-key. For 100 TB stores, swap the parquet rewrite for a Delta/Iceberg
-MERGE INTO (same algebra, partition-pruned row-level merge) — the
-`ViewStore` interface below isolates that choice.
+At scale: each micro-batch shuffles only its own partials (bounded by
+trigger size); the MERGE re-aggregates the touched store partitions ∪
+the batch grouped by the view key. For 100 TB stores, swap the parquet
+rewrite for a Delta/Iceberg MERGE INTO (same algebra, partition-pruned
+row-level merge): `ParquetViewStore._fold_commit`, the one MERGE that
+both `merge` and `merge_readings` go through, isolates that choice.
 """
 
 from __future__ import annotations
@@ -192,8 +193,10 @@ def _touched_partitions(keys):
     and is built in one JVM call whatever the key count."""
     return literal_in([(f"({', '.join(STORE_PARTITION_COLS)})", list(keys))])
 
-_LATTICE_COLS = ("metric_id", "precision", "res", "gh", "ts",
-                 "count", "sum", "avg", "min", "max")
+
+#: cell-partial (lattice) schema the MERGE folds; `avg` is derived
+_PARTIAL_COLS = ("metric_id", "precision", "res", "gh", "ts",
+                 "count", "sum", "min", "max")
 
 
 def _with_ts_month(lattice: DataFrame) -> DataFrame:
@@ -205,15 +208,14 @@ def _with_ts_month(lattice: DataFrame) -> DataFrame:
 
 
 # Target rows per range-partitioned store-write task. A lattice row is
-# ~60-80 B on disk, so the default (4M rows) lands output files in the
-# 128-256 MB band the optimization guide (§6) wants; a deployment dials
-# it per row width. Deriving the writer count from the delta's rows
-# (ceil(rows / this)) instead of the session's fixed shuffle-partition
-# count means a micro-batch writes a few well-filled files per version
-# instead of shuffle.partitions near-empty ones, and a backfill scales
-# its writer count with its rows.
-_STORE_ROWS_PER_FILE = int(
-    os.environ.get("SPARK_GRAFT_STORE_ROWS_PER_FILE", "4000000"))
+# ~60-80 B on disk, so 4M rows land output files in the 128-256 MB band
+# the optimization guide (§6) wants; a wider row wants a smaller value.
+# Deriving the writer count from the batch's rows (ceil(rows / this))
+# instead of the session's fixed shuffle-partition count means a
+# micro-batch writes a few well-filled files per version instead of
+# shuffle.partitions near-empty ones, and a backfill scales its writer
+# count with its rows.
+_STORE_ROWS_PER_FILE = 4_000_000
 
 
 def _write_store_layout(lattice_with_tsm: DataFrame, dest: str,
@@ -242,6 +244,37 @@ def _write_store_layout(lattice_with_tsm: DataFrame, dest: str,
         .partitionBy(*STORE_PARTITION_COLS)
         .parquet(dest)
     )
+
+
+def _new_version_name() -> str:
+    """A fresh store version dir name; uuids are never reused, which is
+    what lets `vacuum_store` treat any uncommitted `v_*` dir as dead."""
+    return f"v_{uuid.uuid4().hex[:12]}"
+
+
+def _parquet_leaves(version_dir: str):
+    """Relative paths of the dirs under `version_dir` that hold parquet
+    files (the leaf partitions; "." for a legacy flat store), top-down."""
+    for root, _dirs, files in os.walk(version_dir):
+        if any(fn.endswith(".parquet") for fn in files):
+            yield os.path.relpath(root, version_dir)
+
+
+def _link_leaves(old_dir: str, new_dir: str, rels) -> None:
+    """Carry each leaf partition `rel` of `old_dir` into `new_dir` by
+    hard-linking its parquet files (copy fallback for filesystems
+    without links): O(#files) metadata ops, zero data copy."""
+    for rel in rels:
+        root, tgt = os.path.join(old_dir, rel), os.path.join(new_dir, rel)
+        os.makedirs(tgt, exist_ok=True)
+        for fn in os.listdir(root):
+            if not fn.endswith(".parquet"):
+                continue
+            src, dst = os.path.join(root, fn), os.path.join(tgt, fn)
+            try:
+                os.link(src, dst)
+            except OSError:
+                shutil.copy2(src, dst)
 
 
 class ParquetViewStore:
@@ -300,22 +333,24 @@ class ParquetViewStore:
         bid = int(parts[1]) if len(parts) > 1 and parts[1] else None
         return parts[0], bid
 
-    def _read_raw(self, spark: SparkSession) -> DataFrame | None:
-        """Current version including the ts_m partition column.
+    def _read_typed(self, spark: SparkSession, version: str) -> DataFrame:
+        """One version including the ts_m partition column.
 
         Partition-column values come back through Spark's type inference,
         which would turn a numeric-looking string metric_id ('123') into
         an int and silently change the store schema between writes — pin
         the partition columns back to their declared types."""
-        v = self.current_version()
-        if v is None:
-            return None
-        df = spark.read.parquet(os.path.join(self.path, v))
+        df = spark.read.parquet(os.path.join(self.path, version))
         for col, typ in (("metric_id", "string"), ("precision", "int"),
                          ("res", "string"), ("ts_m", "int")):
             if col in df.columns:
                 df = df.withColumn(col, F.col(col).cast(typ))
         return df
+
+    def _read_raw(self, spark: SparkSession) -> DataFrame | None:
+        """Current version including the ts_m partition column."""
+        v = self.current_version()
+        return None if v is None else self._read_typed(spark, v)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         df = self._read_raw(spark)
@@ -342,12 +377,7 @@ class ParquetViewStore:
         `VERSION AS OF` semantic. Raises if the version was GC'd."""
         if not os.path.isdir(os.path.join(self.path, version)):
             raise ValueError(f"version not retained: {version}")
-        df = spark.read.parquet(os.path.join(self.path, version))
-        for col, typ in (("metric_id", "string"), ("precision", "int"),
-                         ("res", "string"), ("ts_m", "int")):
-            if col in df.columns:
-                df = df.withColumn(col, F.col(col).cast(typ))
-        return df.drop("ts_m") if "ts_m" in df.columns else df
+        return self._read_typed(spark, version).drop("ts_m")
 
     def diff_versions(self, spark: SparkSession, v_old: str,
                       v_new: str) -> DataFrame:
@@ -396,27 +426,88 @@ class ParquetViewStore:
     @staticmethod
     def _link_untouched(old_dir: str, new_dir: str) -> None:
         """Hard-link every leaf partition dir of `old_dir` that the
-        merged write did NOT produce into `new_dir` (copy fallback for
-        filesystems without links). "Touched" is decided by what exists
-        under `new_dir` — comparing the partition paths Spark itself
-        wrote on both sides, so Spark's %-escaping of special characters
-        in partition values can never make a key miscompare (a str()-
-        built key set could: 'a:b' writes as 'a%3Ab')."""
-        for root, _dirs, files in os.walk(old_dir):
-            pq = [fn for fn in files if fn.endswith(".parquet")]
-            if not pq:
-                continue
-            rel = os.path.relpath(root, old_dir)
-            if os.path.isdir(os.path.join(new_dir, rel)):
-                continue
-            tgt = os.path.join(new_dir, rel)
-            os.makedirs(tgt, exist_ok=True)
-            for fn in pq:
-                src, dst = os.path.join(root, fn), os.path.join(tgt, fn)
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
+        merged write did NOT produce into `new_dir`. "Touched" is
+        decided by what exists under `new_dir` — comparing the partition
+        paths Spark itself wrote on both sides, so Spark's %-escaping of
+        special characters in partition values can never make a key
+        miscompare (a str()-built key set could: 'a:b' writes as
+        'a%3Ab')."""
+        _link_leaves(old_dir, new_dir, (
+            rel for rel in _parquet_leaves(old_dir)
+            if not os.path.isdir(os.path.join(new_dir, rel))))
+
+    def _fold_commit(self, spark: SparkSession, partials: DataFrame,
+                     touched, batch_id: int | None) -> bool:
+        """The store's one MERGE: fold cell `partials` (lattice schema,
+        `_PARTIAL_COLS`) into the store partitions they touch and commit
+        the result as a new version by atomic pointer swap.
+
+        `touched()` returns the `(metric_id, precision, res, ts_m)` keys
+        of the partials; it runs only once the replay guard has passed,
+        so a replayed batch runs no Spark job. Returns False, committing
+        nothing, when `batch_id` was already applied — the guard that
+        makes the non-idempotent count/sum merge exactly-once under
+        foreachBatch redelivery — or when the batch touches no key (an
+        empty commit would leave a version with no parquet files, which
+        no later read or merge can infer a schema from). An untracked
+        merge (batch_id=None) carries the last recorded batch id forward
+        so the guard survives it."""
+        last = self.last_batch_id()
+        if batch_id is not None and last is not None and batch_id <= last:
+            return False
+        keys = [tuple(k) for k in touched()]
+        if not keys:
+            return False
+        # null partition values are rejected up front: a null writes the
+        # __HIVE_DEFAULT_PARTITION__ dir, null == null is null so the
+        # pruning predicate would never match existing null-key rows,
+        # and the merge would silently double-count on read. Upstream
+        # with_event_time/decode already dead-letter these; failing
+        # loudly here guards direct callers.
+        for key in keys:
+            nulls = [c for c, v in zip(STORE_PARTITION_COLS, key) if v is None]
+            if nulls:
+                raise ValueError(
+                    f"batch has NULL partition key(s) {nulls}; "
+                    "route null-keyed records to a dead-letter sink "
+                    "before merging"
+                )
+        old_v = self.current_version()
+        new_v = _new_version_name()
+        new_dir = os.path.join(self.path, new_v)
+        linked = None
+        if old_v is None:
+            # the first version folds the batch too: a repeated key must
+            # not land as two rows of one cell (the view store's
+            # key-uniqueness invariant)
+            merged = aggregate_partials(partials)
+        else:
+            old_raw = self._read_typed(spark, old_v)
+            if "ts_m" not in old_raw.columns:
+                # legacy store written before the partitioned layout: the
+                # ts_m pruning filter would raise and _link_untouched
+                # would mislink flat files — migrate with one full
+                # rewrite; every later merge is incremental again
+                merged = incremental_update(old_raw, partials)
+            else:
+                # partition-pruned incremental path
+                merged = incremental_update(
+                    old_raw.filter(_touched_partitions(keys)).drop("ts_m"),
+                    partials)
+                linked = old_v
+        merged = _with_ts_month(merged).persist()
+        try:
+            # persist before the layout write: repartitionByRange's
+            # sampling pass would otherwise run the merge aggregation a
+            # second time per micro-batch
+            _write_store_layout(merged, new_dir, rows=merged.count())
+        finally:
+            merged.unpersist()
+        if linked is not None:
+            self._link_untouched(os.path.join(self.path, linked), new_dir)
+        self._commit(new_v, batch_id if batch_id is not None else last,
+                     old_v)
+        return True
 
     def merge(
         self,
@@ -424,77 +515,20 @@ class ParquetViewStore:
         delta_lattice: DataFrame,
         batch_id: int | None = None,
     ) -> bool:
-        """Partition-pruned MERGE of a delta; returns False (no-op) when
-        `batch_id` was already applied — the replay guard that makes the
-        non-idempotent count/sum merge exactly-once under foreachBatch
-        redelivery. An untracked merge (batch_id=None) carries the last
-        recorded batch id forward so the guard survives it."""
-        last = self.last_batch_id()
-        if batch_id is not None and last is not None and batch_id <= last:
-            return False
-        effective_bid = batch_id if batch_id is not None else last
-        # persist: the delta plan is executed twice below (distinct-keys
-        # collect + the merged write) — without this each micro-batch's
-        # full aggregation would run ~2×
-        delta = _with_ts_month(
-            delta_lattice.select(*[c for c in _LATTICE_COLS
-                                   if c in delta_lattice.columns])
-        ).persist()
+        """Partition-pruned MERGE of an aggregated delta lattice (the
+        `view_lattice` shape). Returns False, committing nothing, when
+        `batch_id` was already applied or the delta is empty; an
+        untracked merge (batch_id=None) keeps the last batch id."""
+        # persist (lazy: a replay still runs no job): the delta plan is
+        # executed twice — the distinct-keys collect and the merged
+        # write — and without this each batch's aggregation would run ~2×
+        delta = _with_ts_month(delta_lattice.select(*_PARTIAL_COLS)).persist()
         try:
-            # ---- partition-key preflight ----
-            # null partition values are rejected up front: a null writes
-            # the __HIVE_DEFAULT_PARTITION__ dir, null == null is null so
-            # the pruning predicate would never match existing null-key
-            # rows, and the merge would silently double-count on read.
-            # Upstream with_event_time/decode already dead-letter these;
-            # failing loudly here guards direct merge() callers.
-            key_rows = delta.select(*STORE_PARTITION_COLS).distinct().collect()
-            for r in key_rows:
-                nulls = [c for c in STORE_PARTITION_COLS if r[c] is None]
-                if nulls:
-                    raise ValueError(
-                        f"delta has NULL partition key(s) {nulls}; "
-                        "route null-keyed records to a dead-letter sink "
-                        "before merging"
-                    )
-            old_v = self.current_version()
-            new_v = f"v_{uuid.uuid4().hex[:12]}"
-            new_dir = os.path.join(self.path, new_v)
-            batch = delta.drop("ts_m")
-            old_v_linked = None
-            if old_v is None:
-                # the first version folds the delta too: a delta with a
-                # repeated key must not land as two rows of one cell
-                # (the view store's key-uniqueness invariant)
-                merged = aggregate_partials(batch)
-            else:
-                old_raw = self._read_raw(spark)
-                if "ts_m" not in old_raw.columns:
-                    # legacy store written before the partitioned layout:
-                    # the ts_m pruning filter would raise and
-                    # _link_untouched would mislink flat files — migrate
-                    # with one full rewrite; every later merge is
-                    # incremental again
-                    merged = incremental_update(old_raw, batch)
-                else:
-                    # ---- partition-pruned incremental path ----
-                    existing_touched = old_raw.filter(_touched_partitions(
-                        tuple(r) for r in key_rows)).drop("ts_m")
-                    merged = incremental_update(existing_touched, batch)
-                    old_v_linked = old_v
-            merged = _with_ts_month(merged).persist()
-            try:
-                # persist before the layout write: repartitionByRange's
-                # sampling pass would otherwise execute the whole merge
-                # aggregation a second time per micro-batch
-                _write_store_layout(merged, new_dir, rows=merged.count())
-            finally:
-                merged.unpersist()
-            if old_v_linked is not None:
-                self._link_untouched(
-                    os.path.join(self.path, old_v_linked), new_dir)
-            self._commit(new_v, effective_bid, old_v)
-            return True
+            return self._fold_commit(
+                spark, delta.drop("ts_m"),
+                lambda: delta.select(*STORE_PARTITION_COLS).distinct()
+                .collect(),
+                batch_id)
         finally:
             delta.unpersist()
 
@@ -517,76 +551,31 @@ class ParquetViewStore:
         (pinned by tests/test_streaming.py::
         test_merge_readings_equals_delta_merge).
 
-        The partition-key preflight gets cheaper for the same reason:
-        precision/res are compile-time lattice coordinates and ts_m is
+        The touched keys are cheaper for the same reason: precision/res
+        are compile-time lattice coordinates and ts_m is
         resolution-invariant (UTC date_trunc at min/hour/day/month grain
         never leaves the month), so the distinct runs over just
         (metric_id, yyyyMM(ts)) of the raw batch — a two-column
         column-pruned pass instead of executing the whole delta plan.
 
-        Same exactly-once contract as `merge`; callers guard empty
-        batches (foreachBatch already skips them)."""
-        last = self.last_batch_id()
-        if batch_id is not None and last is not None and batch_id <= last:
-            return False
-        effective_bid = batch_id if batch_id is not None else last
+        Same exactly-once and empty-batch contract as `merge`."""
         precisions, resolutions = lattice_axes(precisions, resolutions)
-        partials = lattice_partials(
-            readings, precisions=precisions, resolutions=resolutions)
-        # ---- partition-key preflight (see merge(): null keys would
-        # silently double-count on read) ----
-        batch_keys = (
-            readings.select(
-                "metric_id",
-                F.date_format("ts", "yyyyMM").cast("int").alias("ts_m"))
-            .distinct().collect()
-        )
-        if not batch_keys:
-            return False
-        for r in batch_keys:
-            nulls = [c for c in ("metric_id", "ts_m") if r[c] is None]
-            if nulls:
-                raise ValueError(
-                    f"batch has NULL partition key(s) {nulls}; "
-                    "route null-keyed records to a dead-letter sink "
-                    "before merging"
-                )
-        old_v = self.current_version()
-        new_v = f"v_{uuid.uuid4().hex[:12]}"
-        new_dir = os.path.join(self.path, new_v)
-        old_v_linked = None
-        if old_v is None:
-            merged = _with_ts_month(aggregate_partials(partials))
-        else:
-            old_raw = self._read_raw(spark)
-            if "ts_m" not in old_raw.columns:
-                # legacy flat store: one full migrating rewrite (see merge)
-                merged = _with_ts_month(
-                    incremental_update(old_raw, partials))
-                old_v_linked = None
-            else:
-                existing_touched = old_raw.filter(_touched_partitions(
-                    (r["metric_id"], p, res, r["ts_m"])
-                    for r in batch_keys
-                    for p in precisions
-                    for res in resolutions
-                )).drop("ts_m")
-                merged = _with_ts_month(
-                    incremental_update(existing_touched, partials))
-                old_v_linked = old_v
-        merged = merged.persist()
-        try:
-            # persist before the layout write: repartitionByRange's
-            # sampling pass would otherwise run the merge aggregation
-            # a second time per micro-batch
-            _write_store_layout(merged, new_dir, rows=merged.count())
-        finally:
-            merged.unpersist()
-        if old_v_linked is not None:
-            self._link_untouched(
-                os.path.join(self.path, old_v_linked), new_dir)
-        self._commit(new_v, effective_bid, old_v)
-        return True
+
+        def touched():
+            months = (
+                readings.select(
+                    "metric_id",
+                    F.date_format("ts", "yyyyMM").cast("int").alias("ts_m"))
+                .distinct().collect()
+            )
+            return [(r["metric_id"], p, res, r["ts_m"])
+                    for r in months for p in precisions for res in resolutions]
+
+        return self._fold_commit(
+            spark,
+            lattice_partials(readings, precisions=precisions,
+                             resolutions=resolutions),
+            touched, batch_id)
 
 
 def expire_store(store: ParquetViewStore, min_ts_m: int) -> int:
@@ -613,11 +602,7 @@ def expire_store(store: ParquetViewStore, min_ts_m: int) -> int:
     # a silent bricking
     keep: list[str] = []
     expired = 0
-    for root, _dirs, files in os.walk(old_dir):
-        pq = [fn for fn in files if fn.endswith(".parquet")]
-        if not pq:
-            continue
-        rel = os.path.relpath(root, old_dir)
+    for rel in _parquet_leaves(old_dir):
         months = [s for s in rel.split(os.sep) if s.startswith("ts_m=")]
         if months and int(months[0].split("=", 1)[1]) < min_ts_m:
             expired += 1
@@ -630,21 +615,10 @@ def expire_store(store: ParquetViewStore, min_ts_m: int) -> int:
             "it empty")
     if not expired:
         return 0
-    new_v = f"v_{uuid.uuid4().hex[:12]}"
+    new_v = _new_version_name()
     new_dir = os.path.join(store.path, new_v)
     os.makedirs(new_dir, exist_ok=True)
-    for rel in keep:
-        root = os.path.join(old_dir, rel)
-        tgt = os.path.join(new_dir, rel)
-        os.makedirs(tgt, exist_ok=True)
-        for fn in os.listdir(root):
-            if not fn.endswith(".parquet"):
-                continue
-            src, dst = os.path.join(root, fn), os.path.join(tgt, fn)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
+    _link_leaves(old_dir, new_dir, keep)
     store._commit(new_v, bid, old_v)
     return expired
 
@@ -658,7 +632,7 @@ def compact_store(spark: SparkSession, store: ParquetViewStore) -> None:
     current = store._read_raw(spark)
     if current is None:
         return
-    new_v = f"v_{uuid.uuid4().hex[:12]}"
+    new_v = _new_version_name()
     # count() over a bare parquet read touches only row-group metadata
     # (empty read schema) — cheap relative to the rewrite it sizes
     _write_store_layout(current, os.path.join(store.path, new_v),
@@ -716,10 +690,11 @@ def streaming_view_pipeline(
     resolutions=VIEW_RESOLUTIONS,
     metrics: list[str] | None = None,
 ):
-    """Assemble the ingestion query: per micro-batch, aggregate the batch
-    into a delta lattice and MERGE it into the store (A1 applied per
+    """Assemble the ingestion query: per micro-batch, fold the batch's
+    cell partials into the store with `merge_readings` (A1 applied per
     batch + A2 across batches — associativity makes the result identical
-    to one batch aggregation over all data).
+    to one batch aggregation over all data). An empty batch commits
+    nothing: `merge_readings` returns False for it.
 
     Returns the DataStreamWriter; call `.start()` /
     `.trigger(availableNow=True)` at the call site.
@@ -727,8 +702,6 @@ def streaming_view_pipeline(
     filtered = filter_metrics(readings_stream, metrics)
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         # fused MERGE: batch partials + store folded in ONE aggregation
         # (batch_id makes it exactly-once under replays)
         store.merge_readings(

@@ -393,6 +393,39 @@ def test_merge_rejects_null_partition_keys(spark, tmp_path):
         store.merge(spark, delta, batch_id=0)
 
 
+@pytest.mark.parametrize("writer", ["merge", "merge_readings"])
+def test_empty_batch_commits_nothing(spark, tmp_path, writer):
+    """An empty batch is a no-op on both MERGE paths. Into a fresh store
+    it must not commit a version without parquet files (no later read or
+    merge could infer its schema); into a populated store it must not
+    commit a relinked copy of the current version."""
+    import os
+
+    readings = load_readings(spark, SF_DIR)
+    empty = readings.limit(0)
+    kw = dict(precisions=(6,), resolutions=("min", "hour"))
+    store = P.ParquetViewStore(str(tmp_path / "store"))
+
+    def write(df, bid):
+        if writer == "merge":
+            return store.merge(spark, view_lattice(df, **kw), batch_id=bid)
+        return store.merge_readings(spark, df, batch_id=bid, **kw)
+
+    def versions():
+        return sorted(d for d in os.listdir(store.path) if d.startswith("v_"))
+
+    assert write(empty, 0) is False
+    assert store.current_version() is None and versions() == []
+
+    assert write(readings, 1) is True
+    v = store.current_version()
+    assert write(empty, 2) is False
+    assert store.current_version() == v and versions() == [v]
+    assert store.last_batch_id() == 1
+    assert _lattice_rows(store.read(spark)) == _lattice_rows(
+        view_lattice(readings, **kw))
+
+
 def test_merge_migrates_legacy_unpartitioned_store(spark, tmp_path):
     """ADVICE r3: a store written by the pre-partitioned layout (flat
     files, no ts_m) must be migrated by one full rewrite instead of
